@@ -9,6 +9,8 @@ oracles; scale notes inline per operator.
 
 from __future__ import annotations
 
+from typing import Optional
+
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -35,7 +37,7 @@ _SH13 = """
 """
 
 
-def _shingles13(toks: F.Column = None) -> F.Column:
+def _shingles13(toks: Optional[F.Column] = None) -> F.Column:
     """Distinct 13-token shingles; empty array below 13 tokens (guard
     needed because ``sequence(1, n)`` with n ≤ 0 runs descending).
 

@@ -22,7 +22,7 @@ embedding-cosine near-dup is q_sim_threshold in llm/similarity.py.
 from __future__ import annotations
 
 import pandas as pd
-
+import pyspark
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1183,6 +1183,7 @@ def q_dedup_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # oracle artifacts are unchanged there.
 _EVAL_EXACT_MAX = 10_000
 _EVAL_SAMPLE_HEX = ("0", "1", "2")
+_EVAL_TRUTH_TIMEOUT_S = 3600  # the exact-truth thread's join bound
 
 
 @register(
@@ -1300,8 +1301,6 @@ def q_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materializations — running truth's job concurrently back-fills
     # the cores the detector's small stages leave idle.  Same plans,
     # same checkpointed results, just concurrent scheduling.
-    import pyspark
-
     truth_box: list = []
 
     def _truth() -> None:
@@ -1318,52 +1317,61 @@ def q_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         target=_truth, session=spark
     )
     truth_thread.start()
-    sig = _portable_sig(spark, sh).localCheckpoint()
-    bands = sig.groupBy(
-        "doc_id", F.floor(F.col("j") / 2).alias("b")
-    ).agg(
-        (
+    try:
+        sig = _portable_sig(spark, sh).localCheckpoint()
+        bands = sig.groupBy(
+            "doc_id", F.floor(F.col("j") / 2).alias("b")
+        ).agg(
             (
-                F.max(F.when(F.col("j") % 2 == 0, F.col("mh")))
-                * _BAND_MIX
-                + F.max(F.when(F.col("j") % 2 == 1, F.col("mh")))
-            )
-            % _BAND_MOD
-        ).alias("bk")
-    )
-    b2 = bands.select(F.col("doc_id").alias("doc_b"), "b", "bk")
-    cand = (
-        bands.join(b2, ["b", "bk"])
-        .filter(F.col("doc_id") < F.col("doc_b"))
-        .select(F.col("doc_id").alias("doc_a"), "doc_b")
-        .distinct()
-    )
-    sa = sig.select(
-        F.col("doc_id").alias("doc_a"), "j", F.col("mh").alias("mha")
-    )
-    sb = sig.select(
-        F.col("doc_id").alias("doc_b"), "j", F.col("mh").alias("mhb")
-    )
-    detected = (
-        cand.join(sa, "doc_a")
-        .join(sb, ["doc_b", "j"])
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            F.sum(F.when(F.col("mha") == F.col("mhb"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("matches")
+                (
+                    F.max(F.when(F.col("j") % 2 == 0, F.col("mh")))
+                    * _BAND_MIX
+                    + F.max(F.when(F.col("j") % 2 == 1, F.col("mh")))
+                )
+                % _BAND_MOD
+            ).alias("bk")
         )
-        .filter(F.col("matches") >= 4)
-        .select("doc_a", "doc_b")
-        # Round-10 optimization: materialize both pair frames once —
-        # n_detected/n_truth and the TP intersection are SEPARATE
-        # actions, so the whole LSH pipeline and the exact-Jaccard
-        # inverted-index join each executed twice.  The checkpointed
-        # frames are pairs only (KBs).  Measured at sf0.1: 13.4 s →
-        # ~7 s, identical metrics row.
-        .localCheckpoint()
-    )
-    truth_thread.join()
+        b2 = bands.select(F.col("doc_id").alias("doc_b"), "b", "bk")
+        cand = (
+            bands.join(b2, ["b", "bk"])
+            .filter(F.col("doc_id") < F.col("doc_b"))
+            .select(F.col("doc_id").alias("doc_a"), "doc_b")
+            .distinct()
+        )
+        sa = sig.select(
+            F.col("doc_id").alias("doc_a"), "j", F.col("mh").alias("mha")
+        )
+        sb = sig.select(
+            F.col("doc_id").alias("doc_b"), "j", F.col("mh").alias("mhb")
+        )
+        detected = (
+            cand.join(sa, "doc_a")
+            .join(sb, ["doc_b", "j"])
+            .groupBy("doc_a", "doc_b")
+            .agg(
+                F.sum(F.when(F.col("mha") == F.col("mhb"), 1).otherwise(0))
+                .cast("bigint")
+                .alias("matches")
+            )
+            .filter(F.col("matches") >= 4)
+            .select("doc_a", "doc_b")
+            # Round-10 optimization: materialize both pair frames once —
+            # n_detected/n_truth and the TP intersection are SEPARATE
+            # actions, so the whole LSH pipeline and the exact-Jaccard
+            # inverted-index join each executed twice.  The checkpointed
+            # frames are pairs only (KBs).  Measured at sf0.1: 13.4 s →
+            # ~7 s, identical metrics row.
+            .localCheckpoint()
+        )
+    finally:
+        # never leave the truth job running past this call, even when
+        # the detector chain raised
+        truth_thread.join(_EVAL_TRUTH_TIMEOUT_S)
+    if not truth_box:
+        raise RuntimeError(
+            "q_dedup_eval: the exact-truth job did not finish within "
+            f"{_EVAL_TRUTH_TIMEOUT_S} s"
+        )
     if isinstance(truth_box[0], BaseException):
         raise truth_box[0]
     truth = truth_box[0]
@@ -1858,7 +1866,9 @@ def q_dedup_simhash_portable(
             f"(CASE WHEN v{b} > 0 THEN {1 << (b - lo)} ELSE 0 END)"
             for b in range(lo, lo + 32)
         )
-        return f"CAST({terms} AS BIGINT)"
+        # a BIGINT first term makes every addition 64-bit, whatever
+        # the order of the INT-typed terms
+        return f"(CAST(0 AS BIGINT) + {terms})"
 
     sig = votes.selectExpr(
         "doc_id", half_sql(0) + " AS slo", half_sql(32) + " AS shi"

@@ -131,13 +131,16 @@ def q_agg_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: HLL state is a fixed few KB per group vs the unbounded
     hash-set of an exact distinct — this IS the 100 TB path.
 
-    Mixing COUNT(DISTINCT) with another aggregate plans an Expand
-    that duplicates every input row per aggregate group; instead the
-    pairs are deduplicated first (map-side combine) and both counts
-    run over the distinct pairs — HLL registers are insensitive to
-    duplicates, so ``approx_parts`` is bit-identical, and
-    ``count(l_partkey)`` over distinct (flag, partkey) IS the exact
-    distinct count (measured 1.41 → 0.55 s at sf0.1).
+    Mixing COUNT(DISTINCT) with the HLL aggregate plans a double
+    HashAggregate — first keyed by (flag, partkey), then by flag —
+    whose rows are 412 columns wide (the 410-word HLL++ buffer at
+    rsd 0.02) at every level, one such row per distinct pair;
+    instead the pairs are deduplicated first (map-side combine, no
+    sketch buffer) and both counts run over the distinct pairs — HLL
+    registers are insensitive to duplicates, so ``approx_parts`` is
+    bit-identical, and ``count(l_partkey)`` over distinct (flag,
+    partkey) IS the exact distinct count (measured 1.41 → 0.55 s at
+    sf0.1).
     """
     li = table(spark, sf_dir, "lineitem")
     pairs = li.select("l_returnflag", "l_partkey").distinct()

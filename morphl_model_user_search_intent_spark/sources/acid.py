@@ -1273,35 +1273,22 @@ def read_table(
     a key deleted from one file and re-inserted by a later append (a
     NEW file) survives.  The DV set is small between compactions by
     construction (it is the un-folded delete backlog), so the join's
-    build side broadcasts."""
+    build side broadcasts.
+
+    Building the frame launches NO Spark job: the scan's schema is
+    PINNED from one footer on the driver (:func:`_read_parquet`).
+    Spark's parquet writer stores the exact Catalyst schema in every
+    footer, and Spark's own non-merging inference returns exactly
+    that JSON from the first file — but pays a one-task job for it.
+    Two cases fall back to that inference: files without the key (not
+    written by Spark), and heterogeneous column-mapped tables, which
+    read with ``mergeSchema`` (a re-added column's physical is absent
+    from older files; homogeneous maps read plain, since mergeSchema
+    reads EVERY footer at planning — a real cost at 10^5 files)."""
     m = read_manifest(root, version)
     cm = m.get("colmap")
     files = resolve_files(m, _filter_to_physical(cm, partition_filter))
-    reader = spark.read
-    if cm and cm.get("mixed", True):
-        # schema union ONLY for heterogeneous mapped tables (a
-        # re-added column's physical is absent from older files);
-        # homogeneous maps (renames/drops) read plain — mergeSchema
-        # reads EVERY footer at planning, a real cost at 10^5 files
-        reader = reader.option("mergeSchema", "true")
-    if not files:
-        base = reader.parquet(*m["files"]).limit(0)
-    else:
-        base = reader.parquet(*files)
-    dvf = m.get("dv_files")
-    if dvf and files:
-        key = m["dv_key"]
-        dv = spark.read.parquet(*dvf).select("_file", key)
-        base = (
-            base.withColumn(
-                "_file",
-                F.element_at(
-                    F.split(F.col("_metadata.file_path"), "/"), -1
-                ),
-            )
-            .join(dv, ["_file", key], "anti")
-            .drop("_file")
-        )
+    base = _scan(spark, m, files)
     # physical → logical projection (renames applied, dropped columns
     # hidden); the DV mask above joined on the PHYSICAL key, which is
     # what the sidecars store — rename-stable by construction
@@ -1516,14 +1503,70 @@ def _live_dv(
     return out, m.get("dv_key"), created
 
 
-def _apply_dv(spark: SparkSession, m: dict, base: DataFrame) -> DataFrame:
-    """Apply a manifest's deletion-vector mask to a base frame that
-    already carries a ``_file`` basename column (no-op without DVs)."""
-    dvf = m.get("dv_files")
-    if not dvf:
-        return base
-    dv = spark.read.parquet(*dvf).select("_file", m["dv_key"])
-    return base.join(dv, ["_file", m["dv_key"]], "anti")
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _read_parquet(
+    spark: SparkSession, files: list[str], merge: bool = False
+) -> DataFrame:
+    """``spark.read.parquet(*files)`` without the schema-inference job.
+    Non-merging inference reads the lexicographically first file's
+    footer and returns the Catalyst schema Spark's writer stored there
+    — one Spark job per read.  Reading that footer here (pyarrow, well
+    under a millisecond) and passing the schema gives the same frame
+    with no job.  Files without the key, and ``merge`` (or a session
+    that merges by default), keep Spark's inference."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    reader = spark.read
+    if merge or spark.conf.get(
+        "spark.sql.parquet.mergeSchema", "false"
+    ).lower() == "true":
+        return reader.option("mergeSchema", "true").parquet(*files)
+    raw = (pq.read_metadata(min(files)).metadata or {}).get(
+        _SPARK_SCHEMA_KEY
+    )
+    if raw is not None:
+        reader = reader.schema(StructType.fromJson(json.loads(raw)))
+    return reader.parquet(*files)
+
+
+def _scan(
+    spark: SparkSession, m: dict, files: list[str], rewrite: bool = False
+) -> DataFrame:
+    """THE snapshot read: ``files`` (a pruned subset of manifest ``m``'s
+    files) read through the manifest's deletion-vector mask — one anti
+    join on (file basename, key) against the DV sidecar rows, per-file
+    so a key deleted from one file and re-inserted by a later append
+    (a NEW file) survives.  No files yields an empty frame of the
+    snapshot's schema.
+
+    Reads of heterogeneous column-mapped tables merge schemas;
+    ``rewrite`` gives the frame the copy-on-write and deletion-vector
+    writers plan with instead: the plain first-footer schema plus the
+    ``_file`` basename column that names each row's file.  Every
+    non-merging read is schema-pinned (:func:`_read_parquet`), so
+    building the frame launches no job."""
+    cm = m.get("colmap")
+    merge = not rewrite and bool(cm and cm.get("mixed", True))
+    # the empty frame's merged schema needs every footer; a plain one
+    # is the first file's
+    base = _read_parquet(
+        spark, files or (m["files"] if merge else [min(m["files"])]), merge
+    )
+    dvf = m.get("dv_files") if files else None
+    if rewrite or dvf:
+        base = base.withColumn("_file", _file_col())
+    if not files:
+        return base.limit(0)
+    if dvf:
+        key = m["dv_key"]
+        dv = _read_parquet(spark, dvf).select("_file", key)
+        base = base.join(dv, ["_file", key], "anti")
+        if not rewrite:
+            base = base.drop("_file")
+    return base
 
 
 def _file_col() -> Column:
@@ -1593,13 +1636,7 @@ def delete_from_table(
         scan_files = resolve_files(m, pf_phys)
         if not scan_files:
             return m["version"]  # nothing in scope: no-op
-        base = _apply_dv(
-            spark,
-            m,
-            spark.read.parquet(*scan_files).withColumn(
-                "_file", _file_col()
-            ),
-        )
+        base = _scan(spark, m, scan_files, rewrite=True)
         if pf_phys:
             # RESIDUAL row predicate (round-9 review fix): pruning is
             # conservative — a pre-evolution file with no recorded
@@ -1748,15 +1785,9 @@ def merge_table(
         # and a silent mismatch would keep every touched file in
         # `kept` — duplicating all matched rows.  Basenames are
         # uuid-unique by construction (_write_files).
-        base = _apply_dv(
-            spark,
-            m,
-            spark.read.parquet(*m["files"]).withColumn(
-                "_file", _file_col()
-            ),
-        )
+        base = _scan(spark, m, m["files"], rewrite=True)
         by_base = {os.path.basename(f): f for f in m["files"]}
-        keys = source.select(on).distinct()
+        keys = source.select(on)  # feeds semi/anti joins only
         touched = [
             r[0]
             for r in base.join(keys, on, "semi")
@@ -2603,6 +2634,9 @@ def table_changes(
     removed = sorted(f1 - f2)
     added = sorted(f2 - f1)
     cm = m2.get("colmap")
+    # heterogeneous mapped table: a re-added column's physical may be
+    # absent from older files
+    merge = bool(cm and cm.get("mixed", True))
     if cm is not None:
         # diff in PHYSICAL space (the raw file reads below), project
         # the feed to this version's logical schema at the end
@@ -2627,7 +2661,7 @@ def table_changes(
     dv_feed = None
     if dv_added:
         dv_key = m2["dv_key"]
-        tomb = spark.read.parquet(*dv_added).select("_file", dv_key)
+        tomb = _read_parquet(spark, dv_added).select("_file", dv_key)
         touched = sorted(
             {
                 f
@@ -2637,12 +2671,7 @@ def table_changes(
             }
         )
         if touched:
-            _rdr = spark.read
-            if cm and cm.get("mixed", True):
-                # heterogeneous mapped table: a re-added column's
-                # physical may be absent from older touched files
-                _rdr = _rdr.option("mergeSchema", "true")
-            pre = _rdr.parquet(*touched).withColumn(
+            pre = _read_parquet(spark, touched, merge).withColumn(
                 "_file", _file_col()
             )
             for c in cols:  # absent re-added physicals read NULL
@@ -2655,14 +2684,9 @@ def table_changes(
             )
 
     def _side(files: list[str], prefix: str) -> DataFrame:
-        reader = spark.read
-        if cm and cm.get("mixed", True):
-            reader = reader.option("mergeSchema", "true")
-        base = (
-            reader.parquet(*files)
-            if files
-            else reader.parquet(*m2["files"]).limit(0)
-        )
+        base = _read_parquet(spark, files or m2["files"], merge)
+        if not files:
+            base = base.limit(0)
         # a re-added physical column may be absent from EVERY file on
         # one side (mergeSchema unions only the files actually read)
         # — those rows' value for it is NULL by definition
@@ -2911,7 +2935,7 @@ def read_changes(
     cf = m.get("change_files")
     if not cf:
         return table_changes(spark, root, version, key)
-    feed = spark.read.parquet(*cf)
+    feed = _read_parquet(spark, cf)
     cm = m.get("colmap")
     if cm is not None:
         # CDC files store physical names; serve the version's logical
@@ -3648,10 +3672,8 @@ def q_table_add_column(spark: SparkSession, sf_dir: str) -> DataFrame:
         with open(ready, "w") as fh:
             fh.write(note)
     m = read_manifest(root)
-    return (
-        spark.read.option("mergeSchema", "true")
-        .parquet(*m["files"])
-        .select("o_orderkey", "price", "channel")
+    return _read_parquet(spark, m["files"], merge=True).select(
+        "o_orderkey", "price", "channel"
     )
 
 
@@ -3863,15 +3885,9 @@ def merge_table_partitioned(
                 in src_parts
             ]
         by_base = {os.path.basename(f): f for f in cand}
-        keys = source.select(on).distinct()
+        keys = source.select(on)  # feeds semi/anti joins only
         if cand:
-            base = _apply_dv(
-                spark,
-                m,
-                spark.read.parquet(*cand).withColumn(
-                    "_file", _file_col()
-                ),
-            )
+            base = _scan(spark, m, cand, rewrite=True)
             touched = [
                 r[0]
                 for r in base.join(keys, on, "semi")
@@ -4047,13 +4063,7 @@ def optimize_table_partitioned(
         # inert with the old basenames); unselected files' entries
         # carry forward and keep masking
         snap = (
-            _apply_dv(
-                spark,
-                m,
-                spark.read.parquet(*sel).withColumn(
-                    "_file", _file_col()
-                ),
-            )
+            _scan(spark, m, sel, rewrite=True)
             .drop("_file")
             .coalesce(target_files)
         )
@@ -4525,11 +4535,7 @@ def scan_table_multi(
                 break
         if ok:
             keep.append(f)
-    base = (
-        spark.read.parquet(*keep)
-        if keep
-        else read_table(spark, root, version).limit(0)
-    )
+    base = _scan(spark, m, keep)
     for c, (lo, hi) in ranges.items():
         base = base.filter(F.col(c).between(lo, hi))
     return base
@@ -4688,22 +4694,7 @@ def scan(
             if ok:
                 kept.append(f)
         files = kept
-    reader = spark.read
-    if cm and cm.get("mixed", True):
-        reader = reader.option("mergeSchema", "true")
-    if not files:
-        base = reader.parquet(*m["files"]).limit(0)
-    else:
-        base = reader.parquet(*files)
-        dvf = m.get("dv_files")
-        if dvf:
-            key = m["dv_key"]
-            dv = spark.read.parquet(*dvf).select("_file", key)
-            base = (
-                base.withColumn("_file", _file_col())
-                .join(dv, ["_file", key], "anti")
-                .drop("_file")
-            )
+    base = _scan(spark, m, files)
     # residuals below were already translated to PHYSICAL names and
     # the frame is physical here; project to logical at the end.
     # A HIDDEN partition name's residual evaluates its TRANSFORM over
@@ -5480,11 +5471,7 @@ def optimize_table_zorder_partitioned(
             ]
         if not sel:
             return m["version"]
-        snap = _apply_dv(
-            spark,
-            m,
-            spark.read.parquet(*sel).withColumn("_file", _file_col()),
-        ).drop("_file")
+        snap = _scan(spark, m, sel, rewrite=True).drop("_file")
         c1, c2 = (F.col(c) for c in cols[:2])
         lo1, hi1, lo2, hi2 = snap.agg(
             F.min(c1), F.max(c1), F.min(c2), F.max(c2)
@@ -6042,13 +6029,7 @@ def update_table(
             )
         _enforce_schema(spark, root, upd_l, allow_evolution=False)
         ups = _select_physical(cm, upd_l)
-        base = _apply_dv(
-            spark,
-            m,
-            spark.read.parquet(*m["files"]).withColumn(
-                "_file", _file_col()
-            ),
-        )
+        base = _scan(spark, m, m["files"], rewrite=True)
         if ident is not None:
             # row-tracking update-stability on the MoR path too: the
             # post-image keeps the replaced row's id, joined from the
@@ -6057,15 +6038,13 @@ def update_table(
             ups = ups.join(
                 base.select(on_p, ident["col"]), on_p, "left"
             )
-        keys = ups.select(on_p).distinct()
+        keys = ups.select(on_p)  # feeds semi joins only
         # tombstones for every CURRENT row of a matched key
         dv_rows = base.join(keys, on_p, "semi").select("_file", on_p)
         # post-images: only MATCHED updates land (SQL UPDATE) — and
         # only those are constraint-validated (review fix: an invalid
         # UNMATCHED row never writes, so it must not abort the batch)
-        matched = ups.join(
-            base.select(on_p).distinct(), on_p, "semi"
-        )
+        matched = ups.join(base.select(on_p), on_p, "semi")
         _validate_constraints(matched, root)
         new_dv = _write_files(dv_rows, root, subdir="dv")
         new_files = _write_files(matched, root)
@@ -7694,7 +7673,7 @@ def build_bloom_index(
         )
 
     rows = (
-        spark.read.parquet(*m0["files"])
+        _read_parquet(spark, m0["files"])
         .withColumn("_file", _file_col())
         .select("_file", col_p)
         .groupBy("_file")
@@ -7766,7 +7745,7 @@ def lookup_table(
                 )
 
         verdicts = (
-            spark.read.parquet(*bl["files"])
+            _read_parquet(spark, bl["files"])
             .mapInPandas(_test, "file string, hit boolean")
             .collect()  # bounded: one verdict row per indexed FILE
         )
@@ -7778,20 +7757,7 @@ def lookup_table(
             if os.path.basename(f) in survivors
             or os.path.basename(f) not in covered  # uncovered: keep
         ]
-    if not files:
-        base = spark.read.parquet(*m["files"]).limit(0)
-    else:
-        base = spark.read.parquet(*files)
-        dvf = m.get("dv_files")
-        if dvf:
-            key = m["dv_key"]
-            dv = spark.read.parquet(*dvf).select("_file", key)
-            base = (
-                base.withColumn("_file", _file_col())
-                .join(dv, ["_file", key], "anti")
-                .drop("_file")
-            )
-    base = _select_logical(cm, base)
+    base = _select_logical(cm, _scan(spark, m, files))
     ident = (m.get("schema_meta") or {}).get("identity")
     if ident and ident.get("hidden") and ident["col"] in base.columns:
         base = base.drop(ident["col"])

@@ -1686,6 +1686,11 @@ def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         verified.write.mode("append").parquet(pairs_dir)
         sig.write.mode("append").parquet(sig_store)
         bands.write.mode("append").parquet(band_store)
+        # per-batch state must not accumulate: free this batch's
+        # checkpoint blocks (DataFrame.unpersist cannot — they belong
+        # to the RDD under the checkpoint's LogicalRDD)
+        for ckpt in (cand, sig):
+            ckpt._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
     s = (
         spark.readStream.schema(schema)

@@ -15,6 +15,9 @@ import duckdb
 import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+# the suite's data is small; session.py's 16g default heap can outgrow
+# a small host's RAM and get the JVM OOM-killed mid-suite
+os.environ.setdefault("SPARK_DRIVER_MEM", "6g")
 
 from morphl_model_user_search_intent_spark import get_spark  # noqa: E402
 from morphl_model_user_search_intent_spark.io import TABLES  # noqa: E402

@@ -4848,3 +4848,204 @@ def test_bloom_index_skips_files_and_never_loses_rows(
     sidecars = read_manifest(root)["bloom"]["files"]
     vacuum(root, keep_last=1)
     assert all(_os.path.exists(f) for f in sidecars)
+
+
+def _pin_matches_inference(spark, root):
+    """Every data and deletion-vector dir under ``root``: the schema
+    pinned from the first footer equals Spark's own inference over the
+    same files.  Returns the dirs checked."""
+    from morphl_model_user_search_intent_spark.sources.acid import (
+        _read_parquet,
+    )
+
+    checked = []
+    for sub in ("data", "dv"):
+        d = os.path.join(root, sub)
+        if not os.path.isdir(d):
+            continue
+        # reversed: the pin must pick Spark's (sorted) first file
+        files = sorted(
+            (
+                os.path.join(d, f) for f in os.listdir(d)
+                if f.endswith(".parquet")
+            ),
+            reverse=True,
+        )
+        assert (
+            _read_parquet(spark, files).schema
+            == spark.read.parquet(*files).schema
+        ), f"{root}/{sub}"
+        checked.append(sub)
+    return checked
+
+
+def test_pinned_schema_equals_inference_on_every_table_shape(
+    spark, tmp_path
+):
+    """The footer-pinned scan schema is Spark's inferred one on every
+    table shape the layer writes: plain, partitioned, column-mapped
+    (homogeneous rename and heterogeneous drop + re-add), identity /
+    row-tracked, deletion-vector sidecars, and sidecars rewritten
+    driver-side by pyarrow (which must keep Spark's footer key)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pyspark.sql.functions as F
+
+    from morphl_model_user_search_intent_spark.sources.acid import (
+        _SPARK_SCHEMA_KEY,
+        append_table,
+        create_table_partitioned,
+        delete_from_table,
+        drop_column,
+        optimize_table_partitioned,
+        rename_column,
+    )
+
+    base = _base(spark).limit(300)
+    plain = str(tmp_path / "plain")
+    create_table(spark, plain, base.repartition(3))
+    merge_table(spark, plain, _merge_source(spark, SF_DIR), "o_orderkey")
+    assert _pin_matches_inference(spark, plain) == ["data"]
+
+    mapped = str(tmp_path / "mapped")
+    create_table(spark, mapped, base.repartition(2))
+    rename_column(spark, mapped, "price", "amount")
+    drop_column(spark, mapped, "o_orderpriority")
+    append_table(
+        spark,
+        mapped,
+        base.limit(20).select(
+            (F.col("o_orderkey") + 5_000_000).alias("o_orderkey"),
+            F.col("price").alias("amount"),
+            F.lit("NEW").alias("o_orderpriority"),
+        ),
+        allow_evolution=True,
+    )
+    assert read_manifest(mapped)["colmap"]["mixed"] is True
+    assert _pin_matches_inference(spark, mapped) == ["data"]
+
+    tracked = str(tmp_path / "tracked")
+    create_table(
+        spark,
+        tracked,
+        base.repartition(2),
+        schema_meta={
+            "identity": {
+                "col": "_row_id",
+                "order": ["o_orderkey"],
+                "buckets": 64,
+                "high": 0,
+                "hidden": True,
+            }
+        },
+    )
+    assert "_row_id" in spark.read.parquet(
+        *read_manifest(tracked)["files"]
+    ).columns
+    assert _pin_matches_inference(spark, tracked) == ["data"]
+
+    part = str(tmp_path / "part")
+    pbase = _pbase(spark).filter(F.col("o_year").isin(1995, 1996))
+    create_table_partitioned(
+        spark, part, pbase.repartition(2, "o_orderkey"), ["o_year"]
+    )
+    # a shuffled (not broadcast) match mixes both years' files in one
+    # sidecar, so the partial optimize below must rewrite it
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        delete_from_table(
+            spark,
+            part,
+            pbase.filter(F.col("o_orderkey") % 10 == 3).select(
+                "o_orderkey"
+            ),
+            on="o_orderkey",
+        )
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    sidecars = set(read_manifest(part)["dv_files"])
+    # partial optimize: the 1996 survivors of a mixed sidecar are
+    # rewritten driver-side by pyarrow into a new sidecar
+    optimize_table_partitioned(spark, part, {"o_year": 1995})
+    rewritten = set(read_manifest(part)["dv_files"]) - sidecars
+    assert rewritten
+    for f in rewritten:
+        assert _SPARK_SCHEMA_KEY in pq.read_metadata(f).metadata
+    assert _pin_matches_inference(spark, part) == ["data", "dv"]
+
+    # files not written by Spark carry no key: plain inference
+    foreign = str(tmp_path / "foreign")
+    os.makedirs(os.path.join(foreign, "data"))
+    pq.write_table(
+        pa.table({"k": [1, 2], "s": ["a", None]}),
+        os.path.join(foreign, "data", "f.parquet"),
+    )
+    assert _pin_matches_inference(spark, foreign) == ["data"]
+
+
+def _jobs_during(spark, fn):
+    """(fn(), ids of the Spark jobs fn launched on this thread)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_snapshot_reads_launch_no_job_and_writes_stay_capped(
+    spark, tmp_path
+):
+    """Building a snapshot read — DV mask included — and enforcing an
+    append's schema against it are plan-only: zero Spark jobs.  One
+    DV delete and one merge on a DV-carrying table stay under pinned
+    job ceilings (schema inference would add one job per scanned file
+    set; a ``distinct`` on the merge keys, one per action)."""
+    import pyspark.sql.functions as F
+
+    from morphl_model_user_search_intent_spark.sources.acid import (
+        _enforce_schema,
+        delete_from_table,
+    )
+
+    root = str(tmp_path / "t")
+    base = _base(spark)
+    create_table(spark, root, base.repartitionByRange(4, "o_orderkey"))
+    delete_from_table(
+        spark,
+        root,
+        base.filter(F.col("o_orderkey") % 7 == 0).select("o_orderkey"),
+        on="o_orderkey",
+    )
+    assert read_manifest(root).get("dv_files")
+
+    df, jobs = _jobs_during(spark, lambda: read_table(spark, root))
+    assert jobs == [], f"read_table built with jobs {jobs}"
+    _, jobs = _jobs_during(
+        spark, lambda: _enforce_schema(spark, root, df, False)
+    )
+    assert jobs == [], f"_enforce_schema ran jobs {jobs}"
+
+    doomed = base.filter(F.col("o_orderkey") % 11 == 0).select(
+        "o_orderkey"
+    )
+    _, jobs = _jobs_during(
+        spark,
+        lambda: delete_from_table(spark, root, doomed, on="o_orderkey"),
+    )
+    # the tombstone write (+ its broadcasts); 5 with inference
+    assert len(jobs) <= 3, f"delete ran {len(jobs)} jobs"
+    _, jobs = _jobs_during(
+        spark,
+        lambda: merge_table(
+            spark, root, _merge_source(spark, SF_DIR), "o_orderkey"
+        ),
+    )
+    # touched-file collect + rewrite (+ broadcasts); 11 before
+    assert len(jobs) <= 7, f"merge ran {len(jobs)} jobs"

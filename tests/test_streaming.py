@@ -421,7 +421,16 @@ def test_stream_neardup_matches_batch_minhash(spark):
     the second copy, never retroactively re-emitted)."""
     from collections import Counter
 
+    jsc = spark.sparkContext._jsc.sc()
+
+    def pinned() -> int:  # RDDs holding cached blocks, per the UI store
+        jsc.listenerBus().waitUntilEmpty()
+        return jsc.statusStore().rddList(True).size()
+
+    before = pinned()
     rows = REGISTRY["q_stream_neardup"].fn(spark, SF_DIR).collect()
+    # per-batch checkpoints are freed; only the returned pair set stays
+    assert pinned() - before <= 1, "per-batch checkpoints leaked"
     batch = REGISTRY["q_dedup_minhash_portable"].fn(spark, SF_DIR).collect()
     s_pairs = Counter((r.doc_a, r.doc_b) for r in rows)
     b_pairs = {(r.doc_a, r.doc_b) for r in batch}

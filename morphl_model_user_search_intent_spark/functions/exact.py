@@ -91,8 +91,7 @@ def units_nn(col: Column | str, scale: int) -> Column:
     ``Math.floor`` (measured on B1 at sf0.1: 0.47 s vs 0.68 s warm
     collect).  PRECONDITION: x ≥ 0 — for negatives floor(x+0.5) is
     round-half-UP while round() is half-away-from-zero; use
-    :func:`units` for signed columns (acctbal).  Oracle twin:
-    :func:`SQL_UNITS_NN`.
+    :func:`units` for signed columns (acctbal).
     """
     c = F.col(col) if isinstance(col, str) else col
     inner = c * scale if scale != 1 else c
@@ -105,13 +104,6 @@ def SQL_UNITS(expr: str, scale: int) -> str:
     return f"CAST(round({inner}) AS BIGINT)"
 
 
-def SQL_UNITS_NN(expr: str, scale: int) -> str:
-    """DuckDB-side twin of :func:`units_nn` (identical floor form, so
-    both engines quantize the same doubles to the same longs)."""
-    inner = f"({expr}) * {scale}" if scale != 1 else f"({expr})"
-    return f"CAST(floor({inner} + 0.5) AS BIGINT)"
-
-
 def SQL_LSUM(units_expr: str, divisor: int) -> str:
     """DuckDB-side twin of :func:`lsum`."""
     return f"(SUM({units_expr}) / {divisor}.0)"
@@ -120,8 +112,3 @@ def SQL_LSUM(units_expr: str, divisor: int) -> str:
 def SQL_DSUM(expr: str) -> str:
     """DuckDB-side twin of :func:`dsum` for building oracle strings."""
     return f"CAST(SUM(CAST({expr} AS DECIMAL(27,6))) AS DOUBLE)"
-
-
-def SQL_DAVG(expr: str) -> str:
-    """DuckDB-side twin of :func:`davg`."""
-    return f"{SQL_DSUM(expr)} / COUNT({expr})"

@@ -114,6 +114,24 @@ def _labeled_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# L-BFGS relative-tolerance stop for every LogisticRegression here;
+# maxIter=20 is only a cap (why 1e-2: q_ml_intent_classifier).
+LR_TOL = 1e-2
+
+
+def _logreg():
+    from pyspark.ml.classification import LogisticRegression
+
+    return LogisticRegression(maxIter=20, regParam=0.01, tol=LR_TOL)
+
+
+def _intent_predictions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Seeded 80/20 split; the held-out 20% scored by a fit on the 80%."""
+    data = _labeled_vectors(spark, sf_dir)
+    train, test = data.randomSplit([0.8, 0.2], seed=SEED)
+    return _logreg().fit(train).transform(test)
+
+
 @register("q_ml_intent_classifier", oracle=None)
 def q_ml_intent_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Intent-classifier stage: multinomial LogisticRegression over
@@ -121,33 +139,32 @@ def q_ml_intent_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: one row per class with test-set support, hits, and overall
     accuracy — the evaluation artifact the reference pipeline persists
-    after training (SURVEY.md §3.1 stage 3).
-    """
-    from pyspark.ml.classification import LogisticRegression
+    after training (SURVEY.md §3.1 stage 3).  Accuracy is a window over
+    the ≤10-row per-class aggregate: one pass over the predictions.
 
-    data = _labeled_vectors(spark, sf_dir)
-    train, test = data.randomSplit([0.8, 0.2], seed=SEED)
-    model = LogisticRegression(maxIter=20, regParam=0.01).fit(train)
-    pred = model.transform(test)
-    per_class = pred.groupBy("label").agg(
-        F.count(F.lit(1)).alias("n_test"),
-        F.sum(
-            F.when(F.col("prediction") == F.col("label"), 1).otherwise(0)
-        ).alias("n_correct"),
+    Stopping rule: MLlib's fit costs one aggregate job per L-BFGS
+    round, so it stops at ``LR_TOL`` = 1e-2 rather than running all 20.
+    On perfbench's planted-centroid ``search_intent`` inputs (seeds 1,
+    7, 11; 549 held-out rows each) that is 10/8/8 rounds, loss within
+    0.05% of a ``maxIter=200, tol=1e-9`` fit, and all held-out
+    predictions equal to that fit's; 3e-2 (6 rounds) flips one on seed 1.
+    """
+    from pyspark.sql import Window as W
+
+    hit = (F.col("prediction") == F.col("label")).cast("int")
+    per_class = (
+        _intent_predictions(spark, sf_dir)
+        .groupBy("label")
+        .agg(F.count(F.lit(1)).alias("n_test"), F.sum(hit).alias("n_correct"))
     )
-    total = pred.agg(
-        (
-            F.sum(
-                F.when(F.col("prediction") == F.col("label"), 1).otherwise(0)
-            )
-            / F.count(F.lit(1))
-        ).alias("acc")
-    )
-    return per_class.crossJoin(total).select(
+    w = W.partitionBy()
+    return per_class.select(
         F.col("label").cast("int").alias("label"),
         "n_test",
         "n_correct",
-        F.round("acc", 6).alias("overall_accuracy"),
+        F.round(
+            F.sum("n_correct").over(w) / F.sum("n_test").over(w), 6
+        ).alias("overall_accuracy"),
     )
 
 
@@ -156,12 +173,11 @@ def q_ml_crossval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model-selection harness: 2-fold CrossValidator over a small
     regParam grid, seeded.  Output: one row per grid point with its
     mean CV metric (f1), plus the chosen best param."""
-    from pyspark.ml.classification import LogisticRegression
     from pyspark.ml.evaluation import MulticlassClassificationEvaluator
     from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
 
     data = _labeled_vectors(spark, sf_dir)
-    lr = LogisticRegression(maxIter=10)
+    lr = _logreg()
     grid = (
         ParamGridBuilder()
         .addGrid(lr.regParam, [0.01, 0.5])
@@ -252,7 +268,6 @@ def q_ml_user_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed seed.  The feature table never leaves Spark: aggregation,
     assembly, training, and evaluation are one lineage.
     """
-    from pyspark.ml.classification import LogisticRegression
     from pyspark.ml.feature import VectorAssembler
 
     from ..operators.analytics import q_events_user_features
@@ -273,7 +288,7 @@ def q_ml_user_model(spark: SparkSession, sf_dir: str) -> DataFrame:
         feats.na.fill(0)
     )
     train, test = data.randomSplit([0.8, 0.2], seed=SEED)
-    model = LogisticRegression(maxIter=20, regParam=0.01).fit(train)
+    model = _logreg().fit(train)
     # Score via the fitted coefficients as a plain column expression
     # (threshold 0.5 on probability ≡ margin > 0) instead of
     # model.transform: the Spark-4 model object drags its training
@@ -471,18 +486,28 @@ def q_ml_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a vector-UDT pipeline); cells sum to the test-set size, which
     the pytest gate checks against the split.
     """
-    from pyspark.ml.classification import LogisticRegression
-
-    data = _labeled_vectors(spark, sf_dir)
-    train, test = data.randomSplit([0.8, 0.2], seed=SEED)
-    model = LogisticRegression(maxIter=20, regParam=0.01).fit(train)
-    pred = model.transform(test)
     return (
-        pred.groupBy(
+        _intent_predictions(spark, sf_dir)
+        .groupBy(
             F.col("label").cast("bigint").alias("label"),
             F.col("prediction").cast("bigint").alias("prediction"),
         )
         .agg(F.count("*").alias("n"))
+    )
+
+
+def _spend_urgent(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per customer: exact spend in cents (the score) and whether any
+    order is 1-URGENT (the 0/1 label) — the propensity pair the lift,
+    WOE and AUC readouts evaluate."""
+    o = table(spark, sf_dir, "orders")
+    return o.groupBy("o_custkey").agg(
+        F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).alias(
+            "spend"
+        ),
+        F.max((F.col("o_orderpriority") == "1-URGENT").cast("int")).alias(
+            "pos"
+        ),
     )
 
 
@@ -539,15 +564,7 @@ def q_ml_lift_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window as W
 
-    o = table(spark, sf_dir, "orders")
-    cust = o.groupBy("o_custkey").agg(
-        F.sum(
-            F.round(F.col("o_totalprice") * 100).cast("bigint")
-        ).alias("spend"),
-        F.max(
-            (F.col("o_orderpriority") == "1-URGENT").cast("int")
-        ).alias("pos"),
-    )
+    cust = _spend_urgent(spark, sf_dir)
     scored = cust.select(
         "pos",
         F.ntile(10)
@@ -649,15 +666,7 @@ def q_feature_woe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window as W
 
-    o = table(spark, sf_dir, "orders")
-    cust = o.groupBy("o_custkey").agg(
-        F.sum(
-            F.round(F.col("o_totalprice") * 100).cast("bigint")
-        ).alias("spend"),
-        F.max(
-            (F.col("o_orderpriority") == "1-URGENT").cast("int")
-        ).alias("pos"),
-    )
+    cust = _spend_urgent(spark, sf_dir)
     scored = cust.select(
         "pos",
         F.ntile(5)
@@ -754,15 +763,7 @@ def q_ml_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window as W
 
-    o = table(spark, sf_dir, "orders")
-    cust = o.groupBy("o_custkey").agg(
-        F.sum(
-            F.round(F.col("o_totalprice") * 100).cast("bigint")
-        ).alias("spend"),
-        F.max(
-            (F.col("o_orderpriority") == "1-URGENT").cast("int")
-        ).alias("pos"),
-    )
+    cust = _spend_urgent(spark, sf_dir)
     rk = cust.select(
         "pos",
         (
@@ -859,28 +860,15 @@ def q_ml_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", "embedding"
     )
-    dot = F.aggregate(
-        F.zip_with(
-            "qv", "embedding",
-            lambda x, y: x.cast("double") * y.cast("double"),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    nq = F.sqrt(
-        F.aggregate(
-            F.zip_with("qv", "qv",
-                       lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0), lambda acc, x: acc + x,
+    def inner(a, b):
+        prods = F.zip_with(
+            a, b, lambda x, y: x.cast("double") * y.cast("double")
         )
-    )
-    ne_ = F.sqrt(
-        F.aggregate(
-            F.zip_with("embedding", "embedding",
-                       lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0), lambda acc, x: acc + x,
-        )
-    )
+        return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
+
+    dot = inner("qv", "embedding")
+    nq = F.sqrt(inner("qv", "qv"))
+    ne_ = F.sqrt(inner("embedding", "embedding"))
     q = e.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("qid"),
         F.col("label").alias("qlabel"),

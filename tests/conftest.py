@@ -45,6 +45,21 @@ def duck():
     con.close()
 
 
+def jobs_during(spark, fn):
+    """(fn(), ids of the Spark jobs fn launched on this thread)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
 def _norm(v):
     """Normalize a cell for cross-engine comparison (mirrors the type
     bridges the driver faces: Decimal↔float, µs timestamps, lists)."""

@@ -30,7 +30,7 @@ from morphl_model_user_search_intent_spark.sources.acid import (
     vacuum,
 )
 
-from conftest import SF_DIR
+from conftest import SF_DIR, jobs_during
 
 
 def _base(spark):
@@ -4984,21 +4984,6 @@ def test_pinned_schema_equals_inference_on_every_table_shape(
     assert _pin_matches_inference(spark, foreign) == ["data"]
 
 
-def _jobs_during(spark, fn):
-    """(fn(), ids of the Spark jobs fn launched on this thread)."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, sc.statusTracker().getJobIdsForGroup(group)
-
-
 def test_snapshot_reads_launch_no_job_and_writes_stay_capped(
     spark, tmp_path
 ):
@@ -5025,9 +5010,9 @@ def test_snapshot_reads_launch_no_job_and_writes_stay_capped(
     )
     assert read_manifest(root).get("dv_files")
 
-    df, jobs = _jobs_during(spark, lambda: read_table(spark, root))
+    df, jobs = jobs_during(spark, lambda: read_table(spark, root))
     assert jobs == [], f"read_table built with jobs {jobs}"
-    _, jobs = _jobs_during(
+    _, jobs = jobs_during(
         spark, lambda: _enforce_schema(spark, root, df, False)
     )
     assert jobs == [], f"_enforce_schema ran jobs {jobs}"
@@ -5035,13 +5020,13 @@ def test_snapshot_reads_launch_no_job_and_writes_stay_capped(
     doomed = base.filter(F.col("o_orderkey") % 11 == 0).select(
         "o_orderkey"
     )
-    _, jobs = _jobs_during(
+    _, jobs = jobs_during(
         spark,
         lambda: delete_from_table(spark, root, doomed, on="o_orderkey"),
     )
     # the tombstone write (+ its broadcasts); 5 with inference
     assert len(jobs) <= 3, f"delete ran {len(jobs)} jobs"
-    _, jobs = _jobs_during(
+    _, jobs = jobs_during(
         spark,
         lambda: merge_table(
             spark, root, _merge_source(spark, SF_DIR), "o_orderkey"

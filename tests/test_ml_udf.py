@@ -10,7 +10,7 @@ import pytest
 
 from morphl_model_user_search_intent_spark import REGISTRY
 
-from conftest import SF_DIR
+from conftest import SF_DIR, jobs_during
 
 
 def test_grouped_map_pct_matches_window_twin_exactly(spark):
@@ -108,6 +108,62 @@ def test_intent_classifier_metrics(spark):
     # labels are independent of features (verified in fixtures), so
     # accuracy should hover near the 10-class chance rate.
     assert 0.0 <= acc <= 0.35
+
+
+def test_logreg_tolerance_stop_matches_converged_fit(spark):
+    """The shared estimator stops on its tolerance well before the
+    20-round cap, yet predicts every held-out row of a planted-centroid
+    set exactly as a fit run to ``tol=1e-9`` does."""
+    import numpy as np
+    from pyspark.ml.classification import LogisticRegression
+    from pyspark.ml.linalg import Vectors
+
+    from morphl_model_user_search_intent_spark.ml.pipeline import _logreg
+
+    rng = np.random.default_rng(5)
+    centroids = rng.normal(0.0, 1.0, size=(10, 64))
+    labels = rng.integers(0, 10, size=2000)
+    vecs = centroids[labels] + rng.normal(0.0, 1.5, size=(2000, 64))
+    data = spark.createDataFrame(
+        [
+            (i, Vectors.dense(v.tolist()), float(y))
+            for i, (v, y) in enumerate(zip(vecs, labels))
+        ],
+        ["id", "features", "label"],
+    )
+    train, test = data.randomSplit([0.8, 0.2], seed=42)
+    fast = _logreg().fit(train)
+    slow = LogisticRegression(maxIter=200, regParam=0.01, tol=1e-9).fit(train)
+
+    def predictions(model):
+        return dict(model.transform(test).select("id", "prediction").collect())
+
+    assert fast.summary.totalIterations < 20
+    assert slow.summary.totalIterations > fast.summary.totalIterations
+    want = predictions(slow)
+    assert len(want) > 300 and predictions(fast) == want
+
+
+def test_intent_classifier_job_ceiling(spark):
+    """Build + collect of the classifier: one L-BFGS job per round
+    until the tolerance stop, then one pass over the predictions (a
+    fit that runs all 20 rounds lands at 27)."""
+    key = REGISTRY["q_ml_intent_classifier"]
+    rows, jobs = jobs_during(spark, lambda: key.fn(spark, SF_DIR).collect())
+    assert rows
+    assert len(jobs) <= 14, f"classifier ran {len(jobs)} jobs"
+
+
+def test_intent_classifier_agrees_with_confusion(spark):
+    """Both keys score the same split with the same fit: per class,
+    n_test is the confusion row's sum and n_correct its diagonal."""
+    cells = REGISTRY["q_ml_confusion"].fn(spark, SF_DIR).collect()
+    rows = REGISTRY["q_ml_intent_classifier"].fn(spark, SF_DIR).collect()
+    want = {}
+    for c in cells:
+        n, hits = want.get(c.label, (0, 0))
+        want[c.label] = (n + c.n, hits + (c.n if c.label == c.prediction else 0))
+    assert {r.label: (r.n_test, r.n_correct) for r in rows} == want
 
 
 def test_crossval_selects_from_grid(spark):

@@ -31,12 +31,14 @@ manifests only, so a pinned reader — even in another process, even
 with a non-Spark reader — sees a stable snapshot until ``vacuum``
 retires versions beyond the retention horizon.
 
-**MERGE is copy-on-write at file granularity** (the Delta/Iceberg CoW
-strategy): plan which data files contain matched keys (a file-path
-semi-join — metadata-scale, bounded by file count), rewrite ONLY
-those files with matched rows updated/deleted, append insert files,
-and commit old−touched+new.  Untouched files — at 100 TB, almost all
-of them — are carried by reference.
+**Row-level writes are merge-on-read** (Delta's deletion vectors):
+DELETE, UPDATE and MERGE never rewrite a data file.  One commit
+carries every data file by reference, adds a ``dv/`` sidecar of
+(file basename, key) tombstones masking the current rows the write
+retires, and appends the new rows (post-images and inserts) as new
+files — write cost O(batch) however many files the batch's keys
+touch.  Readers anti-join the tombstones; OPTIMIZE folds them into
+compacted files and clears the list.
 """
 
 from __future__ import annotations
@@ -1303,8 +1305,8 @@ def read_table(
         # ROW TRACKING (round 10): the stable row-id column is engine
         # metadata, hidden from normal reads like Delta's _metadata
         # row ids; pass with_row_ids=True to audit lineage (and the
-        # engine's own rewrite paths read with it so compaction and
-        # CoW merges carry ids through)
+        # engine's own rewrite paths read with it so compaction
+        # carries ids through)
         base = base.drop(ident["col"])
     if partition_filter:
         for c, want in partition_filter.items():
@@ -1493,14 +1495,24 @@ def _live_dv(
             pending.append(t.filter(mask))
     created: list[str] = []
     if pending:
-        os.makedirs(os.path.join(root, "dv"), exist_ok=True)
-        dst = os.path.join(root, "dv", f"{uuid.uuid4().hex}.parquet")
-        pq.write_table(pa.concat_tables(pending), dst)
-        out.append(dst)
-        created.append(dst)
+        created.append(_write_sidecar(root, pending))
+        out += created
     if not out:
         return None, None, created
     return out, m.get("dv_key"), created
+
+
+def _write_sidecar(root: str, tables: list) -> str:
+    """Write pyarrow tombstone ``tables`` (read from Spark-written
+    sidecars, so they carry Spark's footer schema key) as ONE new
+    sidecar under ``root/dv/`` and return its path."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(os.path.join(root, "dv"), exist_ok=True)
+    dst = os.path.join(root, "dv", f"{uuid.uuid4().hex}.parquet")
+    pq.write_table(pa.concat_tables(tables), dst)
+    return dst
 
 
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
@@ -1543,8 +1555,8 @@ def _scan(
     snapshot's schema.
 
     Reads of heterogeneous column-mapped tables merge schemas;
-    ``rewrite`` gives the frame the copy-on-write and deletion-vector
-    writers plan with instead: the plain first-footer schema plus the
+    ``rewrite`` gives the frame the row-level and compaction writers
+    plan with instead: the plain first-footer schema plus the
     ``_file`` basename column that names each row's file.  Every
     non-merging read is schema-pinned (:func:`_read_parquet`), so
     building the frame launches no job."""
@@ -1573,6 +1585,126 @@ def _file_col() -> Column:
     return F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
 
 
+def _drop_empty(files: list[str]) -> list[str]:
+    """``files`` minus (and deleting) the 0-row ones: an empty frame
+    still writes one schema-only file, which would grow the file list
+    — or the DV list every read anti-joins — for nothing."""
+    import pyarrow.parquet as pq
+
+    keep = []
+    for f in files:
+        if pq.read_metadata(f).num_rows:
+            keep.append(f)
+        else:
+            os.remove(f)
+    return keep
+
+
+def _commit_mor(
+    root: str,
+    m: dict,
+    op: str,
+    key: str,
+    dv_rows: DataFrame | None,
+    added: DataFrame | None = None,
+    feed: DataFrame | None = None,
+    **commit_kw,
+) -> int:
+    """THE row-level write, merge-on-read — shared by DELETE, UPDATE
+    and both MERGEs.  Writes ``dv_rows`` (the ``(_file, key)``
+    tombstones of every current row the op retires) as ONE sidecar
+    under ``dv/``, appends ``added`` (hive-partitioned when ``m`` is),
+    writes the optional change ``feed``, and publishes one delta
+    commit that carries every data file by reference and grows the DV
+    list by the new sidecar.  Cost is O(batch): no data file is ever
+    rewritten; reads anti-join the mask (:func:`_scan`) until OPTIMIZE
+    folds it (Delta's deletion vectors).
+
+    Tombstones are keyed on the business key ``key`` (physical name),
+    so a table whose DVs are keyed on another column raises
+    ``ValueError``.  A lost race reclaims every written file and
+    re-raises :class:`CommitConflict` for the caller's replay loop."""
+    if m.get("dv_key") not in (None, key):
+        raise ValueError(
+            f"table's deletion vectors are keyed on {m['dv_key']!r},"
+            f" not {key!r}"
+        )
+    new_dv = []
+    if dv_rows is not None:
+        new_dv = _drop_empty(_write_files(dv_rows, root, subdir="dv"))
+        if len(new_dv) > 1:
+            # one sidecar per commit, not one per scan task (every
+            # read scans each): tombstones are batch-sized, so the
+            # driver concatenates the tasks' files — no shuffle, and
+            # the table scan that finds them keeps its parallelism
+            import pyarrow.parquet as pq
+
+            one = _write_sidecar(root, [pq.read_table(f) for f in new_dv])
+            for f in new_dv:
+                os.remove(f)
+            new_dv = [one]
+    pcols = m.get("partition_cols")
+    new_files, parts = [], None
+    if added is not None and pcols:
+        tr = m.get("transforms")
+        new_files, parts = _write_files_partitioned(
+            added, root, pcols, exprs=_transform_exprs(tr) if tr else None
+        )
+    elif added is not None:
+        new_files = _write_files(added, root)
+    new_files = _drop_empty(new_files)
+    change_files = (
+        None if feed is None else _write_files(feed, root, subdir="change")
+    )
+    dv_files = m.get("dv_files", []) + new_dv
+    try:
+        # stats carry VERBATIM: per-file zone maps describe the
+        # PHYSICAL file, which a tombstone never touches — min/max stay
+        # valid (superset) bounds, so zone pruning composes losslessly
+        # with the mask.  Row counts stay physical too: a logical count
+        # subtracts the tombstones while a DV backlog exists.  Only the
+        # appended files (and the grown DV list) serialize; every
+        # chunk carries by descriptor.
+        return commit_delta(
+            root,
+            m,
+            op,
+            added=new_files,
+            partitions=parts,
+            stats=commit_stats(root, new_files, []) if pcols else None,
+            change_files=change_files,
+            dv_files=dv_files or None,
+            dv_key=key if dv_files else None,
+            **commit_kw,
+        )
+    except CommitConflict:
+        for f in new_dv + new_files + (change_files or []):
+            try:
+                os.remove(f)
+            except OSError:
+                pass
+        raise
+
+
+def _like(df: DataFrame, base: DataFrame, cm: dict | None) -> DataFrame:
+    """Rows to append, in the table's physical column order and in the
+    snapshot frame ``base``'s types, so an appended file reads like the
+    files it joins.  The columns must be the table's: ``base``'s own,
+    or the column map's live physicals (a re-added column's physical
+    may be absent from ``base``'s footer and keeps its type)."""
+    types = {f.name: f.dataType for f in base.schema.fields}
+    types.pop("_file", None)
+    want = [e["physical"] for e in cm["cols"]] if cm else list(types)
+    if sorted(df.columns) != sorted(want):
+        raise SchemaMismatch(
+            f"rows have columns {sorted(df.columns)}, the table "
+            f"{sorted(want)}"
+        )
+    return df.select(
+        *[F.col(c).cast(types[c]) if c in types else F.col(c) for c in want]
+    )
+
+
 def delete_from_table(
     spark: SparkSession,
     root: str,
@@ -1584,12 +1716,12 @@ def delete_from_table(
     cdc: bool = False,
     partition_filter: dict | None = None,
 ) -> int:
-    """MERGE-ON-READ DELETE via deletion-vector sidecars (round 8) —
-    the other half of the Delta/Iceberg delete story next to CoW
-    MERGE: instead of rewriting every file that holds a matched key,
-    write the (file basename, key) tombstone pairs as a small sidecar
+    """MERGE-ON-READ DELETE via deletion-vector sidecars (round 8):
+    instead of rewriting every file that holds a matched key, write
+    the (file basename, key) tombstone pairs as ONE small sidecar
     parquet under ``root/dv/`` and commit a version whose manifest
-    carries (parent's DV list ∪ the new sidecar).  Write cost is
+    carries (parent's DV list ∪ the new sidecar) — :func:`_commit_mor`
+    with nothing appended.  Write cost is
     O(delete batch); NO data file is touched — at 100 TB the
     difference between a GDPR wipe that costs minutes and one that
     rewrites the table.  Readers anti-join the mask per file
@@ -1651,51 +1783,29 @@ def delete_from_table(
                     else [want]
                 )
                 base = base.filter(_residual_col(m, c).isin(allowed))
-        if m.get("dv_key") not in (None, on_p):
-            raise ValueError(
-                f"table's deletion vectors are keyed on {m['dv_key']!r},"
-                f" not {on_p!r}"
-            )
         matched = base.join(keys_p, on_p, "semi")
-        dv_rows = matched.select("_file", on_p)
-        new_dv = _write_files(dv_rows, root, subdir="dv")
-        change_files = None
+        feed = None
         if cdc:
             # write-side delete feed (Delta CDF for deletion-vector
             # commits): the matched pre-images, tagged 'delete',
             # published atomically — the form a STREAMING tail can
-            # consume (the file-diff reconstruction also sees DV
-            # deletes via the sidecar diff in table_changes)
+            # consume (table_changes reconstructs the same rows from
+            # the new tombstones)
             feed = matched.drop("_file").withColumn(
                 "_change_type", F.lit("delete")
             )
-            change_files = _write_files(feed, root, subdir="change")
         try:
-            # stats carry VERBATIM: per-file zone maps describe the
-            # PHYSICAL file, which a DV delete never touches — min/max
-            # stay valid (superset) bounds, so zone pruning composes
-            # losslessly with the mask (Delta keeps add-file stats
-            # unchanged when DVs attach for the same reason).  Row
-            # counts likewise stay physical; logical counts must go
-            # through a masked read while a DV backlog exists.
-            # Zero file delta (round 10): every chunk carries by
-            # descriptor — the commit serializes only the DV list.
-            return commit_delta(
+            return _commit_mor(
                 root,
                 m,
                 "delete",
+                on_p,
+                matched.select("_file", on_p),
+                feed=feed,
                 txn=txn,
-                change_files=change_files,
-                dv_files=m.get("dv_files", []) + new_dv,
-                dv_key=on_p,
             )
         except CommitConflict:
-            # lost the race — reclaim sidecars AND change files
-            for f in new_dv + (change_files or []):
-                try:
-                    os.remove(f)
-                except OSError:
-                    pass
+            pass  # lost the race: replay against the new snapshot
     raise CommitConflict(f"delete lost {max_retries} races in {root}")
 
 
@@ -1710,24 +1820,29 @@ def merge_table(
     txn_app: str | None = None,
     txn_version: int | None = None,
 ) -> int:
-    """SQL-MERGE over the table, copy-on-write at file granularity.
+    """SQL-MERGE over the table, merge-on-read (deletion vectors).
 
     ``source`` carries the table's columns plus a boolean ``_delete``:
     matched & _delete → row removed; matched & not _delete → row
     replaced by the source row; unmatched & not _delete → inserted.
 
-    Plan (one distributed pass over source + touched files only):
-      1. pin the current snapshot; tag base rows with their physical
-         file via the parquet ``_metadata.file_path`` column;
-      2. file-level pruning: semi-join base×source keys → the DISTINCT
-         file paths holding matches (driver-side list, bounded by the
-         snapshot's FILE COUNT — the same metadata-scale planning step
-         Delta/Iceberg do on the driver);
-      3. rewrite only those files: surviving base rows (key ∉ source)
-         ∪ all source upserts (replacements + inserts, minus deletes);
-      4. commit (old − touched) + new.  On :class:`CommitConflict`
-         (a writer slipped in) the merge re-reads the NEW snapshot and
-         replays — source derivations are pure, so replay is safe.
+    Plan (one distributed pass over source + the masked snapshot):
+      1. pin the current snapshot; tag base rows with their file's
+         uuid basename (``_metadata.file_path``);
+      2. tombstone the ``(_file, key)`` of every current row whose key
+         the source names — ONE sidecar under ``dv/``;
+      3. append the non-``_delete`` source rows (replacements +
+         inserts) as new files;
+      4. commit every data file by reference + the new files + the
+         grown DV list (:func:`_commit_mor`).  No data file is
+         rewritten, so a batch of random keys costs O(batch), not the
+         files its keys touch.  On :class:`CommitConflict` (a writer
+         slipped in) the merge re-reads the NEW snapshot and replays —
+         source derivations are pure, so replay is safe.
+
+    Tombstones are keyed on ``on``: a table whose deletion vectors are
+    keyed on another column raises ``ValueError`` (OPTIMIZE folds the
+    backlog first).
 
     ``cdc=True`` additionally writes the commit's row-level CHANGE
     FEED (insert / delete / update_preimage / update_postimage rows,
@@ -1756,17 +1871,18 @@ def merge_table(
         if txn_version is None:
             raise ValueError("txn_app requires txn_version")
         txn = {"app": txn_app, "version": int(txn_version)}
-    if read_manifest(root).get("partition_cols"):
+    m0 = read_manifest(root)
+    if m0.get("partition_cols"):
         raise ValueError(
             "table is partitioned — use merge_table_partitioned "
             "(a flat merge would commit a spec-less manifest and "
             "silently drop partition pruning)"
         )
-    _cm = read_manifest(root).get("colmap")
+    _cm = m0.get("colmap")
     if _cm is not None:
         # column-mapped table: the merge operates in PHYSICAL space
         # end-to-end (base files are physical; translating the source
-        # once here keeps every join/union/write below name-aligned).
+        # once here keeps every join/write below name-aligned).
         # Constraint validation inside the loop stays correct because
         # a constraint-referenced column can never be renamed
         # (rename_column refuses), so its physical == logical name.
@@ -1778,115 +1894,79 @@ def merge_table(
             if done is not None and done >= txn_version:
                 return latest_version(root)  # replayed batch: no-op
         m = read_manifest(root, version)
-        # Tag base rows with their file's uuid BASENAME, not the full
-        # path: _metadata.file_path is a URI whose representation
-        # (file: vs file://, percent-encoding, scheme of a non-local
-        # store) need not string-match the manifest's stored paths,
-        # and a silent mismatch would keep every touched file in
-        # `kept` — duplicating all matched rows.  Basenames are
-        # uuid-unique by construction (_write_files).
         base = _scan(spark, m, m["files"], rewrite=True)
-        by_base = {os.path.basename(f): f for f in m["files"]}
-        keys = source.select(on)  # feeds semi/anti joins only
-        touched = [
-            r[0]
-            for r in base.join(keys, on, "semi")
-            .select("_file")
-            .distinct()
-            .collect()  # bounded by the snapshot's file count
-        ]
-        # a representation mismatch must fail loudly, never dedup-break
-        stray = [t for t in touched if t not in by_base]
-        assert not stray, (
-            f"touched files not in manifest {m['version']}: {stray}"
-        )
-        survivors = (
-            base.filter(F.col("_file").isin(touched))
-            .drop("_file")
-            .join(keys, on, "anti")
-        )
-        upserts = source.filter(~F.col("_delete")).drop("_delete")
-        # write-side schema features on the upsert arm (round 10):
-        # defaults/generated fill omitted columns (same caveat as
-        # CHECK constraints on mapped tables: feature expressions
-        # bind by name, and a referenced column can't be renamed);
-        # identity/row-id columns flow UPDATE-STABLE — a replaced
-        # row keeps its base row id (joined from the pre-image),
-        # only genuinely new keys draw fresh ids from the watermark.
-        sm = m.get("schema_meta")
-        sm_commit: dict | None | object = _INHERIT
-        if sm is not None:
-            _validate_generated(upserts, sm)
-            upserts = _fill_defaults_generated(upserts, sm)
-            ident = sm.get("identity")
-            if ident is not None:
-                idc = ident["col"]
-                if idc in upserts.columns:
-                    raise ValueError(
-                        f"identity column {idc!r} is GENERATED "
-                        "ALWAYS — merge sources must not supply it"
-                    )
-                upserts = upserts.join(
-                    base.select(on, idc), on, "left"
-                )
-                kept = upserts.filter(F.col(idc).isNotNull())
-                ins = upserts.filter(F.col(idc).isNull()).drop(idc)
-                ins, n_new = _assign_identity(
-                    ins,
-                    idc,
-                    int(ident.get("high", 0)),
-                    list(ident["order"]),
-                    int(ident.get("buckets", 64)),
-                    start=int(ident.get("start", 1)),
-                    step=int(ident.get("step", 1)),
-                )
-                if n_new:
-                    upserts = kept.unionByName(ins)
-                    sm_commit = _advance_watermark(sm, n_new)
-                else:
-                    upserts = kept
-        _validate_constraints(upserts, root)  # incoming rows only
-        new_files = _write_files(survivors.unionByName(upserts), root)
-        change_files = None
-        if cdc:
-            matched = base.filter(F.col("_file").isin(touched)).drop(
-                "_file"
-            )
-            feed = _merge_change_feed(matched, source, upserts, on)
-            change_files = _write_files(feed, root, subdir="change")
-        # deletion-vector entries for the rewritten files are inert
-        # (their basenames leave the manifest; the rewrite read
-        # THROUGH the mask) — retire them so dv_fraction reflects
-        # only the live backlog (round-9 fix); carried files' entries
-        # keep masking
-        dv_files, dv_key, dv_new = _live_dv(
-            root, m, removed=set(touched)
-        )
         try:
-            # O(delta) CoW commit (round 10): only the chunks holding
-            # TOUCHED files rewrite; the untouched bulk of the table
-            # carries by chunk descriptor
-            return commit_delta(
-                root,
-                m,
-                "merge",
-                added=new_files,
-                removed=[by_base[t] for t in touched],
-                txn=txn,
-                change_files=change_files,
-                dv_files=dv_files,
-                dv_key=dv_key,
-                schema_meta=sm_commit,
+            return _commit_mor(
+                root, m, "merge", on, txn=txn,
+                **_merge_arms(base, source, on, m, root, cdc),
             )
         except CommitConflict:
-            for f in new_files + (change_files or []) + dv_new:  # lost the race
-                try:
-                    os.remove(f)
-                except OSError:
-                    pass
             if version is not None:
                 raise  # an explicit-version merge must not replay
     raise CommitConflict(f"merge lost {max_retries} races in {root}")
+
+
+def _merge_arms(
+    base: DataFrame,
+    source: DataFrame,
+    on: str,
+    m: dict,
+    root: str,
+    cdc: bool,
+) -> dict:
+    """One MERGE's writes over ``base`` (the ``_file``-tagged, masked
+    snapshot frame of every file that may hold a source key), as
+    :func:`_commit_mor` arguments — shared by the flat and partitioned
+    merges.  Every current row whose key the source names is
+    tombstoned (a delete arm, or the pre-image of a replacement); the
+    non-``_delete`` source rows (replacements + inserts) are appended.
+
+    Write-side schema features ride on the upsert arm:
+    defaults/generated fill omitted columns (feature expressions bind
+    by name, and a referenced column can't be renamed); identity /
+    row-id columns flow UPDATE-STABLE — a replaced row keeps its base
+    row id (joined from the pre-image), only keys ``base`` lacks draw
+    fresh ids from the watermark, which then advances in the commit.
+    Constraints validate the incoming rows only."""
+    matched = base.join(source.select(on), on, "semi")
+    upserts = source.filter(~F.col("_delete")).drop("_delete")
+    out: dict = {}
+    sm = m.get("schema_meta")
+    if sm is not None:
+        _validate_generated(upserts, sm)
+        upserts = _fill_defaults_generated(upserts, sm)
+        ident = sm.get("identity")
+        if ident is not None:
+            idc = ident["col"]
+            if idc in upserts.columns:
+                raise ValueError(
+                    f"identity column {idc!r} is GENERATED "
+                    "ALWAYS — merge sources must not supply it"
+                )
+            upserts = upserts.join(base.select(on, idc), on, "left")
+            kept = upserts.filter(F.col(idc).isNotNull())
+            ins, n_new = _assign_identity(
+                upserts.filter(F.col(idc).isNull()).drop(idc),
+                idc,
+                int(ident.get("high", 0)),
+                list(ident["order"]),
+                int(ident.get("buckets", 64)),
+                start=int(ident.get("start", 1)),
+                step=int(ident.get("step", 1)),
+            )
+            if n_new:
+                upserts = kept.unionByName(ins)
+                out["schema_meta"] = _advance_watermark(sm, n_new)
+            else:
+                upserts = kept
+    upserts = _like(upserts, base, m.get("colmap"))
+    _validate_constraints(upserts, root)  # incoming rows only
+    out.update(dv_rows=matched.select("_file", on), added=upserts)
+    if cdc:
+        out["feed"] = _merge_change_feed(
+            matched.drop("_file"), source, upserts, on
+        )
+    return out
 
 
 def _merge_change_feed(
@@ -2500,7 +2580,7 @@ def ensure_acid_exercise(
     configure(spark)
     root = root or os.path.join(SCRATCH, f"acidtable-{_tag(sf_dir)}")
     ready = os.path.join(root, "_READY")
-    note = f"acid-v2cdc {_orders_fingerprint(sf_dir)}"
+    note = f"acid-v2cdc-mor {_orders_fingerprint(sf_dir)}"
     try:
         if open(ready).read().strip() == note:
             return root
@@ -2512,8 +2592,8 @@ def ensure_acid_exercise(
         "o_orderpriority",
         F.col("o_totalprice").cast("double").alias("price"),
     )
-    # ≥4 data files so the CoW merge demonstrably carries untouched
-    # files by reference instead of rewriting the table
+    # 4 data files: the merge tombstones rows in every one of them
+    # (its keys are spread over the table) and rewrites none
     create_table(spark, root, base.repartition(4))
     merge_table(
         spark, root, _merge_source(spark, sf_dir), "o_orderkey", cdc=True
@@ -2547,16 +2627,17 @@ def q_table_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ACID MERGE as a real TABLE operation (all three arms: update /
     insert / delete) — the lakehouse upgrade of q_merge_upsert, which
     computes the same semantics as a query.  Here the merge is
-    COMMITTED: copy-on-write rewrite of only the files holding
-    matched keys, atomic manifest publication (os.link — EEXIST is
-    the conflict signal), and this query reads the result back from
-    the committed snapshot, so the oracle checks the whole
-    write→commit→read cycle, not just the join algebra.
+    COMMITTED merge-on-read: tombstones for the matched keys' current
+    rows plus appended upserts, atomic manifest publication (os.link —
+    EEXIST is the conflict signal), and this query reads the result
+    back from the committed snapshot through the deletion-vector mask,
+    so the oracle checks the whole write→commit→read cycle, not just
+    the join algebra.
 
-    Scale: untouched data files are carried by reference (at 100 TB a
-    MERGE touching 0.1% of keys rewrites ~0.1% of files); the only
-    driver-side step is the touched-file list, bounded by file count
-    — the same metadata-scale planning Delta/Iceberg do.
+    Scale: every data file is carried by reference — at 100 TB a
+    MERGE of a 1k-key batch writes one sidecar and its upserts, however
+    many files its keys touch; the read pays one broadcast anti join
+    until OPTIMIZE folds the mask.
     """
     root = ensure_acid_exercise(spark, sf_dir)
     return read_table(spark, root)
@@ -2616,17 +2697,19 @@ def table_changes(
     version ``version`` relative to its parent.
 
     The crucial scale property: cost is proportional to the CHANGED
-    FILES, never the table.  The manifest diff identifies files the
-    commit removed (pre-images of every rewritten/deleted row) and
-    added (post-images); only those are read.  Copy-on-write rewrites
-    carry untouched rows into the added files too, so a full-outer
-    join on the key with null-safe column comparison separates real
-    changes from carried rows — a carried row is bit-identical on
-    both sides and emits nothing.  At 100 TB a MERGE touching 0.1%
-    of files yields a CDC read over 0.2% of the data (pre + post),
-    not two full snapshots diffed (the q_snapshot_diff formulation,
-    which stays as the query-layer fallback for tables without a
-    manifest history).
+    rows' FILES, never the table.  The pre side is the rows the
+    commit's NEW tombstones mask (merge-on-read delete / update /
+    merge: only the files the sidecars name are read) plus the rows of
+    any file it removed (compaction, or a copy-on-write commit in an
+    older history); the post side is its added files.  A full-outer
+    join on the key with null-safe column comparison pairs them: pre
+    only → delete, post only → insert, both and different → update
+    pre/post-images, both and bit-identical (a row a rewrite carried,
+    or a no-op replacement) → nothing.  At 100 TB a MERGE of a
+    1k-key batch reads its appended files and the files its
+    tombstones name, not two full snapshots diffed (the
+    q_snapshot_diff formulation, which stays as the query-layer
+    fallback for tables without a manifest history).
     """
     m2 = read_manifest(root, version)
     m1 = read_manifest(root, m2["parent"])
@@ -2650,43 +2733,48 @@ def table_changes(
             for c in read_table(spark, root, version).columns
             if c != key
         ]
-    # A DELETION-VECTOR commit changes NO data file — its delta lives
-    # entirely in the dv sidecar diff (round-8 hardening: without this
-    # branch a DV delete was INVISIBLE to file-diff CDC).  The newly
-    # added tombstones name exactly the (file, key) pre-images; read
-    # only those files, semi-join on the mask, tag 'delete'.
+    # A merge-on-read commit (delete, update, merge) removes NO data
+    # file — its pre-images are the rows its NEW tombstones mask.  The
+    # sidecars name exactly the (file, key) pairs; read only those
+    # files, keep the masked rows, and put them on the pre side next to
+    # any removed file's rows: the key join below then pairs a
+    # replaced row with its appended post-image (update), and leaves a
+    # tombstoned key with no post-image a delete.  Both pre reads go
+    # through the PARENT's mask: a row already masked at the parent is
+    # no pre-image (a compaction dropping it, or re-listing its
+    # tombstone in a rewritten sidecar, changes nothing).
     dv_added = sorted(
         set(m2.get("dv_files", [])) - set(m1.get("dv_files", []))
     )
-    dv_feed = None
+    tombed: list[str] = []
     if dv_added:
-        dv_key = m2["dv_key"]
-        tomb = _read_parquet(spark, dv_added).select("_file", dv_key)
-        touched = sorted(
-            {
-                f
-                for f in m2["files"]
-                if os.path.basename(f)
-                in {r[0] for r in tomb.select("_file").distinct().collect()}
-            }
-        )
-        if touched:
-            pre = _read_parquet(spark, touched, merge).withColumn(
-                "_file", _file_col()
-            )
-            for c in cols:  # absent re-added physicals read NULL
-                if c not in pre.columns:
-                    pre = pre.withColumn(c, F.lit(None))
-            dv_feed = (
-                pre.join(tomb, ["_file", dv_key], "semi")
-                .drop("_file")
-                .withColumn("_change_type", F.lit("delete"))
-            )
+        import pyarrow.parquet as pq
 
-    def _side(files: list[str], prefix: str) -> DataFrame:
+        named = set(
+            pq.read_table(dv_added, columns=["_file"])
+            .column("_file")
+            .to_pylist()
+        )
+        tombed = sorted(
+            f for f in m2["files"] if os.path.basename(f) in named
+        )
+
+    def _tombs(dvf: list[str], dk: str) -> DataFrame:
+        return _read_parquet(spark, dvf).select("_file", dk)
+
+    def _side(files: list[str], prefix: str, new=False) -> DataFrame:
         base = _read_parquet(spark, files or m2["files"], merge)
+        parent = m1.get("dv_files") if prefix == "pre" else None
         if not files:
             base = base.limit(0)
+        elif parent or new:
+            base = base.withColumn("_file", _file_col())
+            if parent:
+                dk = m1["dv_key"]
+                base = base.join(_tombs(parent, dk), ["_file", dk], "anti")
+            if new:
+                dk = m2["dv_key"]
+                base = base.join(_tombs(dv_added, dk), ["_file", dk], "semi")
         # a re-added physical column may be absent from EVERY file on
         # one side (mergeSchema unions only the files actually read)
         # — those rows' value for it is NULL by definition
@@ -2702,7 +2790,10 @@ def table_changes(
             F.lit(True).alias(f"{prefix}_present"),
         )
 
-    j = _side(removed, "pre").join(_side(added, "post"), key, "full_outer")
+    pre = _side(removed, "pre")
+    if tombed:
+        pre = pre.unionByName(_side(tombed, "pre", new=True))
+    j = pre.join(_side(added, "post"), key, "full_outer")
     in_pre = F.coalesce(F.col("pre_present"), F.lit(False))
     in_post = F.coalesce(F.col("post_present"), F.lit(False))
     same = F.lit(True)
@@ -2725,16 +2816,12 @@ def table_changes(
                 img("post", "update_postimage"),
             ),
         )
-        .otherwise(F.array())  # carried by CoW rewrite — not a change
+        .otherwise(F.array())  # carried or no-op — not a change
     )
     feed = (
         j.select(key, F.explode(changes).alias("_chg"))
         .select(key, *[F.col(f"_chg.{c}") for c in cols], "_chg._change_type")
     )
-    if dv_feed is not None:
-        feed = feed.unionByName(
-            dv_feed.select(key, *cols, "_change_type")
-        )
     if cm is not None:
         feed = feed.select(
             *[
@@ -2777,12 +2864,13 @@ def q_table_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORACLE-CHECKED against the closed-form merge rule: the emitted
     feed must contain exactly one update_preimage + update_postimage
     pair per re-priced key, one insert per spawned key, one delete
-    per retired key — and NOTHING for the untouched rows that CoW
-    rewriting carried through the touched files (the correctness trap
-    of file-diff CDC, caught here by the null-safe column compare).
+    per retired key.  The merge-on-read commit's pre-images are the
+    rows its new tombstones mask, joined on the key to its appended
+    post-images — a tombstone read as a bare delete (or a post-image
+    as a bare insert) breaks the hash.
 
-    Scale: reads only the commit's removed+added files (manifest
-    diff, metadata-scale) — see :func:`table_changes`.
+    Scale: reads only the commit's appended files, the files its
+    tombstones name, and its sidecars — see :func:`table_changes`.
     """
     root = ensure_acid_exercise(spark, sf_dir)
     return table_changes(spark, root, version=2, key="o_orderkey")
@@ -2866,14 +2954,14 @@ def optimize_table(
 def ensure_optimize_exercise(spark: SparkSession, sf_dir: str) -> str:
     """Stage (idempotent) the OPTIMIZE exhibit on its own root so the
     extra version never perturbs the shared two-version exercise:
-    v1 create (4 files) → v2 MERGE (fragmented: carried + rewritten +
-    insert files) → v3 OPTIMIZE."""
+    v1 create (4 files) → v2 MERGE (carried files + tombstones +
+    appended upserts) → v3 OPTIMIZE (folds the mask)."""
     from .formats import SCRATCH, _tag
 
     configure(spark)
     root = os.path.join(SCRATCH, f"acidtable-opt-{_tag(sf_dir)}")
     ready = os.path.join(root, "_READY_OPT")
-    note = f"acid-opt {_orders_fingerprint(sf_dir)}"
+    note = f"acid-opt-mor {_orders_fingerprint(sf_dir)}"
     try:
         if open(ready).read().strip() == note:
             return root
@@ -3003,7 +3091,7 @@ def ensure_cdc_stream_exercise(spark: SparkSession, sf_dir: str) -> str:
     configure(spark)
     root = os.path.join(SCRATCH, f"acidtable-cdcs-{_tag(sf_dir)}")
     ready = os.path.join(root, "_READY_CDCS")
-    note = f"acid-cdcs {_orders_fingerprint(sf_dir)}"
+    note = f"acid-cdcs-mor {_orders_fingerprint(sf_dir)}"
     try:
         if open(ready).read().strip() == note:
             return root
@@ -3227,7 +3315,7 @@ def q_table_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-images (anti join on delete/update_preimage keys), then append
     the feed's insert and update_postimage rows.  The oracle is the
     full post-MERGE table, so a feed that is incomplete (missed
-    change), redundant (leaked a CoW-carried row), or mis-tagged
+    change), redundant (leaked a carried row), or mis-tagged
     cannot reconstruct it — this is the end-to-end proof that the CDC
     feed carries EXACTLY the commit's delta, which the per-row checks
     of q_table_cdc imply but don't compose.
@@ -3293,7 +3381,7 @@ def q_table_cdc_incremental(
     combines with the v1 aggregate in one tiny union.
 
     The ORACLE is the full recompute over the post-MERGE table, so a
-    sign error, a missed image, or a CoW-carried leak breaks the
+    sign error, a missed image, or a carried-row leak breaks the
     hash.  q_agg_incremental proves partial-state merging across
     partitions of one scan; this proves it across COMMITS — at
     100 TB the difference between refreshing a dashboard with a
@@ -3832,14 +3920,13 @@ def merge_table_partitioned(
          partitions are NEVER listed, scanned, or joined: the
          planning semi-join's base side is the touched partitions'
          data, not the table;
-      3. CoW-rewrite only the in-partition files holding matched keys
-         (the usual file-level semi-join, now over the pruned set),
-         writing replacements hive-partitioned so the table's layout
-         survives the merge;
-      4. commit (everything else, by reference) + new files, carrying
-         forward the untouched files' partition values and stats
-         blocks verbatim — the manifest diff is proportional to the
-         touched partitions, not the table.
+      3. tombstone the matched keys' current rows in the pruned
+         files and append the upserts hive-partitioned, so the
+         table's layout survives the merge (:func:`_merge_arms`);
+      4. commit every data file by reference + the new files + the
+         grown DV list, carrying the existing files' partition values
+         and stats verbatim — the manifest diff is proportional to
+         the batch, not the table (:func:`_commit_mor`).
 
     The source must carry the table's partition columns (an upsert
     that moves a row across partitions is two arms: delete + insert —
@@ -3884,132 +3971,17 @@ def merge_table_partitioned(
                 )
                 in src_parts
             ]
-        by_base = {os.path.basename(f): f for f in cand}
-        keys = source.select(on)  # feeds semi/anti joins only
-        if cand:
-            base = _scan(spark, m, cand, rewrite=True)
-            touched = [
-                r[0]
-                for r in base.join(keys, on, "semi")
-                .select("_file")
-                .distinct()
-                .collect()  # bounded by the touched partitions' files
-            ]
-            stray = [t for t in touched if t not in by_base]
-            assert not stray, (
-                f"touched files not in manifest {m['version']}: {stray}"
-            )
-            survivors = (
-                base.filter(F.col("_file").isin(touched))
-                .drop("_file")
-                .join(keys, on, "anti")
-            )
-        else:  # source targets only brand-new partitions: pure insert
-            touched = []
-            base = None
-            # PHYSICAL empty frame (read_table serves logical; the
-            # union below is with the physical-translated upserts;
-            # with_row_ids — a row-tracked table's hidden id column
-            # is part of the physical write schema)
-            survivors = _select_physical(
-                _cm,
-                read_table(spark, root, with_row_ids=True).limit(0),
-            )
-        upserts = source.filter(~F.col("_delete")).drop("_delete")
-        # write-side schema features (round 10) — same contract as
-        # the flat merge: defaults/generated fill omitted columns,
-        # identity/row ids flow update-stable WITHIN the touched
-        # partitions (a cross-partition move is delete+insert by the
-        # partitioned-merge contract, so it draws a fresh id — the
-        # row observably left its partition)
-        sm = m.get("schema_meta")
-        sm_commit: dict | None | object = _INHERIT
-        if sm is not None:
-            _validate_generated(upserts, sm)
-            upserts = _fill_defaults_generated(upserts, sm)
-            ident = sm.get("identity")
-            if ident is not None:
-                idc = ident["col"]
-                if idc in upserts.columns:
-                    raise ValueError(
-                        f"identity column {idc!r} is GENERATED "
-                        "ALWAYS — merge sources must not supply it"
-                    )
-                if base is not None:
-                    upserts = upserts.join(
-                        base.select(on, idc), on, "left"
-                    )
-                    kept = upserts.filter(F.col(idc).isNotNull())
-                    ins = upserts.filter(
-                        F.col(idc).isNull()
-                    ).drop(idc)
-                else:
-                    kept = None
-                    ins = upserts
-                ins, n_new = _assign_identity(
-                    ins,
-                    idc,
-                    int(ident.get("high", 0)),
-                    list(ident["order"]),
-                    int(ident.get("buckets", 64)),
-                    start=int(ident.get("start", 1)),
-                    step=int(ident.get("step", 1)),
-                )
-                if n_new:
-                    upserts = (
-                        kept.unionByName(ins)
-                        if kept is not None
-                        else ins
-                    )
-                    sm_commit = _advance_watermark(sm, n_new)
-                else:
-                    # ins is empty but already carries the id column
-                    # (schema must match survivors' for the union)
-                    upserts = kept if kept is not None else ins
-        _validate_constraints(upserts, root)  # incoming rows only
-        new_files, new_parts = _write_files_partitioned(
-            survivors.unionByName(upserts), root, pcols, exprs=exprs
-        )
-        change_files = None
-        if cdc:
-            # matched rows live only in touched files of touched
-            # partitions — the feed derivation reads nothing else
-            matched = (
-                base.filter(F.col("_file").isin(touched)).drop("_file")
-                if cand
-                else survivors.limit(0)
-            )
-            feed = _merge_change_feed(matched, source, upserts, on)
-            change_files = _write_files(feed, root, subdir="change")
-        touched_set = set(touched)
-        dv_files, dv_key, dv_new = _live_dv(
-            root, m, removed=touched_set
-        )
+        # files in untouched partitions are never listed, scanned or
+        # joined; a source naming only brand-new partitions (no
+        # candidate) is a pure insert and writes no tombstone
+        base = _scan(spark, m, cand, rewrite=True)
+        arms = _merge_arms(base, source, on, m, root, cdc)
+        if not cand:
+            arms["dv_rows"] = None
         try:
-            # manifest diff ∝ touched partitions (round 10): carried
-            # chunks keep their partition values and stats verbatim;
-            # only the rewritten partitions' chunks re-serialize
-            return commit_delta(
-                root,
-                m,
-                "merge",
-                added=new_files,
-                removed=[by_base[t] for t in touched],
-                partitions=new_parts,
-                stats=commit_stats(root, new_files, []),
-                partition_cols=pcols,
-                change_files=change_files,
-                dv_files=dv_files,
-                dv_key=dv_key,
-                schema_meta=sm_commit,
-            )
+            return _commit_mor(root, m, "merge", on, **arms)
         except CommitConflict:
-            # lost the race — reclaim data AND change files, replay
-            for f in new_files + (change_files or []) + dv_new:
-                try:
-                    os.remove(f)
-                except OSError:
-                    pass
+            pass  # lost the race: replay against the new snapshot
     raise CommitConflict(f"merge lost {max_retries} races in {root}")
 
 
@@ -4145,15 +4117,14 @@ def ensure_partitioned_exercise(
 ) -> str:
     """Stage (idempotent per orders fingerprint) the partitioned-table
     exercise: v1 = orders projection hive-partitioned by order year
-    (~7 partitions, ≥2 files each so partition pruning and file-level
-    CoW pruning are separately observable), v2 = the partition-
-    confined three-arm MERGE touching ONLY year 1995."""
+    (~7 partitions, 2 files each), v2 = the partition-confined
+    three-arm MERGE touching ONLY year 1995."""
     from .formats import SCRATCH, _tag
 
     configure(spark)
     root = os.path.join(SCRATCH, f"acidtable-part-{_tag(sf_dir)}")
     ready = os.path.join(root, "_READY_PART")
-    note = f"acid-part-cdc {_orders_fingerprint(sf_dir)}"
+    note = f"acid-part-cdc-mor {_orders_fingerprint(sf_dir)}"
     try:
         if open(ready).read().strip() == note:
             return root
@@ -4253,14 +4224,13 @@ def q_table_merge_partitioned(
     (merge_table_partitioned).  This query reads the FULL merged
     table; the oracle is the closed form over every year, so a merge
     that leaked into (or failed to preserve) an untouched partition
-    cannot hash-match.  The pytest twin pins the CoW discipline
-    physically: every untouched partition's file paths are IDENTICAL
-    across v1→v2, and only in-partition files holding matched keys
-    were rewritten.
+    cannot hash-match.  The pytest twin pins the discipline
+    physically: every data file of v1 is carried into v2, tombstones
+    name only year-1995 files, and appended files land in 1995 alone.
 
     At 100 TB: a daily upsert against a date-partitioned table does
-    metadata work ∝ touched partitions and data work ∝ their matched
-    files — the manifest diff this protocol produces."""
+    metadata work ∝ touched partitions and data work ∝ the batch —
+    the manifest diff this protocol produces."""
     root = ensure_partitioned_exercise(spark, sf_dir)
     return read_table(spark, root)
 
@@ -4297,15 +4267,26 @@ def q_table_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     lake operator runs hourly to watch ingest balance and partition
     skew.  Oracle-checked against the full recompute of the merged
     table, so a stats block that drifted from a commit (e.g. a merge
-    carrying forward a rewritten file's old count) cannot pass.  Cost
-    at any table size: one manifest read."""
+    carrying forward a rewritten file's old count) cannot pass.  Row
+    counts are physical, so each file's deletion-vector tombstones —
+    one sidecar row per masked row — are subtracted (the
+    deletion-vector cardinality Delta records per file).  Cost at any
+    table size: one manifest read plus the sidecars' ``_file``
+    column."""
+    import pyarrow.parquet as pq
+
     root = ensure_partitioned_exercise(spark, sf_dir)
     m = read_manifest(root)
     stats = m.get("stats", {})
+    masked: dict[str, int] = {}
+    for d in m.get("dv_files", []):
+        for f in pq.read_table(d, columns=["_file"]).column("_file"):
+            masked[f.as_py()] = masked.get(f.as_py(), 0) + 1
     agg: dict[tuple, int] = {}
     for base, vals in m.get("partitions", {}).items():
         key = tuple(vals[c] for c in m["partition_cols"])
-        agg[key] = agg.get(key, 0) + stats[base]["rows"]
+        n = stats[base]["rows"] - masked.get(base, 0)
+        agg[key] = agg.get(key, 0) + n
     rows = [(int(k[0]), n) for k, n in sorted(agg.items())]
     return spark.createDataFrame(rows, "o_year bigint, n_rows bigint")
 
@@ -4322,7 +4303,7 @@ def ensure_dv_exercise(spark: SparkSession, sf_dir: str) -> str:
     configure(spark)
     root = os.path.join(SCRATCH, f"acidtable-dv-{_tag(sf_dir)}")
     ready = os.path.join(root, "_READY_DV")
-    note = f"acid-dv {_orders_fingerprint(sf_dir)}"
+    note = f"acid-dv-mor {_orders_fingerprint(sf_dir)}"
     try:
         if open(ready).read().strip() == note:
             return root
@@ -4385,7 +4366,7 @@ def q_table_dv_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     configure(spark)
     root = os.path.join(SCRATCH, f"acidtable-dvfold-{_tag(sf_dir)}")
     ready = os.path.join(root, "_READY_DVFOLD")
-    note = f"acid-dvfold {_orders_fingerprint(sf_dir)}"
+    note = f"acid-dvfold-mor {_orders_fingerprint(sf_dir)}"
     try:
         ok = open(ready).read().strip() == note
     except OSError:
@@ -4725,7 +4706,7 @@ def ensure_composed_exercise(spark: SparkSession, sf_dir: str) -> str:
     configure(spark)
     root = os.path.join(SCRATCH, f"acidtable-composed-{_tag(sf_dir)}")
     ready = os.path.join(root, "_READY_COMPOSED")
-    note = f"acid-composed {_orders_fingerprint(sf_dir)}"
+    note = f"acid-composed-mor {_orders_fingerprint(sf_dir)}"
     try:
         if open(ready).read().strip() == note:
             return root
@@ -4845,7 +4826,7 @@ def q_table_cdc_partitioned(
     (merge_table_partitioned cdc=True, sharing the flat merge's feed
     derivation — _merge_change_feed), and the feed's derivation cost
     follows the partition discipline: pre-images come only from the
-    touched partition's touched files, never the table.  The oracle
+    touched partition's files, never the table.  The oracle
     is the 1995-confined closed form — a feed row leaked from (or
     lost to) another partition cannot hash-match, completing
     partitioned parity with the unpartitioned CDC family
@@ -5974,9 +5955,9 @@ def update_table(
     """MERGE-ON-READ UPDATE via deletion vectors (round 9) — the
     update half of the MoR story next to :func:`delete_from_table`:
     instead of copy-on-write rewriting every file that holds a
-    matched key (:func:`merge_table`), commit (a) tombstones masking
-    the matched keys' CURRENT rows and (b) the post-image rows as
-    plain appended files — ONE atomic commit, cost O(update batch),
+    matched key, commit (a) tombstones masking the matched keys'
+    CURRENT rows and (b) the post-image rows as plain appended files —
+    ONE atomic commit (:func:`_commit_mor`), cost O(update batch),
     zero data files rewritten.  At 100 TB this is the difference
     between an hourly dimension touch-up that costs seconds and one
     that rewrites the touched fraction of the table; OPTIMIZE later
@@ -6006,11 +5987,6 @@ def update_table(
         m = read_manifest(root)
         cm = m.get("colmap")
         on_p = _colmap_lookup(cm, on) if cm is not None else on
-        if m.get("dv_key") not in (None, on_p):
-            raise ValueError(
-                f"table's deletion vectors are keyed on "
-                f"{m['dv_key']!r}, not {on_p!r}"
-            )
         # write-side schema features (round-10 review fix): a SET on
         # a generated column's DEPENDENCY must cascade — recompute
         # every generated column over the post-image (the SQL surface
@@ -6038,17 +6014,16 @@ def update_table(
             ups = ups.join(
                 base.select(on_p, ident["col"]), on_p, "left"
             )
-        keys = ups.select(on_p)  # feeds semi joins only
         # tombstones for every CURRENT row of a matched key
-        dv_rows = base.join(keys, on_p, "semi").select("_file", on_p)
+        pre = base.join(ups.select(on_p), on_p, "semi")
         # post-images: only MATCHED updates land (SQL UPDATE) — and
         # only those are constraint-validated (review fix: an invalid
         # UNMATCHED row never writes, so it must not abort the batch)
-        matched = ups.join(base.select(on_p), on_p, "semi")
+        matched = _like(
+            ups.join(base.select(on_p), on_p, "semi"), base, cm
+        )
         _validate_constraints(matched, root)
-        new_dv = _write_files(dv_rows, root, subdir="dv")
-        new_files = _write_files(matched, root)
-        change_files = None
+        feed = None
         if cdc:
             # write-side change feed for the MoR update (round 10 —
             # completes the CDC matrix next to merge and DV-delete):
@@ -6057,38 +6032,27 @@ def update_table(
             # written rows; both fall out of relations already in
             # hand, so the marginal cost is one changed-rows-sized
             # write published atomically with the commit
-            pre = (
-                base.join(keys, on_p, "semi")
-                .drop("_file")
-                .withColumn(
-                    "_change_type", F.lit("update_preimage")
+            feed = (
+                pre.drop("_file")
+                .withColumn("_change_type", F.lit("update_preimage"))
+                .unionByName(
+                    matched.withColumn(
+                        "_change_type", F.lit("update_postimage")
+                    )
                 )
             )
-            post = matched.withColumn(
-                "_change_type", F.lit("update_postimage")
-            )
-            change_files = _write_files(
-                pre.unionByName(post), root, subdir="change"
-            )
         try:
-            # O(update batch) commit (round 10): carried chunks keep
-            # their partition values/stats; only the post-image files
-            # serialize, plus the grown DV list
-            return commit_delta(
+            return _commit_mor(
                 root,
                 m,
                 "update",
-                added=new_files,
-                dv_files=m.get("dv_files", []) + new_dv,
-                dv_key=on_p,
-                change_files=change_files,
+                on_p,
+                pre.select("_file", on_p),
+                added=matched,
+                feed=feed,
             )
         except CommitConflict:
-            for f in new_dv + new_files + (change_files or []):
-                try:
-                    os.remove(f)
-                except OSError:
-                    pass
+            pass  # lost the race: replay against the new snapshot
     raise CommitConflict(f"update lost {max_retries} races in {root}")
 
 
@@ -6102,7 +6066,7 @@ def ensure_update_mor_exercise(
     configure(spark)
     root = os.path.join(SCRATCH, f"acidtable-updmor-{_tag(sf_dir)}")
     ready = os.path.join(root, "_READY_UPDMOR")
-    note = f"acid-updmor {_orders_fingerprint(sf_dir)}"
+    note = f"acid-updmor-mor {_orders_fingerprint(sf_dir)}"
     try:
         if open(ready).read().strip() == note:
             return root
@@ -6862,7 +6826,7 @@ def ensure_wap_exercise(spark: SparkSession, sf_dir: str) -> str:
     configure(spark)
     root = os.path.join(SCRATCH, f"acidtable-wap-{_tag(sf_dir)}")
     ready = os.path.join(root, "_READY_WAP")
-    note = f"acid-wap {_orders_fingerprint(sf_dir)}"
+    note = f"acid-wap-mor {_orders_fingerprint(sf_dir)}"
     try:
         if open(ready).read().strip() == note:
             return root
@@ -7423,7 +7387,7 @@ def q_table_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ensure_rowtrack_exercise(spark: SparkSession, sf_dir: str) -> str:
-    """Stage (idempotent): row-tracked create → three-arm CoW MERGE
+    """Stage (idempotent): row-tracked create → three-arm MERGE
     (updates keep ids, deletes retire them, inserts draw fresh) →
     OPTIMIZE (full rewrite; ids must survive the compaction)."""
     from .formats import SCRATCH, _tag
@@ -7431,7 +7395,7 @@ def ensure_rowtrack_exercise(spark: SparkSession, sf_dir: str) -> str:
     configure(spark)
     root = os.path.join(SCRATCH, f"acidtable-rowtrk-{_tag(sf_dir)}")
     ready = os.path.join(root, "_READY_ROWTRK")
-    note = f"acid-rowtrk {_orders_fingerprint(sf_dir)}"
+    note = f"acid-rowtrk-mor {_orders_fingerprint(sf_dir)}"
     try:
         if open(ready).read().strip() == note:
             return root
@@ -7500,7 +7464,7 @@ def q_table_row_tracking(
     """ROW TRACKING (round 10 — Delta's row tracking): every row gets
     a PERMANENT hidden id at first write, and the id survives every
     rewrite of the bytes that hold it — the exercise pushes the table
-    through a three-arm copy-on-write MERGE (updated rows keep their
+    through a three-arm merge-on-read MERGE (updated rows keep their
     ids, deleted rows retire theirs, inserted rows draw fresh ids
     from the watermark) and then a full OPTIMIZE compaction, and the
     oracle states each surviving row's exact id.  Normal reads hide

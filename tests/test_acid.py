@@ -16,6 +16,7 @@ import pytest
 from morphl_model_user_search_intent_spark.io import table
 from morphl_model_user_search_intent_spark.sources.acid import (
     CommitConflict,
+    _colmap_lookup,
     _merge_source,
     commit,
     create_table,
@@ -43,6 +44,19 @@ def _base(spark):
     )
 
 
+def _tombstoned(m):
+    """Basenames of the data files manifest ``m``'s tombstones name."""
+    import pyarrow.parquet as pq
+
+    return {
+        f
+        for d in m.get("dv_files", [])
+        for f in pq.read_table(d, columns=["_file"])
+        .column("_file")
+        .to_pylist()
+    }
+
+
 def _rowset(df):
     return {
         (r.o_orderkey, r.o_orderpriority, round(r.price, 2))
@@ -51,9 +65,9 @@ def _rowset(df):
 
 
 def test_merge_semantics_and_cow_file_pruning(spark, tmp_path):
-    """All three MERGE arms land, and the copy-on-write actually
-    prunes: data files with no matched key are carried BY REFERENCE
-    into the new manifest, not rewritten."""
+    """All three MERGE arms land, and no data file is rewritten: the
+    merge-on-read commit carries every file BY REFERENCE — the ones
+    holding matched keys too (their rows are masked, not copied)."""
     import pyspark.sql.functions as F
 
     root = str(tmp_path / "t")
@@ -76,8 +90,7 @@ def test_merge_semantics_and_cow_file_pruning(spark, tmp_path):
     v2 = merge_table(spark, root, src, "o_orderkey")
     assert v2 == 2
     m2 = read_manifest(root, 2)
-    carried = set(m1["files"]) & set(m2["files"])
-    assert carried, "CoW rewrote every file — pruning failed"
+    assert set(m1["files"]) <= set(m2["files"]), "a data file was removed"
 
     # semantics: exact expected rowset from the same derivation
     o = base
@@ -197,8 +210,11 @@ def test_snapshot_isolation_across_processes(spark, tmp_path):
 
 def test_time_travel_and_vacuum_retention(spark, tmp_path):
     """Every retained version reads back exactly; vacuum(keep_last=2)
-    deletes version 1's exclusive files and manifest, after which time
-    travel to it fails loudly while the kept versions still read."""
+    deletes the retired versions' exclusive files and manifests, after
+    which time travel to them fails loudly while the kept versions
+    still read.  A merge-on-read merge carries every data file, so
+    only the OPTIMIZE between the merges leaves files exclusive to the
+    versions before it."""
     import pyspark.sql.functions as F
 
     root = str(tmp_path / "t")
@@ -207,27 +223,34 @@ def test_time_travel_and_vacuum_retention(spark, tmp_path):
     v1 = _rowset(read_table(spark, root, 1))
     merge_table(spark, root, _merge_source(spark, SF_DIR), "o_orderkey")
     v2 = _rowset(read_table(spark, root, 2))
-    # third version: delete everything below the median key
+    optimize_table(spark, root, target_files=1)  # v3 folds the mask
+    # fourth version: delete everything below the median key
     med = base.agg(F.expr("percentile(o_orderkey, 0.5)")).collect()[0][0]
-    src3 = read_table(spark, root, 2).select(
+    src4 = read_table(spark, root, 3).select(
         "o_orderkey",
         "o_orderpriority",
         "price",
         (F.col("o_orderkey") < med).alias("_delete"),
     ).filter(F.col("_delete"))
-    merge_table(spark, root, src3, "o_orderkey")
-    assert list_versions(root) == [1, 2, 3]
+    merge_table(spark, root, src4, "o_orderkey")
+    assert list_versions(root) == [1, 2, 3, 4]
     assert _rowset(read_table(spark, root, 1)) == v1  # stable history
+    retired = (
+        set(read_manifest(root, 1)["files"])
+        | set(read_manifest(root, 2)["files"])
+        | set(read_manifest(root, 2)["dv_files"])
+    )
 
     removed = vacuum(root, keep_last=2)
     assert removed, "vacuum deleted nothing"
+    assert set(removed) <= retired
     assert all(not os.path.exists(f) for f in removed)
-    assert list_versions(root) == [2, 3]
+    assert list_versions(root) == [3, 4]
     with pytest.raises(FileNotFoundError):
         read_table(spark, root, 1)
-    assert _rowset(read_table(spark, root, 2)) == v2
-    n3 = read_table(spark, root, 3).count()
-    assert 0 < n3 < len(v2)
+    assert _rowset(read_table(spark, root, 3)) == v2
+    n4 = read_table(spark, root, 4).count()
+    assert 0 < n4 < len(v2)
 
 
 def test_random_commit_sequences_match_a_dict_model(spark, tmp_path):
@@ -897,10 +920,10 @@ def test_partitioned_create_records_values_and_prunes(spark, tmp_path):
 def test_partitioned_merge_confined_to_touched_partitions(
     spark, tmp_path
 ):
-    """A MERGE whose source touches only year 1995 carries every other
-    partition's files BY IDENTICAL PATH into the new manifest, rewrites
-    only in-partition files holding matched keys, and carries their
-    partition values + stats verbatim."""
+    """A MERGE whose source touches only year 1995 carries every
+    partition's files BY IDENTICAL PATH into the new manifest with
+    their partition values + stats verbatim, tombstones only 1995
+    files, and writes files into 1995 alone."""
     import pyspark.sql.functions as F
 
     from morphl_model_user_search_intent_spark.sources.acid import (
@@ -930,16 +953,19 @@ def test_partitioned_merge_confined_to_touched_partitions(
         b = os.path.basename(f)
         assert m2["partitions"][b] == m1["partitions"][b]
         assert m2["stats"][b] == m1["stats"][b]
-    # every 1995 file held a matched key (every key%7/13/500 family is
-    # dense at this SF with 2 files), so all were rewritten
+    # merge-on-read: no file leaves the manifest; the tombstones name
+    # only 1995 files (every 1995 file holds a matched key at this SF
+    # with 2 files), and the appended upserts land in 1995 alone — no
+    # file is written into an untouched partition
+    assert set(m1["files"]) <= set(m2["files"])
     in1995_old = {
-        f
+        os.path.basename(f)
         for f in m1["files"]
         if m1["partitions"][os.path.basename(f)]["o_year"] == 1995
     }
-    assert not (in1995_old & set(m2["files"]))
+    assert _tombstoned(m2) == in1995_old
     new = set(m2["files"]) - set(m1["files"])
-    assert all(
+    assert new and all(
         m2["partitions"][os.path.basename(f)]["o_year"] == 1995
         for f in new
     )
@@ -1790,7 +1816,9 @@ def test_random_sequences_with_dv_and_optimize_match_model(
     dict model at every retained version — the interplay coverage the
     single-op exhibits can't give (e.g. a merge after a DV delete
     re-inserting a masked key, an optimize folding mid-history,
-    a delete whose tombstones land on CoW-rewritten files)."""
+    a delete whose tombstones land on a merge's appended files).
+    Every merge must remove no data file and add one sidecar holding
+    one tombstone per matched current row."""
     import random
 
     import pyspark.sql.functions as F
@@ -1803,6 +1831,8 @@ def test_random_sequences_with_dv_and_optimize_match_model(
         optimize_table,
         read_table,
     )
+
+    import pyarrow.parquet as pq
 
     rng = random.Random(20260816)
     root = str(tmp_path / "t")
@@ -1821,8 +1851,12 @@ def test_random_sequences_with_dv_and_optimize_match_model(
     history = {1: dict(model)}
 
     next_key = 1000
-    for _ in range(8):
-        op = rng.choice(["append", "merge", "delete", "optimize"])
+    # merge / delete / merge / optimize first, then random ops
+    ops = ["merge", "delete", "merge", "optimize"]
+    for op in ops + [
+        rng.choice(["append", "merge", "delete", "optimize"])
+        for _ in range(6)
+    ]:
         if op == "append":
             rows = [
                 (next_key + i, "NEW", float(next_key + i))
@@ -1835,21 +1869,36 @@ def test_random_sequences_with_dv_and_optimize_match_model(
         elif op == "merge":
             keys = sorted(model)
             upd = rng.sample(keys, min(15, len(keys)))
+            gone = rng.sample(sorted(set(keys) - set(upd)), 3)
             ins = [(next_key + i, "INS", 1.0) for i in range(4)]
             next_key += 100
-            src_rows = [
-                (k, "UPD", model[k][1] + 1.0, False) for k in upd
-            ] + [(k, p, v2, False) for k, p, v2 in ins]
+            src_rows = (
+                [(k, "UPD", model[k][1] + 1.0, False) for k in upd]
+                + [(k, p, v2, False) for k, p, v2 in ins]
+                + [(k, "DEL", 0.0, True) for k in gone]
+            )
             src = spark.createDataFrame(
                 src_rows,
                 "o_orderkey bigint, o_orderpriority string, "
                 "price double, _delete boolean",
             )
+            before = read_manifest(root)
             v = merge_table(spark, root, src, "o_orderkey")
+            after = read_manifest(root)
+            # merge-on-read: no data file leaves the manifest, and the
+            # commit's one new sidecar holds one tombstone per matched
+            # current row (updated + deleted keys)
+            assert set(before["files"]) <= set(after["files"])
+            (side,) = set(after["dv_files"]) - set(
+                before.get("dv_files", [])
+            )
+            assert pq.read_metadata(side).num_rows == len(upd) + len(gone)
             for k in upd:
                 model[k] = ("UPD", model[k][1] + 1.0)
             for k, p, val in ins:
                 model[k] = (p, val)
+            for k in gone:
+                del model[k]
         elif op == "delete":
             keys = sorted(model)
             dele = rng.sample(keys, min(12, len(keys)))
@@ -1875,6 +1924,158 @@ def test_random_sequences_with_dv_and_optimize_match_model(
             for r in read_table(spark, root, v).collect()
         }
         assert got == history[v], f"version {v} diverged"
+
+
+def test_merge_on_read_tombstones_matched_rows_and_folds(spark, tmp_path):
+    """Merge-on-read physics: a merge removes no data file and writes
+    ONE sidecar holding one tombstone per matched current row (updated
+    and deleted keys alike, naming only pre-existing files); OPTIMIZE
+    folds the mask — dv_fraction back to 0, content and change feed
+    unchanged — and maybe_fold_dv fires only once the backlog passes
+    its threshold."""
+    import pyarrow.parquet as pq
+    import pyspark.sql.functions as F
+
+    from morphl_model_user_search_intent_spark.sources.acid import (
+        dv_fraction,
+        maybe_fold_dv,
+    )
+
+    root = str(tmp_path / "t")
+    base = _base(spark)
+    create_table(spark, root, base.repartition(3))
+    m1 = read_manifest(root)
+    merge_table(spark, root, _merge_source(spark, SF_DIR), "o_orderkey")
+    m2 = read_manifest(root)
+    assert set(m1["files"]) < set(m2["files"])
+    assert m2["metrics"]["n_removed"] == 0
+    (side,) = m2["dv_files"]
+    matched = base.filter(
+        (F.col("o_orderkey") % 7 == 0) | (F.col("o_orderkey") % 13 == 0)
+    ).count()
+    assert pq.read_metadata(side).num_rows == matched
+    assert _tombstoned(m2) <= {os.path.basename(f) for f in m1["files"]}
+    merged = _rowset(read_table(spark, root))
+
+    frac = dv_fraction(root)
+    assert frac > 0
+    assert maybe_fold_dv(spark, root, threshold=frac) is None
+    assert maybe_fold_dv(spark, root, threshold=frac / 2) == 3
+    assert dv_fraction(root) == 0.0
+    assert not read_manifest(root).get("dv_files")
+    assert _rowset(read_table(spark, root)) == merged
+    # the fold changes no row: its change feed reads the removed files
+    # through the parent's mask, so masked pre-images are no change
+    assert table_changes(spark, root, 3, "o_orderkey").isEmpty()
+
+
+def test_merge_refuses_table_with_dvs_on_another_key(spark, tmp_path):
+    """Tombstones are keyed on the business key: a merge on a table
+    whose deletion vectors are keyed on another column raises the same
+    ValueError delete and update raise — before writing any file."""
+    import pyspark.sql.functions as F
+
+    from morphl_model_user_search_intent_spark.sources.acid import (
+        delete_from_table,
+    )
+
+    root = str(tmp_path / "t")
+    base = _base(spark).limit(200)
+    create_table(spark, root, base)
+    delete_from_table(
+        spark,
+        root,
+        base.filter(F.col("o_orderkey") % 2 == 0).select(
+            "o_orderpriority"
+        ).limit(1),
+        on="o_orderpriority",
+    )
+    assert read_manifest(root)["dv_key"] == "o_orderpriority"
+    v = latest_version(root)
+
+    def listing():
+        return {
+            sub: sorted(os.listdir(os.path.join(root, sub)))
+            for sub in ("data", "dv")
+        }
+
+    before = listing()
+    with pytest.raises(ValueError, match="keyed on 'o_orderpriority'"):
+        merge_table(
+            spark, root, _merge_source(spark, SF_DIR), "o_orderkey"
+        )
+    assert latest_version(root) == v
+    assert listing() == before
+
+
+def test_merge_on_mixed_column_map_keeps_readded_column(spark, tmp_path):
+    """A merge on a HETEROGENEOUS column-mapped table (a column dropped
+    and re-added, so older files lack the re-added physical) appends
+    rows carrying the re-added column, and reads — before and after
+    OPTIMIZE re-homogenizes the files — keep its values: merged and
+    appended rows show theirs, untouched old rows read NULL."""
+    from morphl_model_user_search_intent_spark.sources.acid import (
+        append_table,
+        drop_column,
+    )
+
+    root = str(tmp_path / "t")
+    rows = [
+        (r.o_orderkey, r.o_orderpriority, r.price)
+        for r in _base(spark).limit(300).collect()
+    ]
+    create_table(
+        spark,
+        root,
+        spark.createDataFrame(
+            rows, "o_orderkey bigint, o_orderpriority string, price double"
+        ).repartition(2),
+    )
+    drop_column(spark, root, "o_orderpriority")
+    appended = [(k + 5_000_000, p, "NEW") for k, _, p in rows[:20]]
+    append_table(
+        spark,
+        root,
+        spark.createDataFrame(
+            appended, "o_orderkey bigint, price double, o_orderpriority string"
+        ),
+        allow_evolution=True,
+    )
+    cm = read_manifest(root)["colmap"]
+    assert cm["mixed"] is True
+    assert _colmap_lookup(cm, "o_orderpriority") != "o_orderpriority"
+
+    ks = sorted(k for k, _, _ in rows)
+    upd, gone, re_k = ks[:5], ks[5], appended[0][0]
+    src = spark.createDataFrame(
+        [(k, 1.0, "MERGED", False) for k in upd]
+        + [
+            (re_k, 2.0, "REMERGED", False),
+            (9_000_000, 3.0, "INS", False),
+            (gone, 0.0, "x", True),
+        ],
+        "o_orderkey bigint, price double, o_orderpriority string, "
+        "_delete boolean",
+    )
+    merge_table(spark, root, src, "o_orderkey")
+
+    want = {k: (p, None) for k, _, p in rows}
+    want.update({k: (p, "NEW") for k, p, _ in appended})
+    want.update({k: (1.0, "MERGED") for k in upd})
+    want.update({re_k: (2.0, "REMERGED"), 9_000_000: (3.0, "INS")})
+    del want[gone]
+
+    def got():
+        df = read_table(spark, root)
+        assert df.columns == ["o_orderkey", "price", "o_orderpriority"]
+        return {
+            r.o_orderkey: (r.price, r.o_orderpriority) for r in df.collect()
+        }
+
+    assert got() == want
+    optimize_table(spark, root, target_files=1)
+    assert read_manifest(root)["colmap"]["mixed"] is False
+    assert got() == want
 
 
 def test_drop_partition_metadata_only_and_vacuum_reclaims(
@@ -3419,8 +3620,8 @@ def test_operation_metrics_across_lifecycle(spark, tmp_path):
     assert hist["create"].n_added > 0
     assert hist["create"].n_removed == 0
     assert hist["append"].n_added > 0 and hist["append"].n_removed == 0
-    # CoW merge rewrites at least one touched file and adds new ones
-    assert hist["merge"].n_added > 0 and hist["merge"].n_removed > 0
+    # MoR merge: appends its upserts and removes no file
+    assert hist["merge"].n_added > 0 and hist["merge"].n_removed == 0
     # MoR delete: zero file churn — the whole point
     assert hist["delete"].n_added == 0
     assert hist["delete"].n_removed == 0
@@ -4905,7 +5106,8 @@ def test_pinned_schema_equals_inference_on_every_table_shape(
     plain = str(tmp_path / "plain")
     create_table(spark, plain, base.repartition(3))
     merge_table(spark, plain, _merge_source(spark, SF_DIR), "o_orderkey")
-    assert _pin_matches_inference(spark, plain) == ["data"]
+    # the merge's tombstone sidecar is pinned like the data files
+    assert _pin_matches_inference(spark, plain) == ["data", "dv"]
 
     mapped = str(tmp_path / "mapped")
     create_table(spark, mapped, base.repartition(2))
@@ -5032,5 +5234,6 @@ def test_snapshot_reads_launch_no_job_and_writes_stay_capped(
             spark, root, _merge_source(spark, SF_DIR), "o_orderkey"
         ),
     )
-    # touched-file collect + rewrite (+ broadcasts); 11 before
-    assert len(jobs) <= 7, f"merge ran {len(jobs)} jobs"
+    # tombstone write + upsert write (+ broadcasts); 7 when the merge
+    # rewrote every touched file, 11 with inference
+    assert len(jobs) <= 4, f"merge ran {len(jobs)} jobs"

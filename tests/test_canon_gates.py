@@ -136,33 +136,22 @@ _COLLECT_WHITELIST: dict[str, set[str]] = {
     # sample) to choose monolithic vs chunked sessionization — the
     # profile-then-plan step has to land on the driver by design.
     "operators/events.py": {"max_key_share"},
-    # ACID table layer (sources/acid.py): copy-on-write MERGE plans
-    # its touched-file set on the driver — a DISTINCT over file
-    # paths, bounded by the snapshot's file count (metadata scale,
-    # the same driver-side planning step Delta/Iceberg perform).
-    # Round 8 adds the partitioned/zorder planning steps, all
-    # metadata- or constant-bounded:
-    #   _source_partitions — the merge source's distinct partition
-    #     tuples (≤ partition count);
-    #   merge_table_partitioned — the touched-file list within the
-    #     pruned partitions (≤ their file count);
+    # ACID table layer (sources/acid.py): the planning steps that land
+    # on the driver, all metadata- or constant-bounded (merge-on-read
+    # MERGE and table_changes collect nothing — the tombstones name
+    # the files):
+    #   _source_partitions — the partitioned merge source's distinct
+    #     partition tuples (≤ partition count);
     #   optimize_table_zorder / q_table_zorder /
     #   q_table_scan_composed — one 1-row min/max aggregate each
-    #     (normalization spans and scale-relative box bounds);
-    #   table_changes — the DV-diff branch's touched-file list
-    #     (DISTINCT file basenames named by the commit's new
-    #     tombstones, bounded by the snapshot's file count — the
-    #     same metadata-scale planning step as merge_table's).
+    #     (normalization spans and scale-relative box bounds).
     "sources/acid.py": {
-        "merge_table",
         "_source_partitions",
-        "merge_table_partitioned",
         "optimize_table_zorder",
         "q_table_zorder",
         "q_table_scan_composed",
         "optimize_table_zorder_partitioned",
         "q_table_zorder_partitioned",
-        "table_changes",
         # _validate_constraints: LIMIT-3 example rows for the
         # ConstraintViolation message — constant-bounded by the limit
         "_validate_constraints",

@@ -314,12 +314,22 @@ def test_shuffle_hash_hint_respected(spark):
 
 
 def test_table_merge_read_is_pure_pinned_scan(spark):
-    """The committed ACID table read must be ONE vectorized parquet
-    scan of manifest-pinned files — no join, no exchange, no Python:
-    the table layer adds zero read-path overhead."""
+    """The committed ACID table read after a merge-on-read MERGE is
+    the manifest-pinned data scan masked by ONE broadcast anti join
+    against the merge's tombstone sidecar scan — no hash-partitioned
+    exchange, no other join, no Python: the table layer's read-path
+    overhead is the broadcast of one batch-sized sidecar."""
+    import re
+
     plan = explain_str(_df(spark, "q_table_merge"), "simple")
-    assert plan.count("Scan parquet") == 1
-    for bad in ("Exchange", "Join", "BatchEvalPython", "ArrowEvalPython"):
+    assert plan.count("Scan parquet") == 2  # data + sidecars
+    assert len(re.findall(r"BroadcastHashJoin .*LeftAnti", plan)) == 1
+    assert plan.count("Join") == 1
+    for bad in (
+        "Exchange hashpartitioning",
+        "BatchEvalPython",
+        "ArrowEvalPython",
+    ):
         assert bad not in plan, bad
     # and the scan reads the acid data files, not the source table
     assert "acidtable-" in explain_str(_df(spark, "q_table_merge"))
@@ -367,13 +377,16 @@ def test_filtered_serve_prefilters_before_scoring(spark):
 
 
 def test_table_cdc_reads_only_changed_files(spark, tmp_path):
-    """table_changes' scale contract: the feed is built from the
-    commit's removed+added files only — the scan must NOT read the
-    carried (untouched) data files of either snapshot.  Needs a
-    range-partitioned table so the merge provably carries files (the
-    hash-partitioned driver exercise touches all 4 at sf0.001)."""
+    """table_changes' scale contract: the feed of a merge-on-read
+    MERGE is built from the commit's appended data files, the files
+    its new tombstones name, and its new sidecars only — a carried
+    file no tombstone names is never scanned.  Needs a
+    range-partitioned table so the merge's keys provably miss most
+    files (the hash-partitioned driver exercise hits all 4 at
+    sf0.001)."""
     import os
 
+    import pyarrow.parquet as pq
     import pyspark.sql.functions as F
 
     from morphl_model_user_search_intent_spark.io import table
@@ -400,15 +413,30 @@ def test_table_cdc_reads_only_changed_files(spark, tmp_path):
     )
     merge_table(spark, root, src, "o_orderkey")
     m1, m2 = read_manifest(root, 1), read_manifest(root, 2)
-    carried = set(m1["files"]) & set(m2["files"])
-    assert carried  # the range merge must carry most files
-    changed = (set(m1["files"]) | set(m2["files"])) - carried
-    assert changed
+    assert set(m1["files"]) < set(m2["files"])  # nothing removed
+    added = {
+        os.path.basename(f) for f in set(m2["files"]) - set(m1["files"])
+    }
+    sidecars = {os.path.basename(f) for f in m2["dv_files"]}
+    named = {
+        f
+        for d in m2["dv_files"]
+        for f in pq.read_table(d, columns=["_file"])
+        .column("_file")
+        .to_pylist()
+    }
+    assert added and named
+    # the range merge's keys sit in the top sixth: most files carry
+    # with no tombstone
+    assert len(named) < len(m1["files"]) - 1
     feed = table_changes(spark, root, version=2, key="o_orderkey")
     scanned = {
         os.path.basename(f.replace("file:", "")) for f in feed.inputFiles()
     }
-    assert scanned == {os.path.basename(f) for f in changed}
+    assert scanned == added | named | sidecars
+    # and the feed reads as update pairs, not delete + insert
+    kinds = {r[0] for r in feed.select("_change_type").distinct().collect()}
+    assert kinds == {"update_preimage", "update_postimage"}
 
 
 def test_table_skipping_prunes_files_by_zone_maps(spark):
@@ -449,18 +477,28 @@ def test_table_skipping_prunes_files_by_zone_maps(spark):
     )
     assert pruned.count() == full
 
-    # losslessness: strip one kept file's stats -> it must be scanned
-    victim = sorted(m["stats"])[0]
-    stats2 = {k: v for k, v in m["stats"].items() if k != victim}
-    m2 = dict(m, stats=stats2)
+    # losslessness: strip one PRUNED file's stats -> it must be scanned.
+    # The stats live in the manifest's chunk files, so the edit goes
+    # there (the original bytes are restored afterwards)
+    victim = sorted(all_files - scanned)[0]
     import json
 
     from morphl_model_user_search_intent_spark.sources.acid import (
-        _manifest_path,
+        _chunks_dir,
+        _read_chunk,
     )
 
-    with open(_manifest_path(root, 1), "w") as fh:
-        json.dump(m2, fh)
+    (chunk,) = [
+        os.path.join(_chunks_dir(root), d["id"] + ".json")
+        for d in m["chunks"]
+        if victim in _read_chunk(root, d["id"])["stats"]
+    ]
+    with open(chunk) as fh:
+        orig = fh.read()
+    stripped = json.loads(orig)
+    del stripped["stats"][victim]
+    with open(chunk, "w") as fh:
+        json.dump(stripped, fh)
     try:
         again = scan_table(spark, root, "o_orderkey", 1000, 2000)
         scanned2 = {
@@ -470,5 +508,5 @@ def test_table_skipping_prunes_files_by_zone_maps(spark):
         assert victim in scanned2  # no stats -> conservatively kept
         assert again.count() == full
     finally:
-        with open(_manifest_path(root, 1), "w") as fh:
-            json.dump(m, fh)
+        with open(chunk, "w") as fh:
+            fh.write(orig)

@@ -9,14 +9,12 @@ oracles; scale notes inline per operator.
 
 from __future__ import annotations
 
-from typing import Optional
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..io import spread, table
 from ..registry import register
-from ..text.analysis import _H32, tokens
+from ..text.analysis import _H32, ngrams, tokens
 from .dedup import _PAIRS_CTE as _DEDUP_PAIRS_CTE
 
 # Decontamination shingle width — 13 tokens is the published standard
@@ -35,25 +33,6 @@ _SH13 = """
                                  i, i + 12), ' ')))) AS g
       FROM documents
 """
-
-
-def _shingles13(toks: Optional[F.Column] = None) -> F.Column:
-    """Distinct 13-token shingles; empty array below 13 tokens (guard
-    needed because ``sequence(1, n)`` with n ≤ 0 runs descending).
-
-    Pass a pre-tokenized array column when possible: a ``tokens()``
-    expression referenced inside the transform lambda is re-evaluated
-    per element (O(k²) per doc)."""
-    t = tokens() if toks is None else toks
-    return F.when(
-        F.size(t) >= _NGRAM,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.size(t) - (_NGRAM - 1)),
-                lambda i: F.concat_ws(" ", F.slice(t, i, _NGRAM)),
-            )
-        ),
-    ).otherwise(F.expr("CAST(array() AS ARRAY<STRING>)"))
 
 
 @register(
@@ -90,13 +69,14 @@ def q_text_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same plan, 8-byte keys instead of ~80-byte strings); kept as the
     raw string here so the oracle is byte-exact.
     """
-    # Round-11: tokenize hoisted (2.2 → 1.15 s at sf0.1; see
-    # _shingles13's docstring)
     d = table(spark, sf_dir, "documents").select(
         "doc_id", tokens().alias("toks")
     )
     sh = d.select(
-        "doc_id", F.explode(_shingles13(F.col("toks"))).alias("g")
+        "doc_id",
+        F.explode(F.array_distinct(ngrams(F.col("toks"), _NGRAM))).alias(
+            "g"
+        ),
     )
     bench = sh.filter(F.col("doc_id") % _BENCH_MOD == 0)
     train = sh.filter(F.col("doc_id") % _BENCH_MOD != 0)

@@ -21,14 +21,13 @@ embedding-cosine near-dup is q_sim_threshold in llm/similarity.py.
 
 from __future__ import annotations
 
-import pandas as pd
 import pyspark
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import spread, table
 from ..registry import register
-from ..text.analysis import tokens
+from ..text.analysis import ngrams, tokens
 
 _JACCARD_TAU = 0.5
 
@@ -71,35 +70,11 @@ _PAIRS_CTE = f"""
 """
 
 
-def _shingles(n: int = 3) -> F.Column:
-    """Distinct word n-gram shingles of the trimmed text (array form;
-    for the exploded row form used by the join pipelines prefer
-    `_shingle_rows` — same output, Arrow-vectorized)."""
-    t = tokens()
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.size(t) - (n - 1)),
-            lambda i: F.concat_ws(
-                " ",
-                *[F.element_at(t, i + off) for off in range(n)],
-            ),
-        )
-    )
-
-
 def _shingle_rows(
     spark: SparkSession, sf_dir: str, n: int = 3
 ) -> DataFrame:
-    """(doc_id, shingle) rows — ``explode(_shingles())`` computed in
-    one Arrow batch pass instead of the interpreted higher-order
-    transform (measured 3.4 s per evaluation at sf0.1, and the
-    inverted-index pipelines evaluate the shingle set 2-4 times per
-    query: both sides of the self-join, the size table, the signature
-    pass).  Tokenization matches `tokens()` exactly: trim, split on
-    SINGLE spaces (empty tokens from runs survive), first-seen
-    distinct per doc; docs shorter than ``n`` tokens yield no rows,
-    which is also what the DuckDB oracle's ``range(1, len-n+2)``
-    produces."""
+    """(doc_id, shingle) rows of the ``documents`` table — see
+    `shingle_rows_of`."""
 
     # NOTE (round 10): deliberately NOT spread() here — measured A/B
     # at sf0.01 and sf0.1, fanning the scan out before this kernel
@@ -107,67 +82,26 @@ def _shingle_rows(
     # q_dedup_clusters 1.7→2.5 s at sf0.01, minhash_portable 4.2→5.7 s):
     # the exploded shingle rows are shuffled by the inverted-index
     # self-join immediately after, so the extra exchange buys nothing
-    # the join's own exchange doesn't already provide.  _shingle_arrays
-    # (whose consumers keep per-doc arrays un-shuffled) keeps it.
+    # the join's own exchange doesn't already provide.  q_dedup_minhash
+    # (whose per-doc arrays stay un-shuffled) keeps it.
     d = table(spark, sf_dir, "documents").select("doc_id", "text")
     return shingle_rows_of(d, n)
 
 
 def shingle_rows_of(d: DataFrame, n: int = 3) -> DataFrame:
-    """`_shingle_rows` over an arbitrary (doc_id, text) frame — the
-    streaming dedup path shingles each micro-batch with the identical
-    kernel, so stream and batch signatures agree byte-for-byte."""
-
-    def gen(batches):
-        for pdf in batches:
-            ids, shingles = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                toks = text.strip(' ').split(" ")
-                seen = dict.fromkeys(
-                    " ".join(toks[i : i + n])
-                    for i in range(len(toks) - n + 1)
-                )
-                ids.extend([doc_id] * len(seen))
-                shingles.extend(seen)
-            yield pd.DataFrame({"doc_id": ids, "shingle": shingles})
-
-    return d.select("doc_id", "text").mapInPandas(
-        gen, "doc_id bigint, shingle string"
+    """(doc_id, shingle) rows of an arbitrary (doc_id, text) frame:
+    the distinct word n-grams of each document's `tokens()`, one row
+    each.  Docs shorter than ``n`` tokens yield no rows, which is also
+    what the DuckDB oracles' ``range(1, len-n+2)`` produces.  The
+    streaming dedup path shingles each micro-batch with this same
+    function, so stream and batch signatures agree byte-for-byte."""
+    t = d.select("doc_id", tokens().alias("toks"))
+    return t.select(
+        "doc_id",
+        F.explode(F.array_distinct(ngrams(F.col("toks"), n))).alias(
+            "shingle"
+        ),
     )
-
-
-def _shingle_arrays(
-    spark: SparkSession, sf_dir: str, n: int = 3
-) -> DataFrame:
-    """(doc_id, sh: array<string>) — `_shingles()` in array form via
-    one Arrow pass, for consumers that need the per-doc shingle SET
-    as a column (HashingTF input).  Same tokenization and first-seen
-    distinct order as `_shingles()`."""
-
-    def gen(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "sh": [
-                        list(
-                            dict.fromkeys(
-                                " ".join(toks[i : i + n])
-                                for i in range(len(toks) - n + 1)
-                            )
-                        )
-                        for toks in (
-                            t.strip(' ').split(" ") for t in pdf["text"]
-                        )
-                    ],
-                }
-            )
-
-    d = spread(
-        table(spark, sf_dir, "documents").select("doc_id", "text"),
-        spark, sf_dir, "documents",
-    )
-    return d.mapInPandas(gen, "doc_id bigint, sh array<string>")
 
 
 def jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -387,9 +321,19 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.ml.feature import HashingTF, MinHashLSH
 
-    d = _shingle_arrays(spark, sf_dir)
-    # guard: MinHash requires ≥1 non-zero entry
-    d = d.filter(F.size("sh") > 0)
+    d = spread(
+        table(spark, sf_dir, "documents").select("doc_id", "text"),
+        spark, sf_dir, "documents",
+    ).select("doc_id", tokens().alias("toks"))
+    # guard: MinHash requires ≥1 non-zero entry, i.e. ≥1 trigram.  The
+    # lazy checkpoint lets both sides of the LSH self-join read one
+    # computed copy, and stops the join's inferred non-empty-hashes
+    # filter from being pushed below the tokenizer, where the split
+    # lands inside the n-gram lambda (sf0.1 warm on 4 cores: 3.9–5.1 s
+    # without it, 2.2–2.4 s with it).
+    d = d.filter(F.size("toks") >= 3).select(
+        "doc_id", F.array_distinct(ngrams(F.col("toks"), 3)).alias("sh")
+    ).localCheckpoint(eager=False)
     tf = HashingTF(
         inputCol="sh", outputCol="features", numFeatures=1 << 20, binary=True
     )
@@ -680,7 +624,7 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     share their scale story — and their costs — exactly.
     """
     # Round-10 (guide §2.4): the size aggregate is a broadcast subtree
-    # that re-ran the Python shingle kernel alongside the self-join
+    # that re-ran the shingle scan and explode alongside the self-join
     # sides — checkpoint the shingle frame once for all three
     # consumers (same move as q_dedup_minhash_portable's sh/sig).
     sh = _shingle_rows(spark, sf_dir).localCheckpoint()
@@ -887,11 +831,15 @@ def q_dedup_minhash_portable(
     are deterministic and identical in both engines, which is all
     LSH needs (they only ever ADD candidates).
     """
-    # Round-10 (the q_dedup_eval batch-5 fix, applied here): sh feeds
-    # the signature pass, the size table and BOTH sides of the exact
-    # self-join, and sig feeds bands + both agreement sides — through
-    # different exchanges, so the Python shingle kernel executed ~3×
-    # per run.  Checkpoint each once.
+    # sh feeds the signature pass and, once the detected pairs are
+    # known, the size table and BOTH sides of the exact self-join.
+    # Its checkpoint costs one eager job per build, yet dropping it is
+    # slower: without it the exact side recomputes the scan and the
+    # n-gram explode (corpus_dedup seed 1, 3 alternating pairs on a
+    # 4-core host: ops_per_s median 1.13 with it, 0.87 without, losing
+    # 3/3, while exec.jobs fell 8 → 7.67 per op).  sig feeds bands +
+    # both agreement sides through different exchanges; checkpoint it
+    # once too.
     sh = _shingle_rows(spark, sf_dir).localCheckpoint()
     sig = _portable_sig(spark, sh).localCheckpoint()
     bands = bands_of(sig)
@@ -1141,26 +1089,12 @@ def q_dedup_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     recovered only for the reported top-k.  Total ordering
     (n_docs, ngram) makes the LIMIT boundary deterministic.
     """
-    # Round-11: tokenize hoisted into its own projection — the split
-    # inside the transform lambda re-evaluated per element (O(k²) per
-    # doc).  Measured 2.3 → 1.25 s at sf0.1, identical top-20.
     d = table(spark, sf_dir, "documents").select(
         "doc_id", tokens().alias("toks")
     )
-    t = F.col("toks")
     sh = d.select(
         "doc_id",
-        F.explode(
-            F.when(
-                F.size(t) >= 8,
-                F.array_distinct(
-                    F.transform(
-                        F.sequence(F.lit(1), F.size(t) - 7),
-                        lambda i: F.concat_ws(" ", F.slice(t, i, 8)),
-                    )
-                ),
-            ).otherwise(F.expr("CAST(array() AS ARRAY<STRING>)"))
-        ).alias("g"),
+        F.explode(F.array_distinct(ngrams(F.col("toks"), 8))).alias("g"),
     )
     dup = (
         sh.groupBy("g")
@@ -1291,7 +1225,7 @@ def q_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     # Round-10 (batch 5): checkpoint the SHARED upstream frames too —
     # `sh` feeds both the detector and the exact-truth pipelines
-    # (separate actions → the Python shingle kernel ran twice), and
+    # (separate actions → the shingle explode ran twice), and
     # `sig` appears three times inside the detector plan (bands, sa,
     # sb).  Measured at sf0.1: 7.6 → 5.3 s warm, identical metrics.
     sh = shingle_rows_of(d).localCheckpoint()
@@ -1447,21 +1381,11 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-node; the shingle-grouping formulation is its
     shuffle-native equivalent.
     """
-    # Round-11: tokenize hoisted into its own projection (the split
-    # inside the lambda re-evaluated per element, O(k²) per doc).
-    # Measured 3.1 → 1.66 s at sf0.1, identical top-20.
     d = table(spark, sf_dir, "documents").select(
         "doc_id", tokens().alias("toks")
     )
-    t = F.col("toks")
-    n = F.size(t)
-    grams = F.transform(
-        F.sequence(F.lit(1), n - 7),
-        lambda i: F.concat_ws(" ", F.slice(t, i, 8)),
-    )
     g = (
-        d.filter(n >= 8)
-        .select("doc_id", F.explode(grams).alias("gram"))
+        d.select("doc_id", F.explode(ngrams(F.col("toks"), 8)).alias("gram"))
         # Round-10: materialize the positional-gram explode ONCE —
         # the shared-span aggregate and the per-doc join consume it
         # through DIFFERENT exchanges (partial-agg rows vs raw rows),

@@ -1605,8 +1605,8 @@ def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     def on_batch(bdf: DataFrame, batch_id: int) -> None:
         # Round-10 optimization (guide §2.5 "repartition immediately
         # after the read" for unsplittable inputs): a 1-file micro-
-        # batch scans as ONE task, serializing the Python shingle
-        # kernel + md5/minhash mixing + partial agg on one core.  Fan
+        # batch scans as ONE task, serializing the n-gram explode
+        # + md5/minhash mixing + partial agg on one core.  Fan
         # the batch out only when its scan parallelism is below the
         # session's cores (a production batch of many files/row-groups
         # skips this); half the cores measured best (interleaved A/B

@@ -12,8 +12,6 @@ with rows-only checks.
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
@@ -33,6 +31,27 @@ def tokens(col: F.Column = None) -> F.Column:
     fixture corpus is single-space separated; trailing blanks exist)."""
     c = F.col("text") if col is None else col
     return F.split(F.trim(c), " ")
+
+
+def ngrams(toks: F.Column, n: int) -> F.Column:
+    """Positional word n-grams of a token array, joined by single
+    spaces: ``k - n + 1`` of them for ``k`` tokens, none below ``n``
+    (the guard is needed because ``sequence(1, m)`` with m ≤ 0 runs
+    descending).  Set consumers wrap it in ``array_distinct``; row
+    consumers ``explode`` it.
+
+    ``toks`` must be a column reference to a projected ``tokens()``:
+    a ``tokens()`` expression placed inside the lambda is re-evaluated
+    per element, O(k²) per document.  A filter on a column built from
+    the result is pushed below that projection with the same effect;
+    filter on ``size(toks)`` instead."""
+    return F.when(
+        F.size(toks) >= n,
+        F.transform(
+            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
+            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
 
 
 @register(
@@ -138,27 +157,14 @@ def q_text_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_text_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-gram extraction + top-20 frequency.
 
-    Bigrams are built positionally with a higher-order transform over
-    an index sequence (JVM-side; the MLlib NGram stage is the
-    rows-only twin in ml/pipeline.py).
+    Bigrams are built positionally by :func:`ngrams` (JVM-side; the
+    MLlib NGram stage is the rows-only twin in ml/pipeline.py).
     """
-    # Round-11: hoist the tokenize into its own projection — a
-    # ``tokens()`` expression referenced inside the transform lambda
-    # is re-evaluated per element (the split is O(k), so bigram
-    # construction was O(k²) per doc).  Measured 3.3 → 0.64 s at
-    # sf0.1, identical top-20.
     d = table(spark, sf_dir, "documents").select(
         tokens().alias("toks")
     )
-    t = F.col("toks")
-    bigrams = F.transform(
-        F.sequence(F.lit(1), F.size(t) - 1),
-        lambda i: F.concat_ws(
-            " ", F.element_at(t, i), F.element_at(t, i + 1)
-        ),
-    )
     return (
-        d.select(F.explode(bigrams).alias("bigram"))
+        d.select(F.explode(ngrams(F.col("toks"), 2)).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.col("n").desc(), F.col("bigram"))
@@ -353,34 +359,20 @@ def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     one map pass + one groupBy on a 32-char key, no pairwise compare.
 
     MD5 (not xxhash) so the DuckDB oracle computes the identical
-    digest; computed in one Arrow batch pass (hashlib md5 of the
-    identical UTF-8 shingle bytes → identical hex) — the interpreted
-    higher-order transform this replaces cost 3.4 s at sf0.1 vs
-    ~1 s.  Short-doc semantics match the old ``concat_ws`` form:
-    ``sequence(1, greatest(n-2, 1))`` means docs under 3 tokens
-    still emit one (truncated) shingle, which Python's clamped
-    slice reproduces exactly.
+    digest.  A document under 3 tokens has no trigram and emits the
+    md5 of its whole (truncated) token run instead.
     """
-
-    def gen(batches):
-        import hashlib
-
-        for pdf in batches:
-            fps = []
-            for text in pdf["text"]:
-                toks = text.strip(' ').split(" ")
-                fps.append(
-                    min(
-                        hashlib.md5(
-                            " ".join(toks[i : i + 3]).encode("utf-8")
-                        ).hexdigest()
-                        for i in range(max(len(toks) - 2, 1))
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "fp": fps})
-
-    d = table(spark, sf_dir, "documents").select("doc_id", "text")
-    return d.mapInPandas(gen, "doc_id bigint, fp string")
+    d = table(spark, sf_dir, "documents").select(
+        "doc_id", tokens().alias("toks")
+    )
+    t = F.col("toks")
+    return d.select(
+        "doc_id",
+        F.coalesce(
+            F.array_min(F.transform(ngrams(t, 3), F.md5)),
+            F.md5(F.concat_ws(" ", t)),
+        ).alias("fp"),
+    )
 
 
 @register(
@@ -1293,9 +1285,9 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     templated pages, and degenerate generations repeat 3-grams far
     above natural prose, and this catches them without any model.
 
-    Trigrams come from the same ``transform(sequence(...))`` shingle
-    machinery as the n-gram/fingerprint ops; per-doc distinct counts
-    are exact and state is bounded by document length.  Top-25 most
+    Trigrams come from the same :func:`ngrams` kernel as the
+    n-gram/fingerprint ops; per-doc distinct counts are exact and
+    state is bounded by document length.  Top-25 most
     repetitive docs via deterministic TakeOrdered.
     """
     # Round-10 optimization (guide §2.5): trigram explode + per-doc
@@ -1305,18 +1297,10 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(
         table(spark, sf_dir, "documents").select("doc_id", "text"),
         spark, sf_dir, "documents",
+    ).select("doc_id", tokens().alias("toks"))
+    grams = d.select(
+        "doc_id", F.explode(ngrams(F.col("toks"), 3)).alias("g")
     )
-    t = tokens()
-    gram = F.transform(
-        F.sequence(F.lit(0), F.size(t) - 3),
-        lambda i: F.concat_ws(
-            " ",
-            F.element_at(t, i + 1),
-            F.element_at(t, i + 2),
-            F.element_at(t, i + 3),
-        ),
-    )
-    grams = d.select("doc_id", F.explode(gram).alias("g"))
     per_doc = grams.groupBy("doc_id").agg(
         F.count("*").alias("n_grams"),
         F.countDistinct("g").alias("n_distinct"),
@@ -1399,22 +1383,16 @@ def q_text_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(
         table(spark, sf_dir, "documents").select("text"),
         spark, sf_dir, "documents",
-    )
-    t = tokens()
+    ).select(tokens().alias("toks"))
+    t = F.col("toks")
     uni = (
         d.select(F.explode(t).alias("w"))
         .groupBy("w")
         .agg(F.count("*").cast("double").alias("n"))
         .localCheckpoint()
     )
-    bigram = F.transform(
-        F.sequence(F.lit(0), F.size(t) - 2),
-        lambda i: F.concat_ws(
-            " ", F.element_at(t, i + 1), F.element_at(t, i + 2)
-        ),
-    )
     bi = (
-        d.select(F.explode(bigram).alias("b"))
+        d.select(F.explode(ngrams(t, 2)).alias("b"))
         .groupBy("b")
         .agg(F.count("*").cast("double").alias("n_ab"))
         .localCheckpoint()
@@ -2713,14 +2691,12 @@ def q_text_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     both sides; at 100 TB the bigram key would be a 64-bit hash.
     TakeOrdered with (novelty, doc_id) total order.
     """
-    # Arrow-vectorized distinct-bigram rows (same semantics as the
-    # old interpreted transform/explode, which both sides of the join
-    # below re-evaluated); function-level import avoids a module
-    # cycle (llm.dedup imports tokens from this module).
-    from ..llm.dedup import _shingle_rows
-
-    bi = _shingle_rows(spark, sf_dir, n=2).withColumnRenamed(
-        "shingle", "g"
+    d = table(spark, sf_dir, "documents").select(
+        "doc_id", tokens().alias("toks")
+    )
+    bi = d.select(
+        "doc_id",
+        F.explode(F.array_distinct(ngrams(F.col("toks"), 2))).alias("g"),
     )
     df_ = bi.groupBy("g").agg(F.count("*").cast("bigint").alias("nd"))
     per_doc = (

@@ -624,11 +624,13 @@ def q_sim_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "vec_id",
         "scale",
-        F.transform(
+        # scale enters the lambda as a zipped element: Catalyst inlines
+        # the column's fold wherever it is referenced, and a reference
+        # inside the lambda would re-run the O(d) max per element
+        F.zip_with(
             "embedding",
-            lambda x: F.round(x.cast("double") / F.col("scale")).cast(
-                "tinyint"
-            ),
+            F.array_repeat(F.col("scale"), F.size("embedding")),
+            lambda x, s: F.round(x.cast("double") / s).cast("tinyint"),
         ).alias("qvec"),
     )
     # dequantized dot product: (qa·s_a)·(qb·s_b) = s_a·s_b·Σ qa_i·qb_i —

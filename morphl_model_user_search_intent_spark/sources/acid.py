@@ -34,8 +34,8 @@ retires versions beyond the retention horizon.
 **Row-level writes are merge-on-read** (Delta's deletion vectors):
 DELETE, UPDATE and MERGE never rewrite a data file.  One commit
 carries every data file by reference, adds a ``dv/`` sidecar of
-(file basename, key) tombstones masking the current rows the write
-retires, and appends the new rows (post-images and inserts) as new
+(file basename, row index) tombstones masking the current rows the
+write retires, and appends the new rows (post-images and inserts) as new
 files — write cost O(batch) however many files the batch's keys
 touch.  Readers anti-join the tombstones; OPTIMIZE folds them into
 compacted files and clears the list.
@@ -417,7 +417,6 @@ def commit(
     partition_cols: list[str] | None = None,
     partitions: dict | None = None,
     dv_files: list[str] | None = None,
-    dv_key: str | None = None,
     colmap: dict | None | object = _INHERIT,
     constraints: dict | None | object = _INHERIT,
     transforms: list | None | object = _INHERIT,
@@ -464,7 +463,7 @@ def commit(
         manifest["metrics"] = dict(metrics)
     _small_blocks(
         manifest, root, parent, txn, change_files, partition_cols,
-        dv_files, dv_key, colmap, constraints, transforms,
+        dv_files, colmap, constraints, transforms,
         schema_meta, bloom,
     )
     return _publish(root, v, manifest)
@@ -478,7 +477,6 @@ def _small_blocks(
     change_files,
     partition_cols,
     dv_files,
-    dv_key,
     colmap,
     constraints,
     transforms,
@@ -576,14 +574,13 @@ def _small_blocks(
         # fewer skips, never wrong results.
         manifest["bloom"] = bloom
     if dv_files is not None:
-        # DELETION VECTORS (round 8): merge-on-read DELETE sidecars —
-        # (_file basename, key) tombstone rows a snapshot read
-        # anti-joins out per file (Delta's deletion vectors / Iceberg
-        # position deletes, expressed relationally on the key).  A
-        # delete commit costs O(batch), never a data-file rewrite;
-        # OPTIMIZE folds the mask in and clears the list.
+        # DELETION VECTORS (round 8): merge-on-read sidecars of
+        # (_file basename, _pos row index) tombstone rows a snapshot
+        # read anti-joins out (Delta's deletion vectors / Iceberg
+        # position deletes, expressed relationally).  A row-level
+        # commit costs O(batch), never a data-file rewrite; OPTIMIZE
+        # folds the mask in and clears the list.
         manifest["dv_files"] = sorted(dv_files)
-        manifest["dv_key"] = dv_key
 
 
 def _fsync_dir(path: str) -> None:
@@ -637,7 +634,6 @@ def commit_delta(
     change_files: list[str] | None = None,
     partition_cols: list[str] | None | object = _INHERIT,
     dv_files: list[str] | None = None,
-    dv_key: str | None = None,
     colmap: dict | None | object = _INHERIT,
     constraints: dict | None | object = _INHERIT,
     transforms: list | None | object = _INHERIT,
@@ -820,7 +816,7 @@ def commit_delta(
         partition_cols = base.get("partition_cols")
     _small_blocks(
         manifest, root, parent, txn, change_files, partition_cols,
-        dv_files, dv_key, colmap, constraints, transforms,
+        dv_files, colmap, constraints, transforms,
         schema_meta, bloom,
     )
     return _publish(root, v, manifest)
@@ -1271,8 +1267,8 @@ def read_table(
 
     A snapshot carrying DELETION VECTORS (merge-on-read deletes —
     :func:`delete_from_table`) is read THROUGH the mask: one anti join
-    on (file basename, key) against the DV sidecar rows, per-file so
-    a key deleted from one file and re-inserted by a later append (a
+    on (file basename, row index) against the DV sidecar rows, so a
+    key deleted from one file and re-inserted by a later append (a
     NEW file) survives.  The DV set is small between compactions by
     construction (it is the un-folded delete backlog), so the join's
     build side broadcasts.
@@ -1292,8 +1288,8 @@ def read_table(
     files = resolve_files(m, _filter_to_physical(cm, partition_filter))
     base = _scan(spark, m, files)
     # physical → logical projection (renames applied, dropped columns
-    # hidden); the DV mask above joined on the PHYSICAL key, which is
-    # what the sidecars store — rename-stable by construction
+    # hidden); the DV mask above named row positions, so no rename or
+    # drop can stale it
     base = _select_logical(cm, base)
     ident = (m.get("schema_meta") or {}).get("identity")
     if (
@@ -1437,7 +1433,7 @@ def _live_dv(
     m: dict,
     kept: list[str] | None = None,
     removed: set[str] | None = None,
-) -> tuple[list[str] | None, str | None, list[str]]:
+) -> tuple[list[str] | None, list[str]]:
     """Recompute the deletion-vector list after a partial rewrite
     (round-9 ADVICE fix): a tombstone is LIVE only while the file
     basename it masks is still referenced — once OPTIMIZE rewrites
@@ -1447,7 +1443,7 @@ def _live_dv(
     maybe_fold_dv re-triggers a full-table rewrite after every
     erasure batch, and vacuum keeps the dead sidecars referenced.
 
-    Returns (dv_files, dv_key, created) for the new manifest:
+    Returns (dv_files, created) for the new manifest:
     sidecars whose every row masks a kept file carry by reference;
     mixed sidecars are rewritten filtered to live rows (driver-side
     pyarrow — the DV set is the un-folded delete backlog, small by
@@ -1463,7 +1459,7 @@ def _live_dv(
     full file list."""
     dvf = m.get("dv_files")
     if not dvf:
-        return None, None, []
+        return None, []
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -1497,9 +1493,7 @@ def _live_dv(
     if pending:
         created.append(_write_sidecar(root, pending))
         out += created
-    if not out:
-        return None, None, created
-    return out, m.get("dv_key"), created
+    return out or None, created
 
 
 def _write_sidecar(root: str, tables: list) -> str:
@@ -1549,17 +1543,18 @@ def _scan(
 ) -> DataFrame:
     """THE snapshot read: ``files`` (a pruned subset of manifest ``m``'s
     files) read through the manifest's deletion-vector mask — one anti
-    join on (file basename, key) against the DV sidecar rows, per-file
-    so a key deleted from one file and re-inserted by a later append
-    (a NEW file) survives.  No files yields an empty frame of the
-    snapshot's schema.
+    join on (file basename, row index) against the DV sidecar rows.
+    Data files are immutable, so a position never goes stale, and a
+    key deleted from one file and re-inserted by a later append (a NEW
+    file) survives.  No files yields an empty frame of the snapshot's
+    schema.
 
     Reads of heterogeneous column-mapped tables merge schemas;
     ``rewrite`` gives the frame the row-level and compaction writers
     plan with instead: the plain first-footer schema plus the
-    ``_file`` basename column that names each row's file.  Every
-    non-merging read is schema-pinned (:func:`_read_parquet`), so
-    building the frame launches no job."""
+    ``_file``/``_pos`` columns that name each row's tombstone
+    (:func:`_tag_rows`).  Every non-merging read is schema-pinned
+    (:func:`_read_parquet`), so building the frame launches no job."""
     cm = m.get("colmap")
     merge = not rewrite and bool(cm and cm.get("mixed", True))
     # the empty frame's merged schema needs every footer; a plain one
@@ -1569,20 +1564,54 @@ def _scan(
     )
     dvf = m.get("dv_files") if files else None
     if rewrite or dvf:
-        base = base.withColumn("_file", _file_col())
+        base = _tag_rows(base)
     if not files:
         return base.limit(0)
     if dvf:
-        key = m["dv_key"]
-        dv = _read_parquet(spark, dvf).select("_file", key)
-        base = base.join(dv, ["_file", key], "anti")
+        base = base.join(_tombs(spark, dvf), _TOMB, "anti")
         if not rewrite:
-            base = base.drop("_file")
+            base = base.drop(*_TOMB)
     return base
 
 
 def _file_col() -> Column:
     return F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
+
+
+_TOMB = ["_file", "_pos"]  # a sidecar row: file basename, row index
+
+
+def _tag_rows(df: DataFrame) -> DataFrame:
+    """A raw data-file read plus the ``_file`` basename and the ``_pos``
+    row index (``_metadata.row_index``) that name each row's tombstone.
+    Positions count rows of the whole file, so tag before any row
+    filter reaches the frame."""
+    return df.withColumn("_file", _file_col()).withColumn(
+        "_pos", F.col("_metadata.row_index")
+    )
+
+
+def _tombs(spark: SparkSession, dvf: list[str]) -> DataFrame:
+    return _read_parquet(spark, dvf).select(*_TOMB)
+
+
+def _unmasked(t, f: str, dvf: list[str]):
+    """The pyarrow twin of :func:`_scan`'s mask: ``t``, the raw read
+    of data file ``f``, minus the rows the sidecars ``dvf`` tombstone.
+    A filtered sidecar read touches only ``f``'s tombstones."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    pos = ds.dataset(dvf).to_table(
+        columns=["_pos"], filter=pc.field("_file") == os.path.basename(f)
+    )
+    if not pos.num_rows:
+        return t
+    keep = np.ones(t.num_rows, dtype=bool)
+    keep[pos.column("_pos").to_numpy()] = False
+    return t.filter(pa.array(keep))
 
 
 def _drop_empty(files: list[str]) -> list[str]:
@@ -1604,14 +1633,13 @@ def _commit_mor(
     root: str,
     m: dict,
     op: str,
-    key: str,
     dv_rows: DataFrame | None,
     added: DataFrame | None = None,
     feed: DataFrame | None = None,
     **commit_kw,
 ) -> int:
     """THE row-level write, merge-on-read — shared by DELETE, UPDATE
-    and both MERGEs.  Writes ``dv_rows`` (the ``(_file, key)``
+    and both MERGEs.  Writes ``dv_rows`` (the ``(_file, _pos)``
     tombstones of every current row the op retires) as ONE sidecar
     under ``dv/``, appends ``added`` (hive-partitioned when ``m`` is),
     writes the optional change ``feed``, and publishes one delta
@@ -1620,15 +1648,10 @@ def _commit_mor(
     rewritten; reads anti-join the mask (:func:`_scan`) until OPTIMIZE
     folds it (Delta's deletion vectors).
 
-    Tombstones are keyed on the business key ``key`` (physical name),
-    so a table whose DVs are keyed on another column raises
-    ``ValueError``.  A lost race reclaims every written file and
-    re-raises :class:`CommitConflict` for the caller's replay loop."""
-    if m.get("dv_key") not in (None, key):
-        raise ValueError(
-            f"table's deletion vectors are keyed on {m['dv_key']!r},"
-            f" not {key!r}"
-        )
+    Tombstones name row positions, not keys, so ops matching on
+    different columns share one backlog.  A lost race reclaims every
+    written file and re-raises :class:`CommitConflict` for the
+    caller's replay loop."""
     new_dv = []
     if dv_rows is not None:
         new_dv = _drop_empty(_write_files(dv_rows, root, subdir="dv"))
@@ -1674,7 +1697,6 @@ def _commit_mor(
             stats=commit_stats(root, new_files, []) if pcols else None,
             change_files=change_files,
             dv_files=dv_files or None,
-            dv_key=key if dv_files else None,
             **commit_kw,
         )
     except CommitConflict:
@@ -1693,7 +1715,8 @@ def _like(df: DataFrame, base: DataFrame, cm: dict | None) -> DataFrame:
     or the column map's live physicals (a re-added column's physical
     may be absent from ``base``'s footer and keeps its type)."""
     types = {f.name: f.dataType for f in base.schema.fields}
-    types.pop("_file", None)
+    for c in _TOMB:
+        types.pop(c, None)
     want = [e["physical"] for e in cm["cols"]] if cm else list(types)
     if sorted(df.columns) != sorted(want):
         raise SchemaMismatch(
@@ -1718,7 +1741,7 @@ def delete_from_table(
 ) -> int:
     """MERGE-ON-READ DELETE via deletion-vector sidecars (round 8):
     instead of rewriting every file that holds a matched key, write
-    the (file basename, key) tombstone pairs as ONE small sidecar
+    the (file basename, row index) tombstones as ONE small sidecar
     parquet under ``root/dv/`` and commit a version whose manifest
     carries (parent's DV list ∪ the new sidecar) — :func:`_commit_mor`
     with nothing appended.  Write cost is
@@ -1728,9 +1751,9 @@ def delete_from_table(
     (:func:`read_table`); OPTIMIZE folds it in and clears the list;
     vacuum protects retained versions' sidecars like data files.
 
-    The tombstones are scoped per-file (a semi join over the
-    DV-masked snapshot plans them), so a later re-insert of the same
-    key — which lands in a NEW file — is never masked.  Re-deleting
+    The tombstones name row positions (a semi join over the DV-masked
+    snapshot plans them), so a later re-insert of the same key — which
+    lands in a NEW file — is never masked.  Re-deleting
     an already-deleted key is a no-op by construction (the masked
     snapshot no longer matches it).  Conflicts replay like every
     other commit."""
@@ -1752,10 +1775,9 @@ def delete_from_table(
                 return latest_version(root)  # replayed batch: no-op
         m = read_manifest(root)
         cm = m.get("colmap")
-        # physical space: base files and dv sidecars store physical
-        # names, so translate the caller's LOGICAL key and keys frame
-        # (rename-stable — the sidecar key never goes stale across
-        # renames).  Derived fresh from the originals each retry.
+        # physical space: base files store physical names, so
+        # translate the caller's LOGICAL key and keys frame.  Derived
+        # fresh from the originals each retry.
         on_p = _colmap_lookup(cm, on) if cm is not None else on
         keys_p = (
             keys.select(F.col(on).alias(on_p)) if on_p != on else keys
@@ -1791,7 +1813,7 @@ def delete_from_table(
             # published atomically — the form a STREAMING tail can
             # consume (table_changes reconstructs the same rows from
             # the new tombstones)
-            feed = matched.drop("_file").withColumn(
+            feed = matched.drop(*_TOMB).withColumn(
                 "_change_type", F.lit("delete")
             )
         try:
@@ -1799,8 +1821,7 @@ def delete_from_table(
                 root,
                 m,
                 "delete",
-                on_p,
-                matched.select("_file", on_p),
+                matched.select(*_TOMB),
                 feed=feed,
                 txn=txn,
             )
@@ -1828,8 +1849,8 @@ def merge_table(
 
     Plan (one distributed pass over source + the masked snapshot):
       1. pin the current snapshot; tag base rows with their file's
-         uuid basename (``_metadata.file_path``);
-      2. tombstone the ``(_file, key)`` of every current row whose key
+         uuid basename and row index (``_metadata``);
+      2. tombstone the ``(_file, _pos)`` of every current row whose key
          the source names — ONE sidecar under ``dv/``;
       3. append the non-``_delete`` source rows (replacements +
          inserts) as new files;
@@ -1839,10 +1860,6 @@ def merge_table(
          files its keys touch.  On :class:`CommitConflict` (a writer
          slipped in) the merge re-reads the NEW snapshot and replays —
          source derivations are pure, so replay is safe.
-
-    Tombstones are keyed on ``on``: a table whose deletion vectors are
-    keyed on another column raises ``ValueError`` (OPTIMIZE folds the
-    backlog first).
 
     ``cdc=True`` additionally writes the commit's row-level CHANGE
     FEED (insert / delete / update_preimage / update_postimage rows,
@@ -1897,7 +1914,7 @@ def merge_table(
         base = _scan(spark, m, m["files"], rewrite=True)
         try:
             return _commit_mor(
-                root, m, "merge", on, txn=txn,
+                root, m, "merge", txn=txn,
                 **_merge_arms(base, source, on, m, root, cdc),
             )
         except CommitConflict:
@@ -1914,7 +1931,7 @@ def _merge_arms(
     root: str,
     cdc: bool,
 ) -> dict:
-    """One MERGE's writes over ``base`` (the ``_file``-tagged, masked
+    """One MERGE's writes over ``base`` (the tombstone-tagged, masked
     snapshot frame of every file that may hold a source key), as
     :func:`_commit_mor` arguments — shared by the flat and partitioned
     merges.  Every current row whose key the source names is
@@ -1961,10 +1978,10 @@ def _merge_arms(
                 upserts = kept
     upserts = _like(upserts, base, m.get("colmap"))
     _validate_constraints(upserts, root)  # incoming rows only
-    out.update(dv_rows=matched.select("_file", on), added=upserts)
+    out.update(dv_rows=matched.select(*_TOMB), added=upserts)
     if cdc:
         out["feed"] = _merge_change_feed(
-            matched.drop("_file"), source, upserts, on
+            matched.drop(*_TOMB), source, upserts, on
         )
     return out
 
@@ -2241,7 +2258,6 @@ def append_table(
                 added=files,
                 txn=txn,
                 dv_files=m.get("dv_files"),
-                dv_key=m.get("dv_key"),
                 colmap=cm_out,
                 schema_meta=sm_commit,
             )
@@ -2356,7 +2372,6 @@ def append_table_partitioned(
                 txn=txn,
                 partition_cols=pcols,
                 dv_files=m.get("dv_files"),
-                dv_key=m.get("dv_key"),
                 schema_meta=sm_commit,
             )
         except CommitConflict:
@@ -2580,7 +2595,7 @@ def ensure_acid_exercise(
     configure(spark)
     root = root or os.path.join(SCRATCH, f"acidtable-{_tag(sf_dir)}")
     ready = os.path.join(root, "_READY")
-    note = f"acid-v2cdc-mor {_orders_fingerprint(sf_dir)}"
+    note = f"acid-v2cdc-pos {_orders_fingerprint(sf_dir)}"
     try:
         if open(ready).read().strip() == note:
             return root
@@ -2735,8 +2750,8 @@ def table_changes(
         ]
     # A merge-on-read commit (delete, update, merge) removes NO data
     # file — its pre-images are the rows its NEW tombstones mask.  The
-    # sidecars name exactly the (file, key) pairs; read only those
-    # files, keep the masked rows, and put them on the pre side next to
+    # sidecars name exactly the (file, row index) pairs; read only
+    # those files, keep the masked rows, and put them on the pre side next to
     # any removed file's rows: the key join below then pairs a
     # replaced row with its appended post-image (update), and leaves a
     # tombstoned key with no post-image a delete.  Both pre reads go
@@ -2759,22 +2774,17 @@ def table_changes(
             f for f in m2["files"] if os.path.basename(f) in named
         )
 
-    def _tombs(dvf: list[str], dk: str) -> DataFrame:
-        return _read_parquet(spark, dvf).select("_file", dk)
-
     def _side(files: list[str], prefix: str, new=False) -> DataFrame:
         base = _read_parquet(spark, files or m2["files"], merge)
         parent = m1.get("dv_files") if prefix == "pre" else None
         if not files:
             base = base.limit(0)
         elif parent or new:
-            base = base.withColumn("_file", _file_col())
+            base = _tag_rows(base)
             if parent:
-                dk = m1["dv_key"]
-                base = base.join(_tombs(parent, dk), ["_file", dk], "anti")
+                base = base.join(_tombs(spark, parent), _TOMB, "anti")
             if new:
-                dk = m2["dv_key"]
-                base = base.join(_tombs(dv_added, dk), ["_file", dk], "semi")
+                base = base.join(_tombs(spark, dv_added), _TOMB, "semi")
         # a re-added physical column may be absent from EVERY file on
         # one side (mergeSchema unions only the files actually read)
         # — those rows' value for it is NULL by definition
@@ -2961,7 +2971,7 @@ def ensure_optimize_exercise(spark: SparkSession, sf_dir: str) -> str:
     configure(spark)
     root = os.path.join(SCRATCH, f"acidtable-opt-{_tag(sf_dir)}")
     ready = os.path.join(root, "_READY_OPT")
-    note = f"acid-opt-mor {_orders_fingerprint(sf_dir)}"
+    note = f"acid-opt-pos {_orders_fingerprint(sf_dir)}"
     try:
         if open(ready).read().strip() == note:
             return root
@@ -3091,7 +3101,7 @@ def ensure_cdc_stream_exercise(spark: SparkSession, sf_dir: str) -> str:
     configure(spark)
     root = os.path.join(SCRATCH, f"acidtable-cdcs-{_tag(sf_dir)}")
     ready = os.path.join(root, "_READY_CDCS")
-    note = f"acid-cdcs-mor {_orders_fingerprint(sf_dir)}"
+    note = f"acid-cdcs-pos {_orders_fingerprint(sf_dir)}"
     try:
         if open(ready).read().strip() == note:
             return root
@@ -3451,7 +3461,6 @@ def clone_table(
         partitions=m.get("partitions"),
         stats=m.get("stats"),
         dv_files=m.get("dv_files"),
-        dv_key=m.get("dv_key"),
         colmap=m.get("colmap"),  # source's logical schema clones too
         constraints=m.get("constraints"),
         transforms=m.get("transforms"),  # hidden-partition spec too
@@ -3788,7 +3797,6 @@ def restore_table(spark: SparkSession, root: str, version: int) -> int:
         parent=latest_version(root),
         partition_cols=m.get("partition_cols"),
         dv_files=m.get("dv_files"),
-        dv_key=m.get("dv_key"),
         # the TARGET version's logical schema, constraint set, and
         # transform spec restore with it (a restore across a rename
         # must resurrect the old names; a restored v_n is governed by
@@ -3823,7 +3831,7 @@ def q_table_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     configure(spark)
     root = os.path.join(SCRATCH, f"acidtable-restore-{_tag(sf_dir)}")
     ready = os.path.join(root, "_READY_RESTORE")
-    note = f"acid-restore {_orders_fingerprint(sf_dir)}"
+    note = f"acid-restore-pos {_orders_fingerprint(sf_dir)}"
     try:
         ok = open(ready).read().strip() == note
     except OSError:
@@ -3979,7 +3987,7 @@ def merge_table_partitioned(
         if not cand:
             arms["dv_rows"] = None
         try:
-            return _commit_mor(root, m, "merge", on, **arms)
+            return _commit_mor(root, m, "merge", **arms)
         except CommitConflict:
             pass  # lost the race: replay against the new snapshot
     raise CommitConflict(f"merge lost {max_retries} races in {root}")
@@ -4036,7 +4044,7 @@ def optimize_table_partitioned(
         # carry forward and keep masking
         snap = (
             _scan(spark, m, sel, rewrite=True)
-            .drop("_file")
+            .drop(*_TOMB)
             .coalesce(target_files)
         )
         tr = m.get("transforms")
@@ -4048,7 +4056,7 @@ def optimize_table_partitioned(
         )
         # retire DV entries folded into the rewrite (round-9 fix):
         # only tombstones masking files carried by reference stay
-        dv_files, dv_key, dv_new = _live_dv(root, m, removed=set(sel))
+        dv_files, dv_new = _live_dv(root, m, removed=set(sel))
         try:
             # delta commit: unselected partitions' chunks carry by
             # descriptor with values/stats untouched
@@ -4062,7 +4070,6 @@ def optimize_table_partitioned(
                 stats=commit_stats(root, new_files, []),
                 partition_cols=pcols,
                 dv_files=dv_files,
-                dv_key=dv_key,
             )
         except CommitConflict:
             for f in new_files + dv_new:
@@ -4124,7 +4131,7 @@ def ensure_partitioned_exercise(
     configure(spark)
     root = os.path.join(SCRATCH, f"acidtable-part-{_tag(sf_dir)}")
     ready = os.path.join(root, "_READY_PART")
-    note = f"acid-part-cdc-mor {_orders_fingerprint(sf_dir)}"
+    note = f"acid-part-cdc-pos {_orders_fingerprint(sf_dir)}"
     try:
         if open(ready).read().strip() == note:
             return root
@@ -4303,7 +4310,7 @@ def ensure_dv_exercise(spark: SparkSession, sf_dir: str) -> str:
     configure(spark)
     root = os.path.join(SCRATCH, f"acidtable-dv-{_tag(sf_dir)}")
     ready = os.path.join(root, "_READY_DV")
-    note = f"acid-dv-mor {_orders_fingerprint(sf_dir)}"
+    note = f"acid-dv-pos {_orders_fingerprint(sf_dir)}"
     try:
         if open(ready).read().strip() == note:
             return root
@@ -4366,7 +4373,7 @@ def q_table_dv_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     configure(spark)
     root = os.path.join(SCRATCH, f"acidtable-dvfold-{_tag(sf_dir)}")
     ready = os.path.join(root, "_READY_DVFOLD")
-    note = f"acid-dvfold-mor {_orders_fingerprint(sf_dir)}"
+    note = f"acid-dvfold-pos {_orders_fingerprint(sf_dir)}"
     try:
         ok = open(ready).read().strip() == note
     except OSError:
@@ -4633,7 +4640,7 @@ def scan(
       2. zone-map skipping (``ranges`` {col: (lo, hi)}): drop
          surviving files whose committed per-file min/max cannot
          intersect — same metadata walk, multi-column;
-      3. deletion-vector masking: anti-join the (file, key)
+      3. deletion-vector masking: anti-join the (file, row index)
          tombstones over whatever survived — the only stage that
          touches data, and it reads ONLY the pruned files.
 
@@ -4706,7 +4713,7 @@ def ensure_composed_exercise(spark: SparkSession, sf_dir: str) -> str:
     configure(spark)
     root = os.path.join(SCRATCH, f"acidtable-composed-{_tag(sf_dir)}")
     ready = os.path.join(root, "_READY_COMPOSED")
-    note = f"acid-composed-mor {_orders_fingerprint(sf_dir)}"
+    note = f"acid-composed-pos {_orders_fingerprint(sf_dir)}"
     try:
         if open(ready).read().strip() == note:
             return root
@@ -4867,7 +4874,6 @@ def evolve_partition_spec(root: str, new_cols: list[str]) -> int:
         f"evolve-spec:{','.join(new_cols)}",
         partition_cols=new_cols,
         dv_files=m.get("dv_files"),
-        dv_key=m.get("dv_key"),
     )
 
 
@@ -5000,7 +5006,6 @@ def _commit_metadata_only(root: str, m: dict, op: str, **over) -> int:
     add/drop constraint."""
     kw = dict(
         dv_files=m.get("dv_files"),
-        dv_key=m.get("dv_key"),
         colmap=m.get("colmap"),
         constraints=m.get("constraints"),
         transforms=m.get("transforms"),
@@ -5126,7 +5131,7 @@ def q_table_cdc_delete_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     to see an EMPTY feed for it — a standing CDC consumer would
     silently miss every erasure.  table_changes now diffs the dv
     sidecar lists too: the newly-added tombstones name exactly the
-    (file, key) pre-images, read from only the touched files and
+    (file, row index) pre-images, read from only the touched files and
     tagged 'delete'.  The oracle is the closed-form deleted slice, so
     a missed or duplicated erasure cannot hash-match.  (Write-side
     capture exists as well — delete_from_table(cdc=True) — and the
@@ -5175,7 +5180,7 @@ def drop_partition(
             f"drop_partition({partition_filter}) would drop every "
             "file in the table"
         )
-    dv_files, dv_key, _dv_new = _live_dv(root, m, removed=drop)
+    dv_files, _dv_new = _live_dv(root, m, removed=drop)
     # O(matched) end-to-end (round 10): the match ran on chunk
     # descriptors and the delta commit drops whole chunks by
     # descriptor — untouched partitions are never parsed
@@ -5185,7 +5190,6 @@ def drop_partition(
         f"drop-partition:{partition_filter}",
         removed=sorted(drop),
         dv_files=dv_files,
-        dv_key=dv_key,
     )
 
 
@@ -5312,7 +5316,7 @@ def overwrite_partition(
             pcols,
             exprs=_transform_exprs(_tr) if _tr else None,
         )
-        dv_files, dv_key, dv_new = _live_dv(
+        dv_files, dv_new = _live_dv(
             root, m, removed=replaced
         )
         try:
@@ -5329,7 +5333,6 @@ def overwrite_partition(
                 stats=commit_stats(root, new_files, []),
                 partition_cols=pcols,
                 dv_files=dv_files,
-                dv_key=dv_key,
                 schema_meta=sm_commit,
             )
         except CommitConflict:
@@ -5452,7 +5455,7 @@ def optimize_table_zorder_partitioned(
             ]
         if not sel:
             return m["version"]
-        snap = _scan(spark, m, sel, rewrite=True).drop("_file")
+        snap = _scan(spark, m, sel, rewrite=True).drop(*_TOMB)
         c1, c2 = (F.col(c) for c in cols[:2])
         lo1, hi1, lo2, hi2 = snap.agg(
             F.min(c1), F.max(c1), F.min(c2), F.max(c2)
@@ -5474,7 +5477,7 @@ def optimize_table_zorder_partitioned(
             pcols,
             exprs=_transform_exprs(_tr) if _tr else None,
         )
-        dv_files, dv_key, dv_new = _live_dv(root, m, removed=set(sel))
+        dv_files, dv_new = _live_dv(root, m, removed=set(sel))
         try:
             # delta commit: unselected partitions carry by descriptor
             return commit_delta(
@@ -5487,7 +5490,6 @@ def optimize_table_zorder_partitioned(
                 stats=commit_stats(root, new_files, list(cols[:2])),
                 partition_cols=pcols,
                 dv_files=dv_files,
-                dv_key=dv_key,
             )
         except CommitConflict:
             for f in new_files + dv_new:
@@ -5711,9 +5713,8 @@ def drop_column(spark: SparkSession, root: str, name: str) -> int:
     (invisible to every snapshot read from this version on) and its
     physical name is RETIRED so a later re-add of the same logical
     name gets a fresh physical column — the old values can never
-    resurrect.  Partition columns, the deletion-vector key, and the
-    last remaining column are refused; so is a column referenced by a
-    CHECK constraint."""
+    resurrect.  Partition columns and the last remaining column are
+    refused; so is a column referenced by a CHECK constraint."""
     m = read_manifest(root)
     cm = m.get("colmap") or _build_colmap(spark, root)
     names = [e["name"] for e in cm["cols"]]
@@ -5726,11 +5727,6 @@ def drop_column(spark: SparkSession, root: str, name: str) -> int:
         raise ValueError(
             f"{name!r} is a partition column; re-partition the table "
             "(evolve_partition_spec) before dropping it"
-        )
-    if m.get("dv_key") == phys:
-        raise ValueError(
-            f"{name!r} keys the table's deletion vectors; OPTIMIZE "
-            "(fold the DV backlog) before dropping it"
         )
     for cname, pred in table_constraints(root).items():
         if _pred_references(pred, name):
@@ -5969,8 +5965,8 @@ def update_table(
     rows are ignored, use MERGE for upserts).  The batch must be
     key-unique (raises otherwise: two post-images for one key would
     both survive).  Reads compose exactly: the tombstone masks the
-    old row per (file, key), the post-image lives in a NEW file no
-    tombstone names."""
+    old row by (file, row index), the post-image lives in a NEW file
+    no tombstone names."""
     dup = (
         updates.groupBy(on)
         .count()
@@ -6033,7 +6029,7 @@ def update_table(
             # hand, so the marginal cost is one changed-rows-sized
             # write published atomically with the commit
             feed = (
-                pre.drop("_file")
+                pre.drop(*_TOMB)
                 .withColumn("_change_type", F.lit("update_preimage"))
                 .unionByName(
                     matched.withColumn(
@@ -6046,8 +6042,7 @@ def update_table(
                 root,
                 m,
                 "update",
-                on_p,
-                pre.select("_file", on_p),
+                pre.select(*_TOMB),
                 added=matched,
                 feed=feed,
             )
@@ -6066,7 +6061,7 @@ def ensure_update_mor_exercise(
     configure(spark)
     root = os.path.join(SCRATCH, f"acidtable-updmor-{_tag(sf_dir)}")
     ready = os.path.join(root, "_READY_UPDMOR")
-    note = f"acid-updmor-mor {_orders_fingerprint(sf_dir)}"
+    note = f"acid-updmor-pos {_orders_fingerprint(sf_dir)}"
     try:
         if open(ready).read().strip() == note:
             return root
@@ -6435,7 +6430,6 @@ def evolve_transform_spec(
         partition_cols=names_new,
         transforms=list(new_transforms) + retired,
         dv_files=m.get("dv_files"),
-        dv_key=m.get("dv_key"),
     )
 
 
@@ -6714,7 +6708,6 @@ def create_branch(
         parent=0,
         partition_cols=m.get("partition_cols"),
         dv_files=m.get("dv_files"),
-        dv_key=m.get("dv_key"),
         colmap=m.get("colmap"),
         constraints=m.get("constraints"),
         transforms=m.get("transforms"),
@@ -6760,7 +6753,6 @@ def publish_branch(root: str, name: str) -> int:
         parent=head,
         partition_cols=bm.get("partition_cols"),
         dv_files=bm.get("dv_files"),
-        dv_key=bm.get("dv_key"),
         colmap=bm.get("colmap"),
         constraints=bm.get("constraints"),
         transforms=bm.get("transforms"),
@@ -6826,7 +6818,7 @@ def ensure_wap_exercise(spark: SparkSession, sf_dir: str) -> str:
     configure(spark)
     root = os.path.join(SCRATCH, f"acidtable-wap-{_tag(sf_dir)}")
     ready = os.path.join(root, "_READY_WAP")
-    note = f"acid-wap-mor {_orders_fingerprint(sf_dir)}"
+    note = f"acid-wap-pos {_orders_fingerprint(sf_dir)}"
     try:
         if open(ready).read().strip() == note:
             return root
@@ -6906,7 +6898,7 @@ def ensure_tag_exercise(spark: SparkSession, sf_dir: str) -> str:
     configure(spark)
     root = os.path.join(SCRATCH, f"acidtable-tag-{_tag(sf_dir)}")
     ready = os.path.join(root, "_READY_TAG")
-    note = f"acid-tag {_orders_fingerprint(sf_dir)}"
+    note = f"acid-tag-pos {_orders_fingerprint(sf_dir)}"
     try:
         if open(ready).read().strip() == note:
             return root
@@ -7395,7 +7387,7 @@ def ensure_rowtrack_exercise(spark: SparkSession, sf_dir: str) -> str:
     configure(spark)
     root = os.path.join(SCRATCH, f"acidtable-rowtrk-{_tag(sf_dir)}")
     ready = os.path.join(root, "_READY_ROWTRK")
-    note = f"acid-rowtrk-mor {_orders_fingerprint(sf_dir)}"
+    note = f"acid-rowtrk-pos {_orders_fingerprint(sf_dir)}"
     try:
         if open(ready).read().strip() == note:
             return root

@@ -442,9 +442,10 @@ class _AcidTableReader(DataSourceReader):
     ``partition.<col>`` options (metadata-scale, before any task is
     scheduled), and emits one InputPartition per surviving data file;
     ``read()`` executes in the EXECUTOR — a pyarrow scan of its file,
-    masked per-file against the snapshot's deletion vectors (the
-    (file, key) tombstone contract, applied with a filtered sidecar
-    read so a task touches only its own file's tombstones)."""
+    masked against the snapshot's deletion vectors.  A tombstone is the
+    (file basename, row index) of a row in the RAW file, so the mask
+    drops those positions before any residual filter moves them
+    (:func:`acid._unmasked`)."""
 
     def __init__(
         self, root: str, version: int | None, pfilters: dict[str, str]
@@ -492,7 +493,6 @@ class _AcidTableReader(DataSourceReader):
 
         files = [f for f in m["files"] if keep(f)]
         dvf = m.get("dv_files", [])
-        key = m.get("dv_key")
         # a conservatively-kept file (no recorded value for a filter
         # column — partition evolution) carries that column as a
         # RESIDUAL row predicate for read() (round-9 ADVICE fix): the
@@ -515,21 +515,21 @@ class _AcidTableReader(DataSourceReader):
                 if c not in vals
             ]
             parts.append(
-                InputPartition((f, dvf, key, residual, proj, lnames))
+                InputPartition((f, dvf, residual, proj, lnames))
             )
-        return parts or [
-            InputPartition((None, [], None, [], None, None))
-        ]
+        return parts or [InputPartition((None, [], [], None, None))]
 
     def read(self, partition):
-        import os
-
         import pyarrow.parquet as pq
 
-        f, dvf, key, residual, proj, lnames = partition.value
+        f, dvf, residual, proj, lnames = partition.value
         if f is None:
             return
         t = pq.read_table(f)
+        if dvf:
+            from .acid import _unmasked
+
+            t = _unmasked(t, f, dvf)
         if residual:
             import pyarrow as pa
             import pyarrow.compute as pc
@@ -573,28 +573,6 @@ class _AcidTableReader(DataSourceReader):
                         pa.scalar(v, type=pa.string()),
                     )
                 t = t.filter(mask)
-        if dvf and key is not None:
-            import pyarrow.compute as pc
-            import pyarrow.dataset as ds
-
-            base = os.path.basename(f)
-            masked = set()
-            for d in dvf:
-                dt = ds.dataset(d).to_table(
-                    columns=[key], filter=pc.field("_file") == base
-                )
-                masked.update(dt.column(key).to_pylist())
-            if masked:
-                t = t.filter(
-                    pc.invert(
-                        pc.is_in(
-                            t.column(key),
-                            value_set=__import__("pyarrow").array(
-                                sorted(masked)
-                            ),
-                        )
-                    )
-                )
         cols = proj if proj is not None else list(t.column_names)
         have = set(t.column_names)
         if all(c in have for c in cols):

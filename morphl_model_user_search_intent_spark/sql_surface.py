@@ -737,7 +737,7 @@ def _ensure_dml_exercise(spark: SparkSession, sf_dir: str) -> str:
 
     root = os.path.join(SCRATCH, f"acidtable-dml-{_tag(sf_dir)}")
     ready = os.path.join(root, "_READY_DML")
-    note = f"acid-dml-mor {_orders_fingerprint(sf_dir)}"
+    note = f"acid-dml-pos {_orders_fingerprint(sf_dir)}"
     try:
         if open(ready).read().strip() == note:
             return root
@@ -832,7 +832,7 @@ def _ensure_merge_into_exercise(
 
     root = os.path.join(SCRATCH, f"acidtable-mi-{_tag(sf_dir)}")
     ready = os.path.join(root, "_READY_MI")
-    note = f"acid-mi-mor {_orders_fingerprint(sf_dir)}"
+    note = f"acid-mi-pos {_orders_fingerprint(sf_dir)}"
     try:
         if open(ready).read().strip() == note:
             return root

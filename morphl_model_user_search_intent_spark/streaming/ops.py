@@ -25,6 +25,10 @@ path on hosts with no protobuf at all).  See :func:`tws_available`.
 
 from __future__ import annotations
 
+import atexit
+import functools
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -44,6 +48,27 @@ ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state."
     "RocksDBStateStoreProvider"
 )
+
+
+def _pid_scratch(kind: str, sf_dir: str) -> str:
+    """``SCRATCH/<kind>-<sf tag>-<pid>``, emptied now and removed when
+    this process exits.  The pid keeps two engine processes (e.g. a
+    pytest run and a concurrent tools/driver_sim.py sweep) from
+    overwriting each other's sink or table mid-read."""
+    import os
+
+    from ..sources.formats import SCRATCH
+
+    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+    d = os.path.join(SCRATCH, f"{kind}-{tag}-{os.getpid()}")
+    shutil.rmtree(d, ignore_errors=True)
+    _rmtree_at_exit(d)
+    return d
+
+
+@functools.cache
+def _rmtree_at_exit(d: str) -> None:
+    atexit.register(shutil.rmtree, d, True)
 
 
 def _staged_dir(sf_dir: str) -> str:
@@ -787,18 +812,7 @@ def q_stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     in tests).  State: the aggregate is the only state; the sink write
     is idempotent per batch (overwrite), so replays are safe.
     """
-    import os
-    import shutil
-
-    from ..sources.formats import SCRATCH
-
-    # Per-process path: two engine processes (e.g. a pytest run and a
-    # concurrent tools/driver_sim.py sweep) must not overwrite each
-    # other's serving table mid-read — the pid suffix keeps the
-    # overwrite-then-read sequence private to this session.
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    out_dir = os.path.join(SCRATCH, f"fb-counts-{tag}-{os.getpid()}")
-    shutil.rmtree(out_dir, ignore_errors=True)
+    out_dir = _pid_scratch("fb-counts", sf_dir)
     ev = _stream_events(spark, sf_dir)
     agg = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events"))
 
@@ -965,9 +979,6 @@ def q_stream_multi_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     the aggregate never touches the driver, so a 100×-longer stream
     costs zero driver memory."""
     import os
-    import shutil
-
-    from ..sources.formats import SCRATCH
 
     src = _staged_bucket_files(spark, sf_dir)
     configure(spark)
@@ -981,9 +992,7 @@ def q_stream_multi_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s = normalize_events_ts(s)
 
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    out_dir = os.path.join(SCRATCH, f"mb-counts-{tag}-{os.getpid()}")
-    shutil.rmtree(out_dir, ignore_errors=True)
+    out_dir = _pid_scratch("mb-counts", sf_dir)
     _MB_SINKS[sf_dir] = out_dir
 
     def append_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -1513,21 +1522,15 @@ def q_stream_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rebuild cadence), folded in by q_sim_index_rebuild's path.
     """
     import os
-    import shutil
 
     from ..llm.index import _K_LISTS, build_half_index, serve_topk
-    from ..sources.formats import SCRATCH
 
     configure(spark)
     index_path = build_half_index(spark, sf_dir)
     src = _staged_odd_vec_buckets(spark, sf_dir)
     schema = spark.read.parquet(src).schema
 
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    delta_dir = os.path.join(
-        SCRATCH, f"index-delta-{tag}-{os.getpid()}"
-    )
-    shutil.rmtree(delta_dir, ignore_errors=True)
+    delta_dir = _pid_scratch("index-delta", sf_dir)
 
     def append_delta(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(delta_dir)
@@ -1585,22 +1588,16 @@ def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     table; both are append-only, exactly as here.
     """
     import os
-    import shutil
 
     from ..llm.dedup import _portable_sig, bands_of, shingle_rows_of
-    from ..sources.formats import SCRATCH
 
     configure(spark)
     src = _staged_doc_buckets(spark, sf_dir)
     schema = spark.read.parquet(src).schema
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    base = os.path.join(
-        SCRATCH, f"neardup-{tag}-{os.getpid()}"
-    )
+    base = _pid_scratch("neardup", sf_dir)
     sig_store = os.path.join(base, "sig")
     band_store = os.path.join(base, "bands")
     pairs_dir = os.path.join(base, "pairs")
-    shutil.rmtree(base, ignore_errors=True)
 
     def on_batch(bdf: DataFrame, batch_id: int) -> None:
         # Round-10 optimization (guide §2.5 "repartition immediately
@@ -1763,10 +1760,8 @@ def q_stream_table_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference — exactly how a 100 TB/day stream lands in a lake table.
     """
     import os
-    import shutil
 
     from ..sources.acid import append_table, create_table, read_table
-    from ..sources.formats import SCRATCH
 
     global LAST_INGEST_ROOT
 
@@ -1774,9 +1769,7 @@ def q_stream_table_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _staged_time_buckets(spark, sf_dir)
     schema = spark.read.parquet(src).schema
 
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    root = os.path.join(SCRATCH, f"stream-acid-{tag}-{os.getpid()}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _pid_scratch("stream-acid", sf_dir)
     LAST_INGEST_ROOT = root
 
     cols = [
@@ -1986,25 +1979,19 @@ def q_stream_table_ingest_partitioned(
     table (a one-type partition filter lists a strict file subset)
     and per-batch txn idempotence."""
     import os
-    import shutil
 
     from ..sources.acid import (
         append_table_partitioned,
         create_table_partitioned,
         read_table,
     )
-    from ..sources.formats import SCRATCH
 
     global LAST_INGEST_PART_ROOT
 
     configure(spark)
     src = _staged_time_buckets(spark, sf_dir)
 
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    root = os.path.join(
-        SCRATCH, f"stream-acid-part-{tag}-{os.getpid()}"
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = _pid_scratch("stream-acid-part", sf_dir)
     LAST_INGEST_PART_ROOT = root
 
     cols = [
@@ -2082,25 +2069,19 @@ def q_stream_table_ingest_hidden(
     pins bucket pruning on the freshly-ingested table (a user_id
     IN-list lists ~1/8 of the files) and per-batch txn idempotence."""
     import os
-    import shutil
 
     from ..sources.acid import (
         append_table_partitioned,
         create_table_transformed,
         read_table,
     )
-    from ..sources.formats import SCRATCH
 
     global LAST_INGEST_HIDDEN_ROOT
 
     configure(spark)
     src = _staged_time_buckets(spark, sf_dir)
 
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    root = os.path.join(
-        SCRATCH, f"stream-acid-hidden-{tag}-{os.getpid()}"
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = _pid_scratch("stream-acid-hidden", sf_dir)
     LAST_INGEST_HIDDEN_ROOT = root
 
     cols = [
@@ -2187,7 +2168,6 @@ def q_stream_table_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
     branch grows one version per batch, and the publish commit adds
     and removes zero files."""
     import os
-    import shutil
 
     from ..sources.acid import (
         append_table,
@@ -2196,7 +2176,6 @@ def q_stream_table_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
         publish_branch,
         read_table,
     )
-    from ..sources.formats import SCRATCH
 
     global LAST_INGEST_WAP_ROOT
 
@@ -2204,9 +2183,7 @@ def q_stream_table_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _staged_time_buckets(spark, sf_dir)
     schema = spark.read.parquet(src).schema
 
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    root = os.path.join(SCRATCH, f"stream-wap-{tag}-{os.getpid()}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _pid_scratch("stream-wap", sf_dir)
     LAST_INGEST_WAP_ROOT = root
 
     cols = [
@@ -2315,18 +2292,12 @@ def q_stream_text_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     batches no-ops — the composition is documented, not duplicated.
     """
     import os
-    import shutil
 
     from ..text.searchindex import append_text_index, serve_bm25
-    from ..sources.formats import SCRATCH
 
     configure(spark)
     src = _staged_doc_buckets(spark, sf_dir)
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    root = os.path.join(
-        SCRATCH, f"stream-textindex-{tag}-{os.getpid()}"
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = _pid_scratch("stream-textindex", sf_dir)
     os.makedirs(root, exist_ok=True)
 
     schema = spark.read.parquet(src).schema
@@ -2391,7 +2362,6 @@ def q_stream_table_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewritten before the fold, replay no-op, and the fold clearing
     dv_files while preserving content."""
     import os
-    import shutil
 
     from ..io import table as load_table
     from ..sources.acid import (
@@ -2400,7 +2370,6 @@ def q_stream_table_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
         maybe_fold_dv,
         read_table,
     )
-    from ..sources.formats import SCRATCH
 
     global LAST_ERASURE_ROOT
 
@@ -2413,11 +2382,7 @@ def q_stream_table_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("value_units"),
     )
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    root = os.path.join(
-        SCRATCH, f"stream-erasure-{tag}-{os.getpid()}"
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = _pid_scratch("stream-erasure", sf_dir)
     LAST_ERASURE_ROOT = root
     create_table(spark, root, ev.repartition(4))
 

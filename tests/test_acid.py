@@ -1969,43 +1969,109 @@ def test_merge_on_read_tombstones_matched_rows_and_folds(spark, tmp_path):
     assert table_changes(spark, root, 3, "o_orderkey").isEmpty()
 
 
-def test_merge_refuses_table_with_dvs_on_another_key(spark, tmp_path):
-    """Tombstones are keyed on the business key: a merge on a table
-    whose deletion vectors are keyed on another column raises the same
-    ValueError delete and update raise — before writing any file."""
+def test_row_level_writes_on_different_keys_share_one_backlog(
+    spark, tmp_path
+):
+    """Tombstones name row positions, not keys: a delete keyed on
+    o_orderpriority, then a merge and an update keyed on o_orderkey,
+    stack on one live DV backlog; dropping the column the delete
+    matched on, an OPTIMIZE fold and the merge commit's change feed
+    all agree with a Python model of the rows at every step."""
     import pyspark.sql.functions as F
+    from pyspark.sql.types import BooleanType, StructField, StructType
 
     from morphl_model_user_search_intent_spark.sources.acid import (
         delete_from_table,
+        drop_column,
+        update_table,
     )
 
     root = str(tmp_path / "t")
-    base = _base(spark).limit(200)
-    create_table(spark, root, base)
+    base = _base(spark).filter(F.col("o_orderkey") < 400)
+    create_table(spark, root, base.repartition(3))
+    model = {
+        r.o_orderkey: (r.o_orderpriority, r.price) for r in base.collect()
+    }
+
+    def got():
+        rows = read_table(spark, root).collect()
+        out = {r.o_orderkey: (r.o_orderpriority, r.price) for r in rows}
+        assert len(out) == len(rows), "a key reads twice"
+        return out
+
+    assert got() == model
     delete_from_table(
         spark,
         root,
-        base.filter(F.col("o_orderkey") % 2 == 0).select(
-            "o_orderpriority"
-        ).limit(1),
+        spark.createDataFrame([("1-URGENT",)], "o_orderpriority string"),
         on="o_orderpriority",
     )
-    assert read_manifest(root)["dv_key"] == "o_orderpriority"
-    v = latest_version(root)
+    model = {k: v for k, v in model.items() if v[0] != "1-URGENT"}
+    assert got() == model
 
-    def listing():
-        return {
-            sub: sorted(os.listdir(os.path.join(root, sub)))
-            for sub in ("data", "dv")
-        }
+    kept = sorted(model)
+    gone = sorted(set(r.o_orderkey for r in base.collect()) - set(model))
+    upd, dele = kept[:3], kept[3:5]
+    src = (
+        [(k, "MERGED", 1.5, False) for k in upd]
+        + [(k, "x", 0.0, True) for k in dele]
+        + [(gone[0], "BACK", 2.5, False), (10_000_001, "NEW", 3.5, False)]
+    )
+    schema = StructType(
+        base.schema.fields + [StructField("_delete", BooleanType())]
+    )
+    pre_merge = dict(model)
+    v_merge = merge_table(
+        spark, root, spark.createDataFrame(src, schema), "o_orderkey"
+    )
+    for k, pri, price, d in src:
+        if d:
+            model.pop(k, None)
+        else:
+            model[k] = (pri, price)
+    post_merge = dict(model)
+    assert got() == model
 
-    before = listing()
-    with pytest.raises(ValueError, match="keyed on 'o_orderpriority'"):
-        merge_table(
-            spark, root, _merge_source(spark, SF_DIR), "o_orderkey"
-        )
-    assert latest_version(root) == v
-    assert listing() == before
+    # one key the merge just replaced (its live row is in an appended
+    # file), one untouched key, one key nobody holds (ignored)
+    ups = [(upd[0], "UPDATED", 7.0), (kept[6], "UPDATED", 8.0),
+           (20_000_000, "UPDATED", 9.0)]
+    update_table(
+        spark, root, spark.createDataFrame(ups, base.schema), "o_orderkey"
+    )
+    for k, pri, price in ups:
+        if k in model:
+            model[k] = (pri, price)
+    assert got() == model
+    assert len(read_manifest(root)["dv_files"]) == 3
+
+    drop_column(spark, root, "o_orderpriority")
+    assert {
+        r.o_orderkey: r.price for r in read_table(spark, root).collect()
+    } == {k: v[1] for k, v in model.items()}
+    optimize_table(spark, root, target_files=1)
+    assert not read_manifest(root).get("dv_files")
+    assert {
+        r.o_orderkey: r.price for r in read_table(spark, root).collect()
+    } == {k: v[1] for k, v in model.items()}
+
+    want = set()
+    for k in set(pre_merge) | set(post_merge):
+        a, b = pre_merge.get(k), post_merge.get(k)
+        if a == b:
+            continue
+        if b is None:
+            want.add((k, *a, "delete"))
+        elif a is None:
+            want.add((k, *b, "insert"))
+        else:
+            want |= {(k, *a, "update_preimage"),
+                     (k, *b, "update_postimage")}
+    feed = table_changes(spark, root, v_merge, "o_orderkey")
+    assert {
+        (r.o_orderkey, r.o_orderpriority, r.price, r._change_type)
+        for r in feed.collect()
+    } == want
 
 
 def test_merge_on_mixed_column_map_keeps_readded_column(spark, tmp_path):
@@ -2526,6 +2592,60 @@ def test_acid_table_source_residual_filter_post_evolution(
     )
 
 
+def test_acid_table_source_masks_before_residual_filter(spark, tmp_path):
+    """A tombstone names a row's position in the RAW file, so the
+    acid_table source must drop tombstoned positions before its
+    residual row filter: masking after the filter would read shifted
+    positions.  A flat table with a DV delete, then a partition spec
+    evolved to o_orderpriority and partitioned rows appended, reads
+    under ``partition.o_orderpriority`` exactly like read_table plus
+    the same filter."""
+    import pyspark.sql.functions as F
+
+    from morphl_model_user_search_intent_spark.sources.acid import (
+        append_table_partitioned,
+        delete_from_table,
+        evolve_partition_spec,
+    )
+    from morphl_model_user_search_intent_spark.sources.pysource import (
+        AcidTableSource,
+    )
+
+    root = str(tmp_path / "t")
+    base = _base(spark)
+    create_table(spark, root, base.repartition(2))
+    delete_from_table(
+        spark,
+        root,
+        base.filter(F.col("o_orderkey") % 3 == 0).select("o_orderkey"),
+        "o_orderkey",
+    )
+    evolve_partition_spec(root, ["o_orderpriority"])
+    append_table_partitioned(
+        spark,
+        root,
+        base.limit(40).withColumn(
+            "o_orderkey", F.col("o_orderkey") + 30_000_000
+        ),
+    )
+    try:
+        spark.dataSource.register(AcidTableSource)
+    except Exception:
+        pass
+    got = (
+        spark.read.format("acid_table")
+        .option("root", root)
+        .option("partition.o_orderpriority", "1-URGENT")
+        .load()
+    )
+    want = read_table(spark, root).filter(
+        F.col("o_orderpriority") == "1-URGENT"
+    )
+    assert want.filter(F.col("o_orderkey") >= 30_000_000).count() > 0
+    assert sorted(_rowset(got)) == sorted(_rowset(want))
+    assert got.count() == want.count()
+
+
 def test_indexed_manifest_resolution_equals_linear_walk(
     spark, tmp_path
 ):
@@ -2671,8 +2791,8 @@ def test_drop_column_never_resurrects_and_guards(spark, tmp_path):
     """r9 column mapping: DROP hides the column from every snapshot
     read from that version on (files untouched), a same-name re-add
     reads NULL for all pre-drop rows (fresh physical name), and the
-    guards refuse dropping a partition column, the DV key, and the
-    last column."""
+    guards refuse dropping a partition column and the last column; the
+    column a live DV delete matched on drops like any other."""
     import pyspark.sql.functions as F
 
     from morphl_model_user_search_intent_spark.sources.acid import (
@@ -2735,6 +2855,8 @@ def test_drop_column_never_resurrects_and_guards(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="partition column"):
         drop_column(spark, r3, "bucket")
+    # a live DV backlog names row positions, so the column the delete
+    # matched on drops like any other and the mask still holds
     r4 = str(tmp_path / "dv")
     create_table(spark, r4, df)
     delete_from_table(
@@ -2743,8 +2865,10 @@ def test_drop_column_never_resurrects_and_guards(spark, tmp_path):
         df.limit(10).select("o_orderkey"),
         on="o_orderkey",
     )
-    with pytest.raises(ValueError, match="deletion vectors"):
-        drop_column(spark, r4, "o_orderkey")
+    want = sorted(r.price for r in read_table(spark, r4).collect())
+    drop_column(spark, r4, "o_orderkey")
+    assert read_table(spark, r4).columns == ["o_orderpriority", "price"]
+    assert sorted(r.price for r in read_table(spark, r4).collect()) == want
 
 
 def test_mapped_table_merge_delete_restore_clone(spark, tmp_path):

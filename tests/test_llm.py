@@ -229,6 +229,19 @@ def test_quantized_knn_recall(spark):
     assert recall >= 0.8, recall
 
 
+def test_quantized_scale_stays_out_of_the_quantizing_lambda(spark):
+    """The per-vector max-|x| fold is evaluated once per vector: no
+    lambda that rounds a quantized code holds an ``aggregate(``, which
+    would recompute the O(d) max for each of the d elements."""
+    from test_ngrams import _lambda_bodies
+
+    df = REGISTRY["q_sim_quantized"].fresh(spark, SF_DIR)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    quantize = [b for b in _lambda_bodies(plan) if "round(" in b]
+    assert quantize, "no quantizing lambda in the optimized plan"
+    assert not [b for b in quantize if "aggregate(" in b]
+
+
 def test_pq_knn_recall(spark):
     """q_sim_pq: the ADC-scan + exact-re-rank top-5 must recover most
     of the exact top-5, and every exact-cosine value it emits must

@@ -166,6 +166,48 @@ def test_foreach_batch_serving_table_matches_batch(spark):
     assert out == batch
 
 
+def test_per_process_scratch_is_removed_at_exit():
+    """A streaming key's per-process scratch directory (the pid-suffixed
+    sink under SCRATCH) exists while its process runs and is gone once
+    the process exits."""
+    import glob
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    from morphl_model_user_search_intent_spark.sources.formats import (
+        SCRATCH,
+    )
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    child = textwrap.dedent(
+        f"""
+        import glob, os, sys
+        sys.path.insert(0, {repo!r})
+        from morphl_model_user_search_intent_spark import REGISTRY, get_spark
+        spark = get_spark(app_name="scratch-exit", cpus=1,
+                          shuffle_partitions=2)
+        assert REGISTRY["q_stream_foreach_batch"].fn(
+            spark, {SF_DIR!r}).count() > 0
+        mine = glob.glob(os.path.join({SCRATCH!r}, f"*-{{os.getpid()}}"))
+        print(os.getpid(), len(mine))
+        """
+    )
+    env = dict(os.environ, SPARK_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", child],
+        capture_output=True,
+        text=True,
+        env=env,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    pid, n_live = map(int, out.stdout.split()[-2:])
+    assert n_live == 1, "the key should hold one scratch dir while running"
+    assert not glob.glob(os.path.join(SCRATCH, f"*-{pid}"))
+
+
 def test_stream_static_join_matches_batch_twin(spark):
     import pyspark.sql.functions as F
 

@@ -178,7 +178,7 @@ def tree_section() -> None:
         assert sorted(m2["files"]) == sorted(files + new)
         t0 = time.perf_counter()
         v = commit_delta(root, m2, "delete",
-                         dv_files=[f"{root}/dv/d.parquet"], dv_key="k")
+                         dv_files=[f"{root}/dv/d.parquet"])
         row["commit_dv_ms"] = round(
             (time.perf_counter() - t0) * 1e3, 2
         )

@@ -87,17 +87,23 @@ def load(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: table(spark, sf_dir, name) for name in TABLES}
 
 
-# Per-table useful-split count, keyed by resolved file path.  Footer
-# metadata only (no data pages); a parquet row group is the atomic
-# unit of scan parallelism, so this is the number of tasks a scan of
-# the table can keep busy no matter how split-size confs are tuned.
+# Per-table row-group count, keyed by resolved file path.  Footer
+# metadata only (no data pages).  A row group is never split across
+# scan tasks, so this is an UPPER bound on the tasks a scan can keep
+# busy; see `scan_splits` for when the real count is lower.
 _SPLIT_CACHE: dict[str, int] = {}
 
 
 def scan_splits(sf_dir: str, name: str) -> int:
-    """Total parquet row groups across the table's file(s) — the scan's
-    maximum useful task count (Spark assigns a row group to the split
-    holding its midpoint; byte-range splits beyond that read nothing)."""
+    """Total parquet row groups across the table's file(s) — an upper
+    bound on the scan's useful task count (Spark assigns a row group to
+    the byte-range split holding its midpoint; splits beyond that read
+    nothing).  The scan only reaches it when the files are cut into
+    that many splits: Spark cuts a file at
+    ``min(maxPartitionBytes, max(openCostInBytes, bytes per core))``,
+    so a file under the 4 MB ``openCostInBytes`` default scans as ONE
+    task whatever its row-group count.  Those split sizes are session
+    confs (``spark.sql.files.*``); a read has no per-scan option."""
     path = os.path.join(os.path.abspath(sf_dir), f"{name}.parquet")
     hit = _SPLIT_CACHE.get(path)
     if hit is not None:
@@ -132,9 +138,13 @@ def spread(
     exactly one useful task regardless of maxPartitionBytes /
     openCostInBytes; per-row-expensive stages above it (JSON parse,
     array dot products) serialize on one core.  When — and only when —
-    the table's useful split count is below the session's shuffle
+    the table's row-group count is below the session's shuffle
     parallelism, a round-robin repartition fans the downstream work
-    out.  On a production layout (many ≥128 MB row groups) the
+    out.  The row-group count is an upper bound (`scan_splits`): a file
+    with many row groups but under the 4 MB ``openCostInBytes`` floor
+    still scans as one task and is NOT fanned out here.  Fanning it
+    out shuffles every selected column, so a caller whose rows carry
+    the document text pays in bytes moved what it gains in cores.  On a production layout (many ≥128 MB row groups) the
     condition is false and this is a plan no-op, so the exchange can
     never become a scale-side regression.  Row-to-partition assignment
     is deterministic under retries (sortBeforeRepartition, Spark's

@@ -14,7 +14,14 @@ from pyspark.sql import functions as F
 
 from ..io import spread, table
 from ..registry import register
-from ..text.analysis import _H32, ngrams, tokens
+from ..text.analysis import (
+    _H32,
+    _H32_DG,
+    h32,
+    h32_of_digest,
+    ngrams,
+    tokens,
+)
 from .dedup import _PAIRS_CTE as _DEDUP_PAIRS_CTE
 
 # Decontamination shingle width — 13 tokens is the published standard
@@ -283,8 +290,6 @@ def q_corpus_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DSIR_B = 64  # hashed feature buckets
 
 
-def _dsir_h32(x: str) -> str:
-    return _H32.format(x=x)
 
 
 @register(
@@ -297,7 +302,7 @@ def _dsir_h32(x: str) -> str:
     ),
     feat AS (
       SELECT doc_id, lang,
-             {_dsir_h32(x='tok')} % {_DSIR_B} AS bucket
+             {_H32.format(x='tok')} % {_DSIR_B} AS bucket
       FROM toks WHERE tok <> ''
     ),
     raw_d AS (
@@ -368,7 +373,7 @@ def q_corpus_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     feat = toks.select(
         "doc_id",
         "lang",
-        (F.expr(_dsir_h32(x="tok")) % _DSIR_B).alias("bucket"),
+        (F.expr(h32("tok")) % _DSIR_B).alias("bucket"),
     ).localCheckpoint()
     raw_d = feat.groupBy("bucket").agg(
         F.count("*").cast("bigint").alias("rc")
@@ -795,7 +800,7 @@ def q_corpus_epoch_shuffle(
     """
     d = table(spark, sf_dir, "documents")
     k = F.expr(
-        _H32.format(x="concat('e7|', CAST(doc_id AS STRING))")
+        h32("concat('e7|', CAST(doc_id AS STRING))")
     )
     placed = d.select("doc_id", k.alias("k")).select(
         "doc_id",
@@ -925,9 +930,6 @@ _MASK_FLAG = (
 
 
 def _mask_oracle() -> str:
-    from ..text.analysis import _H32
-
-    h32_of_digest = _H32.replace("md5({x})", "{d}")
     flag = _MASK_FLAG.format(i="i")
     return f"""
     WITH base AS (
@@ -936,7 +938,7 @@ def _mask_oracle() -> str:
       FROM documents
     ),
     seeded AS (
-      SELECT doc_id, toks, {h32_of_digest.format(d='dg')} AS seed
+      SELECT doc_id, toks, {_H32_DG.format(d='dg')} AS seed
       FROM base
     )
     SELECT doc_id,
@@ -959,17 +961,14 @@ def _mask_oracle() -> str:
 
 
 def _register_mask() -> None:
-    from ..text.analysis import _H32
-
     # Decode the stored per-doc digest to the 32-bit seed once, then
     # each position is pure integer math inside one codegen stage.
-    h32_of_digest = _H32.replace("md5({x})", "{d}")
     flags_expr = (
         "transform(sequence(1, size(toks)), i -> "
         + _MASK_FLAG.format(i="i")
         + ")"
     )
-    seed_expr = h32_of_digest.format(d="dg")
+    seed_expr = h32_of_digest("dg")
 
     @register("q_corpus_mask", oracle=_mask_oracle())
     def q_corpus_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1035,8 +1034,7 @@ _SPAN_FLAG = (
 
 
 def _register_span_corrupt() -> None:
-    h32_of_digest = _H32.replace("md5({x})", "{d}")
-    seed_expr = h32_of_digest.format(d="dg")
+    seed_expr = h32_of_digest("dg")
 
     def k_spark(b: str) -> str:
         inner = _SPAN_FLAG.format(b="bb")
@@ -1076,7 +1074,7 @@ def _register_span_corrupt() -> None:
     ),
     seeded AS (
       SELECT doc_id, toks, (len(toks) + 2) // 3 AS nb,
-             {h32_of_digest.format(d='dg')} AS seed
+             {_H32_DG.format(d='dg')} AS seed
       FROM base
     )
     SELECT doc_id,

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from ..io import spread, table
 from ..registry import register
-from ..text.analysis import ngrams, tokens
+from ..text.analysis import _H32_DG, h32, h32_of_digest, ngrams, tokens
 
 _JACCARD_TAU = 0.5
 
@@ -484,8 +484,8 @@ def q_dedup_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     in for the double-crawl the pass exists to catch.
 
     Both engines produce identical MD5 hex, so the digest itself is
-    oracle-checked — at scale this is the point: the 16-byte hash
-    shuffles instead of the document body, making the groupBy
+    oracle-checked — at scale this is the point: the 32-character
+    hex digest shuffles instead of the document body, making the groupBy
     key-size-bounded no matter how large documents get (the same
     reason the production pass hashes before the exchange).
     """
@@ -663,13 +663,6 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Portable 32-bit hash template (md5-derived; see text/analysis.py).
-from ..text.analysis import _H32 as _H32T
-
-# Digest-once variant: decode a STORED md5 hex string instead of
-# inlining md5({x}) 16 times per call site.
-_H32T_DG = _H32T.replace("md5({x})", "{d}")
-
 _MINHASH_SEEDS = 8
 _BAND_MIX = 8388593          # prime multiplier for band-key mixing
 _BAND_MOD = 9007199254740881  # large prime < 2^53
@@ -693,7 +686,7 @@ _MH_MIX = (
 # to be in scope; yields ``sig(doc_id, j, mh)``.
 _SIG_ORACLE_CTES = f"""
     shd AS (
-      SELECT doc_id, {_H32T_DG.format(d='dg')} AS h32
+      SELECT doc_id, {_H32_DG.format(d='dg')} AS h32
       FROM (SELECT doc_id, md5(shingle) AS dg FROM sh)
     ),
     seeds AS (SELECT UNNEST(generate_series(0, {_MINHASH_SEEDS - 1}))
@@ -705,53 +698,73 @@ _SIG_ORACLE_CTES = f"""
     )"""
 
 
-def _portable_sig(spark: SparkSession, sh: DataFrame) -> DataFrame:
-    """(doc_id, j, mh) signature table from a (doc_id, shingle) frame
-    — Spark twin of ``_SIG_ORACLE_CTES``.
+def _portable_sig(sh: DataFrame) -> DataFrame:
+    """(doc_id, m0..m7) signature table from a (doc_id, shingle) frame:
+    one wide row per document, ``m{j}`` the minimum over its shingles
+    of ``mix(h32(shingle), j)`` — Spark twin of ``_SIG_ORACLE_CTES``,
+    whose long ``(doc_id, j, mh)`` rows are this row unpivoted.
 
-    Round-11 optimization (guide §2.3 "aggregate before you shuffle"):
-    the old form cross-joined every shingle row with the 8 seeds and
-    shuffled the 8×-exploded rows into (doc_id, j) groups.  The 8
-    per-seed minima are independent aggregates of the SAME shingle
-    rows, so they now run as 8 ``MIN(mix(h32, j))`` columns in one
-    un-exploded pass (map-side partial aggregation, ~8× fewer shuffle
-    rows) and un-pivot to the (doc_id, j, mh) long form with ``stack``
-    — bit-identical minima, measured 2.56 → 0.59 s at sf0.1."""
-    shd = sh.withColumn("dg", F.md5("shingle")).select(
-        "doc_id", F.expr(_H32T_DG.format(d="dg")).alias("h32")
-    )
-    aggs = [
-        F.expr(
-            "MIN(" + _MH_MIX.format(h="h32", j=str(j)) + ")"
-        ).alias(f"m{j}")
-        for j in range(_MINHASH_SEEDS)
-    ]
-    mins = shd.groupBy("doc_id").agg(*aggs)
-    stacked = ", ".join(
-        f"CAST({j} AS BIGINT), m{j}" for j in range(_MINHASH_SEEDS)
-    )
-    return mins.selectExpr(
-        "doc_id", f"stack({_MINHASH_SEEDS}, {stacked}) AS (j, mh)"
+    The 8 per-seed minima are independent aggregates of the same
+    shingle rows, so they run as 8 ``MIN`` columns in one pass (map-side
+    partial aggregation) and stay wide: every consumer (`bands_of`,
+    `agreement`) reads one row per document, so no plan shuffles or
+    joins one row per (doc, seed)."""
+    hashed = sh.select("doc_id", F.expr(h32("shingle")).alias("h32"))
+    return hashed.groupBy("doc_id").agg(
+        *[
+            F.expr(f"MIN({_MH_MIX.format(h='h32', j=j)})").alias(f"m{j}")
+            for j in range(_MINHASH_SEEDS)
+        ]
     )
 
 
 def bands_of(sig: DataFrame) -> DataFrame:
-    """(doc_id, b, bk) LSH band keys from a (doc_id, j, mh)
-    signature frame: 4 bands of 2 rows each, band key =
-    (m₀·p + m₁) mod P in exact int64 — shared by the batch portable
-    pipeline and the streaming incremental path so their buckets
-    coincide."""
-    return sig.groupBy(
-        "doc_id", F.floor(F.col("j") / 2).alias("b")
-    ).agg(
-        (
-            (
-                F.max(F.when(F.col("j") % 2 == 0, F.col("mh")))
-                * _BAND_MIX
-                + F.max(F.when(F.col("j") % 2 == 1, F.col("mh")))
-            )
-            % _BAND_MOD
-        ).alias("bk")
+    """(doc_id, b, bk) LSH band keys from a wide signature frame:
+    4 bands of 2 minima each, band key = (m₂ᵦ·p + m₂ᵦ₊₁) mod P in
+    exact int64 — one narrow ``stack`` projection, shared by the batch
+    portable pipeline, its eval and the streaming incremental path so
+    their buckets coincide."""
+    keys = ", ".join(
+        f"CAST({b} AS BIGINT), "
+        f"(m{2 * b} * {_BAND_MIX} + m{2 * b + 1}) % {_BAND_MOD}"
+        for b in range(_MINHASH_SEEDS // 2)
+    )
+    return sig.selectExpr(
+        "doc_id", f"stack({_MINHASH_SEEDS // 2}, {keys}) AS (b, bk)"
+    )
+
+
+def band_pairs(left: DataFrame, right: DataFrame) -> DataFrame:
+    """Distinct (doc_a, doc_b) candidate pairs, doc_a < doc_b, of a
+    ``left`` and a ``right`` doc that share a band bucket — never all
+    pairs."""
+    a = left.select(F.col("doc_id").alias("doc_a"), "b", "bk")
+    b = right.select(F.col("doc_id").alias("doc_b"), "b", "bk")
+    return (
+        a.join(b, ["b", "bk"])
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "doc_b")
+        .distinct()
+    )
+
+
+def agreement(cand: DataFrame, sig: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, matches): each candidate pair joined to its two
+    wide signature rows, ``matches`` the number of the 8 min-hashes
+    they share — a sum of equality flags in one projection, so no
+    per-seed rows and no regrouping by pair."""
+    cols = [f"m{j}" for j in range(_MINHASH_SEEDS)]
+    sa = sig.select(
+        F.col("doc_id").alias("doc_a"), *[F.col(c).alias(f"a_{c}") for c in cols]
+    )
+    sb = sig.select(
+        F.col("doc_id").alias("doc_b"), *[F.col(c).alias(f"b_{c}") for c in cols]
+    )
+    matches = " + ".join(f"CAST(a_{c} = b_{c} AS BIGINT)" for c in cols)
+    return (
+        cand.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .selectExpr("doc_a", "doc_b", f"{matches} AS matches")
     )
 
 
@@ -824,9 +837,11 @@ def q_dedup_minhash_portable(
     (matches/8 ≥ 0.5) reported NEXT TO the exact Jaccard so the
     sketch's estimation error is itself part of the checked output.
 
-    Scale shape is the real MinHash one: signatures are 8 ints per
-    doc (one shingle-explode + min-agg), banding is a groupBy, and
-    candidates come from joining band buckets — never all pairs.
+    Scale shape is the real MinHash one: signatures are one row of 8
+    ints per doc (one shingle-explode + min-agg), banding is a narrow
+    projection, candidates come from joining band buckets — never all
+    pairs — and each candidate is verified against its two signature
+    rows.
     The band-key mix ((m₀·p) + m₁ mod P) is exact int64; collisions
     are deterministic and identical in both engines, which is all
     LSH needs (they only ever ADD candidates).
@@ -838,41 +853,12 @@ def q_dedup_minhash_portable(
     # n-gram explode (corpus_dedup seed 1, 3 alternating pairs on a
     # 4-core host: ops_per_s median 1.13 with it, 0.87 without, losing
     # 3/3, while exec.jobs fell 8 → 7.67 per op).  sig feeds bands +
-    # both agreement sides through different exchanges; checkpoint it
-    # once too.
+    # both agreement sides; checkpoint it once too.
     sh = _shingle_rows(spark, sf_dir).localCheckpoint()
-    sig = _portable_sig(spark, sh).localCheckpoint()
+    sig = _portable_sig(sh).localCheckpoint()
     bands = bands_of(sig)
-    b2 = bands.select(
-        F.col("doc_id").alias("doc_b"), "b", "bk"
-    )
-    cand = (
-        bands.join(b2, ["b", "bk"])
-        .filter(F.col("doc_id") < F.col("doc_b"))
-        .select(F.col("doc_id").alias("doc_a"), "doc_b")
-        .distinct()
-    )
-    sa = sig.select(
-        F.col("doc_id").alias("doc_a"),
-        "j",
-        F.col("mh").alias("mha"),
-    )
-    sb = sig.select(
-        F.col("doc_id").alias("doc_b"),
-        "j",
-        F.col("mh").alias("mhb"),
-    )
     agree = (
-        cand.join(sa, "doc_a")
-        .join(sb, ["doc_b", "j"])
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            F.sum(
-                F.when(F.col("mha") == F.col("mhb"), 1).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("matches")
-        )
+        agreement(band_pairs(bands, bands), sig)
         .filter(F.col("matches") >= 4)
         # Round-11: materialize the (small) detected-pair set so the
         # exact-verification side below can be pruned to it.
@@ -1252,41 +1238,10 @@ def q_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     truth_thread.start()
     try:
-        sig = _portable_sig(spark, sh).localCheckpoint()
-        bands = sig.groupBy(
-            "doc_id", F.floor(F.col("j") / 2).alias("b")
-        ).agg(
-            (
-                (
-                    F.max(F.when(F.col("j") % 2 == 0, F.col("mh")))
-                    * _BAND_MIX
-                    + F.max(F.when(F.col("j") % 2 == 1, F.col("mh")))
-                )
-                % _BAND_MOD
-            ).alias("bk")
-        )
-        b2 = bands.select(F.col("doc_id").alias("doc_b"), "b", "bk")
-        cand = (
-            bands.join(b2, ["b", "bk"])
-            .filter(F.col("doc_id") < F.col("doc_b"))
-            .select(F.col("doc_id").alias("doc_a"), "doc_b")
-            .distinct()
-        )
-        sa = sig.select(
-            F.col("doc_id").alias("doc_a"), "j", F.col("mh").alias("mha")
-        )
-        sb = sig.select(
-            F.col("doc_id").alias("doc_b"), "j", F.col("mh").alias("mhb")
-        )
+        sig = _portable_sig(sh).localCheckpoint()
+        bands = bands_of(sig)
         detected = (
-            cand.join(sa, "doc_a")
-            .join(sb, ["doc_b", "j"])
-            .groupBy("doc_a", "doc_b")
-            .agg(
-                F.sum(F.when(F.col("mha") == F.col("mhb"), 1).otherwise(0))
-                .cast("bigint")
-                .alias("matches")
-            )
+            agreement(band_pairs(bands, bands), sig)
             .filter(F.col("matches") >= 4)
             .select("doc_a", "doc_b")
             # Round-10 optimization: materialize both pair frames once —
@@ -1666,9 +1621,10 @@ def q_dedup_url(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # High half of the portable 64-bit SimHash signature: hex chars 9-16
-# of the SAME md5 digest (chars 1-8 are _H32T_DG's low half) — one
+# of the SAME md5 digest (chars 1-8 are _H32_DG's low half) — one
 # md5 per token yields 64 independent bits, same trick both engines
-# evaluate with identical integer arithmetic.
+# evaluate with identical integer arithmetic.  DuckDB oracle form; the
+# Spark side decodes the same chars with `h32_of_digest`.
 _H32T_HI_DG = "(" + " + ".join(
     f"(CAST(instr('0123456789abcdef', substring({{d}}, {i + 9}, 1))"
     f" - 1 AS BIGINT)) * {16 ** (7 - i)}"
@@ -1687,7 +1643,7 @@ _SIMHASH_TAU = 8  # max Hamming distance over 64 bits
       FROM documents
     ),
     h AS (
-      SELECT doc_id, {_H32T_DG.format(d='dg')} AS hlo,
+      SELECT doc_id, {_H32_DG.format(d='dg')} AS hlo,
              {_H32T_HI_DG.format(d='dg')} AS hhi
       FROM (SELECT doc_id, md5(w) AS dg FROM tok)
     ),
@@ -1773,8 +1729,8 @@ def q_dedup_simhash_portable(
     )
     h = tok.withColumn("dg", F.md5("w")).select(
         "doc_id",
-        F.expr(_H32T_DG.format(d="dg")).alias("hlo"),
-        F.expr(_H32T_HI_DG.format(d="dg")).alias("hhi"),
+        F.expr(h32_of_digest("dg")).alias("hlo"),
+        F.expr(h32_of_digest("substring(dg, 9, 8)")).alias("hhi"),
     )
 
     def vote_sql(b: int) -> str:

@@ -1181,7 +1181,7 @@ def q_sim_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Portable md5-derived 32-bit hash (see text/analysis.py).
-from ..text.analysis import _H32 as _H32S
+from ..text.analysis import _H32 as _H32S, h32
 
 
 @register(
@@ -1269,12 +1269,7 @@ def q_sim_srp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             "p",
             "d",
             F.when(
-                F.expr(
-                    _H32S.format(
-                        x="concat(cast(p as string), ',', "
-                        "cast(d as string))"
-                    )
-                )
+                F.expr(h32("concat(cast(p as string), ',', cast(d as string))"))
                 % 2
                 == 0,
                 1,
@@ -1590,12 +1585,7 @@ def q_sim_srp_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
             "p",
             "d",
             F.when(
-                F.expr(
-                    _H32S.format(
-                        x="concat(cast(p as string), ',', "
-                        "cast(d as string))"
-                    )
-                )
+                F.expr(h32("concat(cast(p as string), ',', cast(d as string))"))
                 % 2
                 == 0,
                 1,

@@ -927,7 +927,7 @@ def q_ml_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Portable md5-derived 32-bit hash (see text/analysis.py).
-from ..text.analysis import _H32 as _H32M
+from ..text.analysis import _H32 as _H32M, h32
 
 
 @register(
@@ -985,7 +985,7 @@ def q_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "cross_key",
         "n_rows",
-        (F.expr(_H32M.format(x="cross_key")) % 256).alias("bucket"),
+        (F.expr(h32("cross_key")) % 256).alias("bucket"),
     )
     return (
         hashed.groupBy("bucket")
@@ -1064,9 +1064,7 @@ def q_sample_weighted_ht(
         F.least(
             F.lit(1.0), F.col("o_totalprice") / 500000.0
         ).alias("pi"),
-        F.expr(
-            _H32M.format(x="CAST(o_orderkey AS STRING)")
-        ).alias("h"),
+        F.expr(h32("CAST(o_orderkey AS STRING)")).alias("h"),
     )
     tot = o.agg(
         F.count("*").cast("bigint").alias("n_total"),
@@ -1544,7 +1542,7 @@ def q_sample_hash_bernoulli(
     """
     e = table(spark, sf_dir, "events")
     in_sample = (
-        F.expr(_H32M.format(x="CAST(event_id AS STRING)")) % 100 < 10
+        F.expr(h32("CAST(event_id AS STRING)")) % 100 < 10
     )
     s = e.filter(in_sample).groupBy("event_type").agg(
         F.count("*").cast("bigint").alias("n_sample")

@@ -780,16 +780,13 @@ def q_join_interval_overlap(
 
 
 # Portable md5-derived 32-bit hash (see text/analysis.py).
-from ..text.analysis import _H32 as _H32J
-
-
-_H32J_DG = _H32J.replace("md5({x})", "{d}")
+from ..text.analysis import _H32_DG, h32_of_digest
 
 _BLOOM_SEEDS = (131, 137, 139)
 
 
 def _bloom_oracle() -> str:
-    hw_dim = _H32J_DG.format(d="dg")
+    hw_dim = _H32_DG.format(d="dg")
     seeds_probe = ", ".join(
         f"(((hw * {s}) % 2147483647) % 8192) AS bit{s}"
         for s in _BLOOM_SEEDS
@@ -818,7 +815,7 @@ def _bloom_oracle() -> str:
     probe AS (
       SELECT o_orderkey, o_custkey, o_totalprice, {seeds_probe}
       FROM (SELECT o_orderkey, o_custkey, o_totalprice,
-                   {_H32J_DG.format(d='dg')} AS hw
+                   {_H32_DG.format(d='dg')} AS hw
             FROM (SELECT o_orderkey, o_custkey, o_totalprice,
                          md5(CAST(o_custkey AS VARCHAR)) AS dg
                   FROM orders))
@@ -875,7 +872,7 @@ def q_join_bloom_prefilter(
     ).select("c_custkey")
     dimh = dim.select(
         F.md5(F.col("c_custkey").cast("string")).alias("dg")
-    ).select(F.expr(_H32J_DG.format(d="dg")).alias("hw"))
+    ).select(F.expr(h32_of_digest("dg")).alias("hw"))
 
     def bitcol(s: int) -> F.Column:
         # coalesce makes the join key NON-NULLABLE (o_custkey's parquet
@@ -895,7 +892,7 @@ def q_join_bloom_prefilter(
             "o_totalprice",
             F.md5(F.col("o_custkey").cast("string")).alias("dg"),
         )
-        .withColumn("hw", F.expr(_H32J_DG.format(d="dg")))
+        .withColumn("hw", F.expr(h32_of_digest("dg")))
         .select(
             "o_orderkey",
             "o_custkey",

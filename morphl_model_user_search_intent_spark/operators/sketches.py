@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..io import table
 from ..registry import register
-from ..text.analysis import _H32
+from ..text.analysis import _H32, h32
 
 # ---------------------------------------------------------------- theta
 
@@ -138,7 +138,7 @@ def q_sketch_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
     def sketch(pred):
         ids = keyed.filter(pred).select("s").distinct()
         hashed = ids.select(
-            "s", F.expr(_H32.format(x="s")).alias("h")
+            "s", F.expr(h32("s")).alias("h")
         )
         return hashed.select(
             "h",
@@ -303,7 +303,7 @@ def q_sketch_hllpp(spark: SparkSession, sf_dir: str) -> DataFrame:
             "s"
         )
     ).distinct()
-    hashed = ids.select(F.expr(_H32.format(x="s")).alias("h"))
+    hashed = ids.select(F.expr(h32("s")).alias("h"))
     parts = hashed.select(
         F.floor(F.col("h") / 16777216.0).cast("bigint").alias("bucket"),
         (F.col("h") % 16777216).cast("bigint").alias("rem"),
@@ -398,12 +398,7 @@ def q_sketch_ams(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c",
         "j",
         F.when(
-            F.expr(
-                _H32.format(
-                    x="concat(cast(j as string), ':', "
-                    "cast(user_id as string))"
-                )
-            )
+            F.expr(h32("concat(cast(j as string), ':', cast(user_id as string))"))
             % 2
             == 0,
             1,

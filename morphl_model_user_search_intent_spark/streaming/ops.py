@@ -1052,7 +1052,7 @@ def q_stream_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
 
-    from ..text.analysis import _H32
+    from ..text.analysis import h32
 
     tag = os.path.basename(sf_dir.rstrip("/"))
     src = _staged_four_files(spark, sf_dir)
@@ -1063,7 +1063,7 @@ def q_stream_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    hw = F.expr(_H32.format(x="CAST(user_id AS STRING)"))
+    hw = F.expr(h32("CAST(user_id AS STRING)"))
     seeds = F.array(F.lit(131), F.lit(137), F.lit(139))
     hashed = s.select(
         hw.alias("hw"), F.explode(seeds).alias("seed")
@@ -1087,7 +1087,7 @@ def q_stream_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch = spark.table(qname)
     probe_ids = [(str(i),) for i in (1, 2, 3, 4, 5)]
     probes = spark.createDataFrame(probe_ids, "uid string").select(
-        "uid", F.expr(_H32.format(x="uid")).alias("hw")
+        "uid", F.expr(h32("uid")).alias("hw")
     )
     seed_df = spark.createDataFrame(
         [(131,), (137,), (139,)], "seed bigint"
@@ -1589,7 +1589,13 @@ def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
 
-    from ..llm.dedup import _portable_sig, bands_of, shingle_rows_of
+    from ..llm.dedup import (
+        _portable_sig,
+        agreement,
+        band_pairs,
+        bands_of,
+        shingle_rows_of,
+    )
 
     configure(spark)
     src = _staged_doc_buckets(spark, sf_dir)
@@ -1613,32 +1619,16 @@ def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         _dp = spark.sparkContext.defaultParallelism
         if new_docs.rdd.getNumPartitions() * 2 <= _dp:
             new_docs = new_docs.repartition(max(4, _dp // 2))
-        sig = _portable_sig(
-            spark, shingle_rows_of(new_docs)
-        ).localCheckpoint()
+        sig = _portable_sig(shingle_rows_of(new_docs)).localCheckpoint()
         bands = bands_of(sig)
-        new_b = bands.select(
-            F.col("doc_id").alias("doc_b"), "b", "bk"
-        )
-        within = (
-            bands.join(new_b, ["b", "bk"])
-            .filter(F.col("doc_id") < F.col("doc_b"))
-            .select(F.col("doc_id").alias("doc_a"), "doc_b")
-        )
         if os.path.isdir(band_store):
-            old_bands = spark.read.parquet(band_store).select(
-                F.col("doc_id").alias("doc_a"), "b", "bk"
-            )
             # index docs all precede this batch's ids (id-ordered
-            # arrival), so doc_a < doc_b needs no filter here
-            cross = old_bands.join(new_b, ["b", "bk"]).select(
-                "doc_a", "doc_b"
-            )
-            cand = within.unionByName(cross).distinct()
+            # arrival): probing index ∪ batch bands with the batch's
+            # finds every pair whose doc_b is new
+            probe = spark.read.parquet(band_store).unionByName(bands)
             all_sig = spark.read.parquet(sig_store).unionByName(sig)
         else:
-            cand = within.distinct()
-            all_sig = sig
+            probe, all_sig = bands, sig
         # Round-11 (guide §3.2, the q_dedup_minhash_portable move):
         # the agreement join only needs signatures of docs that
         # appear in a candidate pair, so restrict the sig relation to
@@ -1646,30 +1636,15 @@ def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # ∝ collisions instead of ∝ corpus-so-far, the shape the
         # docstring promises ("the join touches the BATCH plus the
         # collision set — never the corpus").
-        cand = cand.localCheckpoint()
+        cand = band_pairs(probe, bands).localCheckpoint()
         cdocs = (
             cand.select(F.col("doc_a").alias("doc_id"))
             .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
             .distinct()
         )
         all_sig = all_sig.join(F.broadcast(cdocs), "doc_id", "leftsemi")
-        sa = all_sig.select(
-            F.col("doc_id").alias("doc_a"), "j", F.col("mh").alias("mha")
-        )
-        sb = all_sig.select(
-            F.col("doc_id").alias("doc_b"), "j", F.col("mh").alias("mhb")
-        )
         verified = (
-            cand.join(sa, "doc_a")
-            .join(sb, ["doc_b", "j"])
-            .groupBy("doc_a", "doc_b")
-            .agg(
-                F.sum(
-                    F.when(F.col("mha") == F.col("mhb"), 1).otherwise(0)
-                )
-                .cast("bigint")
-                .alias("matches")
-            )
+            agreement(cand, all_sig)
             .filter(F.col("matches") >= 4)
             .select(
                 "doc_a",

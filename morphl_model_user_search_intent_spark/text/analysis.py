@@ -700,10 +700,13 @@ def q_corpus_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q_corpus_clean",
-    oracle=f"""
-    WITH base AS (
+# The corpus-cleaning cascade shared by q_corpus_clean and
+# q_pipeline_e2e: every document's first failing stage (length →
+# language → token floor → alphabetic ratio), else 'duplicate' when an
+# earlier doc_id has the same text (exact dedup, min-doc_id survivor),
+# else 'kept'.
+_VERDICTS_CTES = f"""
+    base AS (
       SELECT doc_id, text, lang, n_chars,
              CAST(len(string_split(trim(text), ' ')) AS BIGINT)
                AS n_toks,
@@ -711,7 +714,7 @@ def q_corpus_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
                   AS DOUBLE) / length(text) AS alpha
       FROM documents
     ),
-    s AS (
+    verdicts AS (
       SELECT *,
              CASE
                WHEN n_chars NOT BETWEEN 150 AND 600 THEN 'length'
@@ -724,10 +727,51 @@ def q_corpus_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
                ELSE 'kept'
              END AS verdict
       FROM base
+    )"""
+
+
+def _verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, n_toks, verdict) of every document — Spark twin of
+    ``_VERDICTS_CTES``.  All cascade predicates are scan-side
+    expressions.  The dedup window partitions by the SHA-256 digest of
+    the text, not the text, so ``text`` is dropped before the exchange
+    and its key is 32 bytes whatever the document's length (the
+    q_dedup_hash move).  A SHA-256 collision stays out of reach even at
+    10¹¹ documents and against crafted input (a 64-bit hash would
+    expect hundreds there), so the partitions are the text's."""
+    d = table(spark, sf_dir, "documents")
+    alpha = F.length(
+        F.regexp_replace(F.col("text"), "[^a-z]", "")
+    ).cast("double") / F.length("text")
+    base = d.select(
+        "doc_id",
+        "lang",
+        "n_chars",
+        F.size(tokens()).cast("bigint").alias("n_toks"),
+        alpha.alias("alpha"),
+        F.unhex(F.sha2("text", 256)).alias("text_digest"),
     )
+    rn = F.row_number().over(
+        W.partitionBy("text_digest").orderBy("doc_id")
+    )
+    verdict = (
+        F.when(~F.col("n_chars").between(150, 600), "length")
+        .when(~F.col("lang").isin(*LANG_ALLOW), "lang")
+        .when(F.col("n_toks") < 25, "tokens")
+        .when(F.col("alpha") < 0.7, "alpha")
+        .when(rn > 1, "duplicate")
+        .otherwise("kept")
+    )
+    return base.select("doc_id", "n_toks", verdict.alias("verdict"))
+
+
+@register(
+    "q_corpus_clean",
+    oracle=f"""
+    WITH {_VERDICTS_CTES}
     SELECT verdict, CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(n_toks) AS BIGINT) AS n_tokens
-    FROM s GROUP BY 1
+    FROM verdicts GROUP BY 1
     """,
 )
 def q_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -740,37 +784,12 @@ def q_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     same filters as q_text_quality/q_dedup_exact, composed, with
     nothing silently dropped.
 
-    All cascade predicates are scan-side JVM expressions; the only
-    shuffle is the dedup window on ``text`` (hash-partitioned by
-    content — duplicate clusters are tiny, so no skew), then a
+    The only shuffles are the digest-keyed dedup window of
+    `_verdicts` (duplicate clusters are tiny, so no skew) and a
     6-row aggregate.
     """
-    from pyspark.sql import Window as W
-
-    d = table(spark, sf_dir, "documents")
-    alpha = F.length(
-        F.regexp_replace(F.col("text"), "[^a-z]", "")
-    ).cast("double") / F.length("text")
-    base = d.select(
-        "doc_id",
-        "text",
-        "lang",
-        "n_chars",
-        F.size(tokens()).cast("bigint").alias("n_toks"),
-        alpha.alias("alpha"),
-    )
-    rn = F.row_number().over(W.partitionBy("text").orderBy("doc_id"))
-    verdict = (
-        F.when(~F.col("n_chars").between(150, 600), "length")
-        .when(~F.col("lang").isin(*LANG_ALLOW), "lang")
-        .when(F.col("n_toks") < 25, "tokens")
-        .when(F.col("alpha") < 0.7, "alpha")
-        .when(F.col("rn") > 1, "duplicate")
-        .otherwise("kept")
-    )
     return (
-        base.withColumn("rn", rn)
-        .select(verdict.alias("verdict"), "n_toks")
+        _verdicts(spark, sf_dir)
         .groupBy("verdict")
         .agg(
             F.count("*").alias("n_docs"),
@@ -986,28 +1005,7 @@ def q_text_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_pipeline_e2e",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id, text, lang, n_chars,
-             CAST(len(string_split(trim(text), ' ')) AS BIGINT)
-               AS n_toks,
-             CAST(length(regexp_replace(text, '[^a-z]', '', 'g'))
-                  AS DOUBLE) / length(text) AS alpha
-      FROM documents
-    ),
-    verdicts AS (
-      SELECT *,
-             CASE
-               WHEN n_chars NOT BETWEEN 150 AND 600 THEN 'length'
-               WHEN lang NOT IN {LANG_ALLOW!r} THEN 'lang'
-               WHEN n_toks < 25 THEN 'tokens'
-               WHEN alpha < 0.7 THEN 'alpha'
-               WHEN row_number() OVER (PARTITION BY text
-                                       ORDER BY doc_id) > 1
-                 THEN 'duplicate'
-               ELSE 'kept'
-             END AS verdict
-      FROM base
-    ),
+    WITH {_VERDICTS_CTES},
     kept AS (
       SELECT doc_id, n_toks,
              CASE WHEN ((doc_id * 2654435761) % 4294967296) % 10 < 8
@@ -1038,40 +1036,16 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Every stage is the already-proven primitive composed
     declaratively, so Catalyst fuses the cascade into the scan, the
-    dedup window is the only text-keyed shuffle, the split is
+    dedup window shuffles a text digest, never the text, the split is
     arithmetic, and the embeddings join hashes on the id — the whole
     pipeline is 3 shuffles end to end regardless of corpus size.
     """
-    from pyspark.sql import Window as W
-
-    d = table(spark, sf_dir, "documents")
     emb = table(spark, sf_dir, "embeddings").select("vec_id")
-    alpha = F.length(
-        F.regexp_replace(F.col("text"), "[^a-z]", "")
-    ).cast("double") / F.length("text")
-    base = d.select(
-        "doc_id",
-        "text",
-        "lang",
-        "n_chars",
-        F.size(tokens()).cast("bigint").alias("n_toks"),
-        alpha.alias("alpha"),
-    )
-    rn = F.row_number().over(W.partitionBy("text").orderBy("doc_id"))
-    verdict = (
-        F.when(~F.col("n_chars").between(150, 600), "length")
-        .when(~F.col("lang").isin(*LANG_ALLOW), "lang")
-        .when(F.col("n_toks") < 25, "tokens")
-        .when(F.col("alpha") < 0.7, "alpha")
-        .when(F.col("rn") > 1, "duplicate")
-        .otherwise("kept")
-    )
     bucket = (
         (F.col("doc_id") * F.lit(2654435761)) % F.lit(4294967296)
     ) % 10
     kept = (
-        base.withColumn("rn", rn)
-        .withColumn("verdict", verdict)
+        _verdicts(spark, sf_dir)
         .filter(F.col("verdict") == "kept")
         .select(
             "doc_id",
@@ -1436,10 +1410,24 @@ def q_text_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Portable 32-bit string hash: first 8 hex chars of md5 parsed by hand
-# (md5 hex is byte-identical in Spark and DuckDB; instr/substring
-# arithmetic is engine-neutral, unlike xxhash64 vs DuckDB hash()).
+# Portable 32-bit string hash: the first 8 hex chars of md5 read as an
+# unsigned integer (md5 hex is byte-identical in Spark and DuckDB,
+# unlike xxhash64 vs DuckDB hash()).  Spark decodes them natively with
+# conv(); the DuckDB oracles, which have no conv(), decode digit by digit
+# with instr/substring: ``_H32`` over md5({x}) and ``_H32_DG`` over a
+# stored md5 hex {d}.  Both give the same BIGINT, NULL for NULL input.
+def h32_of_digest(d: str) -> str:
+    """Spark SQL for the 32-bit hash of a stored md5 hex column ``d``."""
+    return f"CAST(conv(substring({d}, 1, 8), 16, 10) AS BIGINT)"
+
+
+def h32(x: str) -> str:
+    """Spark SQL for the portable 32-bit hash of string expression ``x``."""
+    return h32_of_digest(f"md5({x})")
+
+
 _H32 = "((CAST(instr('0123456789abcdef', substring(md5({x}), 1, 1)) - 1 AS BIGINT)) * 268435456 + (CAST(instr('0123456789abcdef', substring(md5({x}), 2, 1)) - 1 AS BIGINT)) * 16777216 + (CAST(instr('0123456789abcdef', substring(md5({x}), 3, 1)) - 1 AS BIGINT)) * 1048576 + (CAST(instr('0123456789abcdef', substring(md5({x}), 4, 1)) - 1 AS BIGINT)) * 65536 + (CAST(instr('0123456789abcdef', substring(md5({x}), 5, 1)) - 1 AS BIGINT)) * 4096 + (CAST(instr('0123456789abcdef', substring(md5({x}), 6, 1)) - 1 AS BIGINT)) * 256 + (CAST(instr('0123456789abcdef', substring(md5({x}), 7, 1)) - 1 AS BIGINT)) * 16 + (CAST(instr('0123456789abcdef', substring(md5({x}), 8, 1)) - 1 AS BIGINT)) * 1)"
+_H32_DG = _H32.replace("md5({x})", "{d}")
 
 
 @register(
@@ -1501,7 +1489,7 @@ def q_sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = table(spark, sf_dir, "documents")
     toks = d.select(F.explode(tokens()).alias("w"))
-    hashed = toks.select("w", F.expr(_H32.format(x="w")).alias("hw"))
+    hashed = toks.select("w", F.expr(h32("w")).alias("hw"))
     seed_df = spark.createDataFrame(
         [(131,), (137,), (139,)], "seed bigint"
     )
@@ -1516,7 +1504,7 @@ def q_sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
         "w string",
     )
     queries = qwords.select(
-        "w", F.expr(_H32.format(x="w")).alias("hw")
+        "w", F.expr(h32("w")).alias("hw")
     )
     est = (
         queries.crossJoin(F.broadcast(seed_df))
@@ -1593,7 +1581,7 @@ def q_sketch_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = table(spark, sf_dir, "documents")
     vocab = d.select(F.explode(tokens()).alias("w")).distinct()
-    hashed = vocab.select("w", F.expr(_H32.format(x="w")).alias("hw"))
+    hashed = vocab.select("w", F.expr(h32("w")).alias("hw"))
     seed_df = spark.createDataFrame(
         [(131,), (137,), (139,)], "seed bigint"
     )
@@ -1608,7 +1596,7 @@ def q_sketch_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         [("hash",), ("scan",), ("merge",), ("quantum",),
          ("chimera",), ("zzyzx",)],
         "w string",
-    ).select("w", F.expr(_H32.format(x="w")).alias("hw"))
+    ).select("w", F.expr(h32("w")).alias("hw"))
     checked = (
         probes.crossJoin(F.broadcast(seed_df))
         .withColumn("bit", bitpos)
@@ -1886,7 +1874,7 @@ def q_sketch_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("user_id").cast("string").alias("s")
     ).distinct()
     hashed = ids.select(
-        "s", F.expr(_H32.format(x="s")).alias("h")
+        "s", F.expr(h32("s")).alias("h")
     )
     ranked = hashed.select(
         "h",

@@ -3,8 +3,9 @@
 Each pins an internals change against an independent reference so a
 future refactor can't silently drift:
 
-- ``_portable_sig``'s un-exploded 8-aggregate form vs the original
-  seed-crossJoin formulation (the spec the oracle CTEs replay).
+- ``_portable_sig``'s wide 8-aggregate form (native conv hash) vs the
+  original seed-crossJoin formulation over the digit-decoded hash (the
+  spec the oracle CTEs replay), pivoted to the same wide shape.
 - ``q_agg_approx``'s pre-deduplicated exact count vs a direct
   ``countDistinct`` ground truth.
 - ``q_dedup_minhash_portable``'s collision-set pruning: every
@@ -18,9 +19,9 @@ import pyspark.sql.functions as F
 import pytest
 
 from morphl_model_user_search_intent_spark import REGISTRY
+from morphl_model_user_search_intent_spark.text.analysis import _H32
 from morphl_model_user_search_intent_spark.llm.dedup import (
     _MH_MIX,
-    _H32T_DG,
     _MINHASH_SEEDS,
     _portable_sig,
     jaccard_pairs_of,
@@ -31,10 +32,10 @@ from conftest import SF_DIR
 
 
 def test_portable_sig_matches_seed_explode_reference(spark):
-    """The 8-MIN-aggregate + stack() form must be row-identical to the
-    original per-seed crossJoin formulation on an arbitrary shingle
-    frame (duplicate shingles across docs, singleton docs, multi-doc
-    collisions)."""
+    """The wide 8-MIN-aggregate form must be row-identical to the
+    original per-seed crossJoin formulation, pivoted to one row per
+    doc, on an arbitrary shingle frame (duplicate shingles across
+    docs, singleton docs, multi-doc collisions)."""
     sh = spark.createDataFrame(
         [
             (1, "a b c"),
@@ -48,9 +49,7 @@ def test_portable_sig_matches_seed_explode_reference(spark):
     seeds = spark.createDataFrame(
         [(j,) for j in range(_MINHASH_SEEDS)], "j bigint"
     )
-    shd = sh.withColumn("dg", F.md5("shingle")).select(
-        "doc_id", F.expr(_H32T_DG.format(d="dg")).alias("h32")
-    )
+    shd = sh.select("doc_id", F.expr(_H32.format(x="shingle")).alias("h32"))
     reference = (
         shd.crossJoin(F.broadcast(seeds))
         .select(
@@ -58,14 +57,19 @@ def test_portable_sig_matches_seed_explode_reference(spark):
             "j",
             F.expr(_MH_MIX.format(h="h32", j="j")).alias("h"),
         )
-        .groupBy("doc_id", "j")
-        .agg(F.min("h").alias("mh"))
+        .groupBy("doc_id")
+        .pivot("j", list(range(_MINHASH_SEEDS)))
+        .agg(F.min("h"))
     )
-    got = sorted(tuple(r) for r in _portable_sig(spark, sh).collect())
+    sig = _portable_sig(sh)
+    assert sig.columns == ["doc_id"] + [
+        f"m{j}" for j in range(_MINHASH_SEEDS)
+    ]
+    got = sorted(tuple(r) for r in sig.collect())
     want = sorted(tuple(r) for r in reference.collect())
     assert got == want
-    # shape contract: exactly one row per (doc, seed)
-    assert len(got) == 3 * _MINHASH_SEEDS
+    # shape contract: exactly one row per doc
+    assert len(got) == 3
 
 
 def test_agg_approx_exact_parts_is_exact_distinct(spark):

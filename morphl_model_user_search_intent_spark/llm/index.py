@@ -1208,8 +1208,6 @@ def q_sim_index_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
 FILTER_SELECTIVITY_CROSSOVER = 0.5
 FILTER_OVERFETCH = 4  # k' = k·overfetch/selectivity (then verified)
 
-LAST_FILTER_PLAN: str | None = None  # test hook, like LAST_SESSIONIZE_PLAN
-
 
 def serve_topk_filtered(
     spark: SparkSession,
@@ -1238,11 +1236,10 @@ def serve_topk_filtered(
     query set falls back to the pre-filter plan, so the dispatch can
     change physics but never results.  Both paths are oracle-equal
     (q_sim_index_filtered_auto) and the dispatch is pytest-pinned at
-    planted selectivities via LAST_FILTER_PLAN + observe() metrics.
+    planted selectivities via the ``observe()`` metric that names
+    the arm taken (``filtered_serve_dispatch_<arm>``).
     """
     import math
-
-    global LAST_FILTER_PLAN
 
     keep = keep.select("vec_id")
     n_total = (
@@ -1253,12 +1250,12 @@ def serve_topk_filtered(
     n_keep = keep.count()
     sel = (n_keep / n_total) if n_total else 0.0
     if sel <= threshold:
-        LAST_FILTER_PLAN = "pre"
+        arm = "pre"
         out = serve_topk(
             spark, path, nprobe=nprobe, top_k=top_k, include=keep
         )
     else:
-        LAST_FILTER_PLAN = "post"
+        arm = "post"
         kprime = min(
             n_total, math.ceil(top_k * FILTER_OVERFETCH / sel)
         )
@@ -1285,7 +1282,7 @@ def serve_topk_filtered(
             per_q.filter(F.col("n") >= top_k).count() == n_queries
         )
         if not complete:
-            LAST_FILTER_PLAN = "post_fallback_pre"
+            arm = "post_fallback_pre"
             out = serve_topk(
                 spark, path, nprobe=nprobe, top_k=top_k, include=keep
             )
@@ -1300,7 +1297,7 @@ def serve_topk_filtered(
                 )
             )
     return out.observe(
-        f"filtered_serve_dispatch_{LAST_FILTER_PLAN}",
+        f"filtered_serve_dispatch_{arm}",
         F.count(F.lit(1)).alias("n_results"),
         F.max(F.lit(float(sel))).alias("selectivity"),
     )

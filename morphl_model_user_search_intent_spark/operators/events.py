@@ -329,20 +329,15 @@ def sessionize_chunked(ev: DataFrame, chunk: "F.Column") -> DataFrame:
 # sessionize on skewed data still hit the monolithic window's serial
 # bound.  sessionize_auto closes the loop: one cheap sampled profile
 # of the key distribution picks the physical plan, and the choice is
-# recorded both in LAST_SESSIONIZE_PLAN (test hook) and as a named
-# ``observe()`` metric on the returned frame (production hook — the
-# QueryExecutionListener sees "sessionize_dispatch" with the sampled
-# hot-key share and the plan taken on every run).
+# named by an ``observe()`` metric on the returned frame (the
+# QueryExecutionListener sees "sessionize_dispatch_<plan>" with the
+# sampled hot-key share on every run).
 
 #: Fraction of (sampled) events one key must hold before the chunked
 #: plan wins.  Below it the monolithic single-shuffle plan is faster
 #: (no second window pass); above it the serial hot partition
 #: dominates wall-clock long before 5% of 100 TB fits one task.
 SESSIONIZE_SKEW_THRESHOLD = 0.05
-
-#: Plan chosen by the last sessionize_auto call:
-#: "monolithic" | "chunked".
-LAST_SESSIONIZE_PLAN: str | None = None
 
 
 def max_key_share(
@@ -375,11 +370,8 @@ def sessionize_auto(
     hot key exceeds ``threshold`` — both plans are oracle-identical,
     so the dispatch changes physics, never results (the planted-skew
     pytest proves both halves)."""
-    global LAST_SESSIONIZE_PLAN
-
     share = max_key_share(ev, "user_id", fraction)
     chunked = share > threshold
-    LAST_SESSIONIZE_PLAN = "chunked" if chunked else "monolithic"
     out = (
         sessionize_chunked(ev, F.col("ts").cast("date"))
         if chunked

@@ -156,9 +156,10 @@ def q_join_unshipped(spark: SparkSession, sf_dir: str) -> DataFrame:
     then carries map-side-combined (orderkey, partial-sum) state
     instead of raw line rows (~4 lines/order → ~4× fewer shuffle
     rows, 2 narrow columns), which is what kept the r3 form
-    spill-bound at 100x on one box.  A/B (tools/unshipped_ab.py,
-    identical top-10 asserted): 0.92→0.67 s at sf0.1, 2.73→2.28 s at
-    100x; 10x→100x wall ratio 3.5× for 10× data (was 16.3× in the r3
+    spill-bound at 100x on one box.  A/B (tools/unshipped_ab.py at
+    commit 177b011, identical top-10 asserted): 0.92→0.67 s at sf0.1,
+    2.73→2.28 s at 100x; 10x→100x wall ratio 3.5× for 10× data (was
+    16.3× in the r3
     SCALING.md — most of that was also the round→floor units fix,
     which removed a per-row BigDecimal over 30M rows).
     """

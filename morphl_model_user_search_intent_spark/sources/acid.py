@@ -64,6 +64,19 @@ class CommitConflict(Exception):
     retry (optimistic concurrency loser path)."""
 
 
+_RETRIES = 3  # replays against a new snapshot before a writer gives up
+
+
+def _reclaim(paths) -> None:
+    """Best-effort removal of files a lost commit wrote — no manifest
+    references them, so nothing reads them."""
+    for p in paths:
+        try:
+            os.remove(p)
+        except OSError:
+            pass
+
+
 def _manifest_dir(root: str) -> str:
     return os.path.join(root, "manifests")
 
@@ -1666,15 +1679,9 @@ def _commit_mor(
             for f in new_dv:
                 os.remove(f)
             new_dv = [one]
-    pcols = m.get("partition_cols")
     new_files, parts = [], None
-    if added is not None and pcols:
-        tr = m.get("transforms")
-        new_files, parts = _write_files_partitioned(
-            added, root, pcols, exprs=_transform_exprs(tr) if tr else None
-        )
-    elif added is not None:
-        new_files = _write_files(added, root)
+    if added is not None:
+        new_files, parts = _write_layout(added, root, m)
     new_files = _drop_empty(new_files)
     change_files = (
         None if feed is None else _write_files(feed, root, subdir="change")
@@ -1694,18 +1701,124 @@ def _commit_mor(
             op,
             added=new_files,
             partitions=parts,
-            stats=commit_stats(root, new_files, []) if pcols else None,
+            stats=None if parts is None else commit_stats(root, new_files, []),
             change_files=change_files,
             dv_files=dv_files or None,
             **commit_kw,
         )
     except CommitConflict:
-        for f in new_dv + new_files + (change_files or []):
-            try:
-                os.remove(f)
-            except OSError:
-                pass
+        _reclaim(new_dv + new_files + (change_files or []))
         raise
+
+
+def _write_layout(
+    df: DataFrame, root: str, m: dict
+) -> tuple[list[str], dict | None]:
+    """Write the physical frame ``df`` as new data files in manifest
+    ``m``'s layout: hive-partitioned on its spec (hidden transforms
+    computed) when it has one, else flat.  Returns (paths, partition
+    values by basename, or None for a flat table)."""
+    pcols = m.get("partition_cols")
+    if not pcols:
+        return _write_files(df, root), None
+    tr = m.get("transforms")
+    return _write_files_partitioned(
+        df, root, pcols, exprs=_transform_exprs(tr) if tr else None
+    )
+
+
+def _rewrite_set(m: dict, partition_filter: dict | None) -> list[str]:
+    """The files a full-file rewrite replaces: every file, or, given a
+    physical ``partition_filter`` (``{}`` selects every partition),
+    the partitioned files whose recorded values match it — the rule
+    of :func:`resolve_files` at chunk granularity, except that a file
+    recording no partition value is never selected."""
+    if partition_filter is None:
+        return resolve_files(m)
+    norm = _norm_filter(partition_filter)
+
+    def keep(pv: dict | None) -> bool:
+        return bool(pv) and _desc_pvals_keep(pv, norm)[0]
+
+    descs = dict.get(m, "chunks") if isinstance(m, Manifest) else None
+    if descs is None:  # format-1 manifest: per-file values
+        pmap = m.get("partitions", {})
+        return [
+            f for f in m["files"] if keep(pmap.get(os.path.basename(f)))
+        ]
+    return [
+        f
+        for d in descs
+        if keep(d.get("pvals"))
+        for f in m.load_chunk(d)["files"]
+    ]
+
+
+def _rewrite(
+    spark: SparkSession,
+    root: str,
+    op: str,
+    shape,
+    partition_filter: dict | None = None,
+    stat_cols: tuple | list = (),
+) -> int:
+    """THE full-file rewrite, shared by every compaction-shaped writer
+    (OPTIMIZE, Z-order, and the generated-column and row-tracking
+    backfills).  Pins the latest manifest, selects the files
+    (:func:`_rewrite_set` on the logical ``partition_filter``), reads
+    them as ``read_table(..., with_row_ids=True)`` does — through the
+    deletion-vector mask, schema-merged on a mixed column map, in
+    logical names, hidden row ids kept so compaction carries them —
+    applies ``shape``, writes the result in the table's layout,
+    retires the DV entries of the replaced files and publishes one
+    delta commit.  Nothing selected is a no-op.
+
+    ``shape(snap, sm)`` returns the frame to write; it may edit
+    ``sm``, a private copy of the table's schema_meta, and columns it
+    adds get column-map entries.  A rewrite of every file leaves each
+    file with every live column, so it clears ``colmap["mixed"]``.
+    ``stat_cols`` (logical names) get per-file zone maps.  A lost race
+    reclaims the written files and replays against the new snapshot:
+    the old rewrite would drop the interleaved commit's rows."""
+    for _ in range(_RETRIES):
+        m = read_manifest(root)
+        cm = m.get("colmap")
+        sel = _rewrite_set(m, _filter_to_physical(cm, partition_filter))
+        if not sel:
+            return m["version"]
+        snap = _select_logical(cm, _scan(spark, m, sel))
+        sm0 = m.get("schema_meta") or {}
+        sm = json.loads(json.dumps(sm0))
+        out = shape(snap, sm)
+        cm_out = cm
+        if cm:
+            added = [c for c in out.columns if c not in snap.columns]
+            cm_out = _extend_colmap(cm, added) if added else dict(cm)
+            n_all = dict.get(m, "nfiles")
+            if len(sel) == (len(m["files"]) if n_all is None else n_all):
+                cm_out["mixed"] = False
+        files, parts = _write_layout(
+            _select_physical(cm_out, out), root, m
+        )
+        dv_files, dv_new = _live_dv(root, m, removed=set(sel))
+        try:
+            return commit_delta(
+                root,
+                m,
+                op,
+                added=files,
+                removed=sel,
+                partitions=parts,
+                stats=commit_stats(
+                    root, files, [_colmap_lookup(cm_out, c) for c in stat_cols]
+                ),
+                dv_files=dv_files,
+                colmap=_INHERIT if cm_out == cm else cm_out,
+                schema_meta=_INHERIT if sm == sm0 else sm,
+            )
+        except CommitConflict:
+            _reclaim(files + dv_new)
+    raise CommitConflict(f"{op} lost {_RETRIES} races in {root}")
 
 
 def _like(df: DataFrame, base: DataFrame, cm: dict | None) -> DataFrame:
@@ -1733,7 +1846,6 @@ def delete_from_table(
     root: str,
     keys: DataFrame,
     on: str,
-    max_retries: int = 3,
     txn_app: str | None = None,
     txn_version: int | None = None,
     cdc: bool = False,
@@ -1764,7 +1876,7 @@ def delete_from_table(
         txn = {"app": txn_app, "version": int(txn_version)}
     if keys.columns != [on]:
         keys = keys.select(on)
-    for _ in range(max_retries):
+    for _ in range(_RETRIES):
         # txn idempotence (the append/merge ledger, round 8 extended
         # to deletes): a replayed erasure batch must not re-commit —
         # harmless for the mask (anti join dedups) but it would grow
@@ -1827,7 +1939,7 @@ def delete_from_table(
             )
         except CommitConflict:
             pass  # lost the race: replay against the new snapshot
-    raise CommitConflict(f"delete lost {max_retries} races in {root}")
+    raise CommitConflict(f"delete lost {_RETRIES} races in {root}")
 
 
 def merge_table(
@@ -1836,7 +1948,6 @@ def merge_table(
     source: DataFrame,
     on: str,
     version: int | None = None,
-    max_retries: int = 3,
     cdc: bool = False,
     txn_app: str | None = None,
     txn_version: int | None = None,
@@ -1905,7 +2016,7 @@ def merge_table(
         # (rename_column refuses), so its physical == logical name.
         source = _select_physical(_cm, source, extra=("_delete",))
         on = _colmap_lookup(_cm, on)
-    for _ in range(max_retries):
+    for _ in range(_RETRIES):
         if txn is not None:
             done = committed_txn_version(root, txn_app)
             if done is not None and done >= txn_version:
@@ -1920,7 +2031,7 @@ def merge_table(
         except CommitConflict:
             if version is not None:
                 raise  # an explicit-version merge must not replay
-    raise CommitConflict(f"merge lost {max_retries} races in {root}")
+    raise CommitConflict(f"merge lost {_RETRIES} races in {root}")
 
 
 def _merge_arms(
@@ -2193,13 +2304,6 @@ def append_table(
         df = _select_physical(cm, df)
     files = _write_files(df, root)
 
-    def _reclaim() -> None:
-        for f in files:
-            try:
-                os.remove(f)
-            except OSError:
-                pass
-
     for _ in range(20):
         # pin the parent manifest FIRST, then run the duplicate check
         # against history ≤ parent: a successful commit proves nothing
@@ -2213,7 +2317,7 @@ def append_table(
         if txn is not None:
             done = committed_txn_version(root, txn_app)
             if done is not None and done >= txn_version:
-                _reclaim()  # a racing replay already won
+                _reclaim(files)  # a racing replay already won
                 return latest_version(root)
         if m.get("colmap") != cm_base:
             # a concurrent rename/drop/evolution changed the column
@@ -2222,7 +2326,7 @@ def append_table(
             # winner's change, and re-mapping would require a file
             # rewrite.  Fail loudly; the caller replays the append
             # against the new schema.
-            _reclaim()
+            _reclaim(files)
             raise CommitConflict(
                 f"column map changed concurrently in {root}; replay "
                 "the append against the current schema"
@@ -2235,7 +2339,7 @@ def append_table(
             # meta, then retry the commit in this same loop: the
             # retry-with-rewrite Delta documents for contended
             # identity writers.
-            _reclaim()
+            _reclaim(files)
             sm_base = m.get("schema_meta")
             df = df_logical
             sm_commit = _INHERIT
@@ -2263,7 +2367,7 @@ def append_table(
             )
         except CommitConflict:
             continue
-    _reclaim()  # exhausted: reclaim, or the files orphan forever
+    _reclaim(files)  # exhausted: reclaim, or the files orphan forever
     raise CommitConflict(f"append lost 20 races in {root}")
 
 
@@ -2317,26 +2421,19 @@ def append_table_partitioned(
     )
     new_stats = commit_stats(root, files, [])
 
-    def _reclaim() -> None:
-        for f in files:
-            try:
-                os.remove(f)
-            except OSError:
-                pass
-
     for _ in range(20):
         m = read_manifest(root)
         if txn is not None:
             done = committed_txn_version(root, txn_app)
             if done is not None and done >= txn_version:
-                _reclaim()  # a racing replay already won
+                _reclaim(files)  # a racing replay already won
                 return latest_version(root)
         if m.get("schema_meta") != sm_base:
             # identity watermark moved or feature specs edited while
             # our partitioned files were staged — reclaim, re-apply
             # against the new meta, rewrite, retry (same protocol as
             # the flat append)
-            _reclaim()
+            _reclaim(files)
             sm_base = m.get("schema_meta")
             df = df_logical
             sm_commit = _INHERIT
@@ -2376,7 +2473,7 @@ def append_table_partitioned(
             )
         except CommitConflict:
             continue
-    _reclaim()
+    _reclaim(files)
     raise CommitConflict(f"append lost 20 races in {root}")
 
 
@@ -2890,75 +2987,23 @@ def optimize_table(
     spark: SparkSession,
     root: str,
     target_files: int = 2,
-    max_retries: int = 3,
 ) -> int:
     """OPTIMIZE (bin-packing compaction) as a committed table op: read
-    the latest snapshot, rewrite it as ``target_files`` right-sized
-    files (shuffle-free coalesce — pure concatenation, no row moves
-    across existing partition boundaries beyond file stitching), and
-    commit a version that references ONLY the compacted files.  The
+    the latest snapshot through its deletion-vector mask, rewrite
+    every file as ``target_files`` right-sized files (shuffle-free
+    coalesce — pure concatenation), hive-partitioned under the current
+    spec when the table is partitioned, and commit a version that
+    references ONLY the compacted files, with an empty DV list.  The
     rewrite changes no row, so a concurrent reader pinned to the old
     manifest and one on the new version see identical content; old
     files stay until vacuum retires their versions.
 
-    At 100 TB this runs per-partition on the small-file tail (the
-    streaming-ingest residue q_stream_table_ingest accumulates one
-    commit per micro-batch), not on the whole table; compaction
-    commits race with writers through the same optimistic protocol as
-    every other commit — on :class:`CommitConflict` the just-written
-    compacted files are reclaimed and the compaction replays against
-    the NEW snapshot (a lost race means the snapshot changed, so the
-    old rewrite would drop the interleaved commit's rows).  Retries
-    exhausted leaves no orphans behind.
-    """
-    for _ in range(max_retries):
-        parent = latest_version(root)
-        m = read_manifest(root, parent)
-        if m.get("partition_cols"):
-            # round-8 hardening: a plain rewrite of a PARTITIONED
-            # table must preserve its layout — delegate to the
-            # partition-aware compactor over every partition (a {}
-            # filter selects all partitioned files) instead of
-            # silently committing a spec-less manifest
-            return optimize_table_partitioned(
-                spark, root, {}, target_files=target_files,
-                max_retries=max_retries,
-            )
-        snap = read_table(
-            spark, root, version=parent, with_row_ids=True
-        )  # logical (+ hidden row ids — compaction must carry them)
-        files = _write_files(
-            _select_physical(m.get("colmap"), snap).coalesce(
-                target_files
-            ),
-            root,
-        )
-        cm_out: dict | None | object = _INHERIT
-        if m.get("colmap", {}).get("mixed", False):
-            # the full rewrite re-homogenizes the files (every live
-            # physical present everywhere, retired physicals purged)
-            # — restore the single-footer read fast path
-            cm_out = json.loads(json.dumps(m["colmap"]))
-            cm_out["mixed"] = False
-        try:
-            return commit(
-                root, files, "optimize", parent=parent, colmap=cm_out,
-                metrics={
-                    "n_added": len(files),
-                    "n_removed": (
-                        dict.get(m, "nfiles")
-                        if dict.get(m, "nfiles") is not None
-                        else len(m["files"])
-                    ),
-                },
-            )
-        except CommitConflict:
-            for f in files:  # lost the race — reclaim, then replay
-                try:
-                    os.remove(f)
-                except OSError:
-                    pass
-    raise CommitConflict(f"optimize lost {max_retries} races in {root}")
+    At 100 TB this runs per-partition on the small-file tail
+    (:func:`optimize_table_partitioned`), not on the whole table.
+    Races replay through :func:`_rewrite`."""
+    return _rewrite(
+        spark, root, "optimize", lambda snap, sm: snap.coalesce(target_files)
+    )
 
 
 def ensure_optimize_exercise(spark: SparkSession, sf_dir: str) -> str:
@@ -2971,7 +3016,7 @@ def ensure_optimize_exercise(spark: SparkSession, sf_dir: str) -> str:
     configure(spark)
     root = os.path.join(SCRATCH, f"acidtable-opt-{_tag(sf_dir)}")
     ready = os.path.join(root, "_READY_OPT")
-    note = f"acid-opt-pos {_orders_fingerprint(sf_dir)}"
+    note = f"acid-opt-rw {_orders_fingerprint(sf_dir)}"
     try:
         if open(ready).read().strip() == note:
             return root
@@ -3910,7 +3955,6 @@ def merge_table_partitioned(
     root: str,
     source: DataFrame,
     on: str,
-    max_retries: int = 3,
     cdc: bool = False,
 ) -> int:
     """MERGE over a PARTITIONED table, planned WITHIN TOUCHED
@@ -3944,7 +3988,7 @@ def merge_table_partitioned(
         # physical space end-to-end, like the flat merge
         source = _select_physical(_cm, source, extra=("_delete",))
         on = _colmap_lookup(_cm, on)
-    for _ in range(max_retries):
+    for _ in range(_RETRIES):
         m = read_manifest(root)
         pcols = m["partition_cols"]
         tr = m.get("transforms")
@@ -3990,7 +4034,7 @@ def merge_table_partitioned(
             return _commit_mor(root, m, "merge", **arms)
         except CommitConflict:
             pass  # lost the race: replay against the new snapshot
-    raise CommitConflict(f"merge lost {max_retries} races in {root}")
+    raise CommitConflict(f"merge lost {_RETRIES} races in {root}")
 
 
 def optimize_table_partitioned(
@@ -3998,86 +4042,22 @@ def optimize_table_partitioned(
     root: str,
     partition_filter: dict,
     target_files: int = 1,
-    max_retries: int = 3,
 ) -> int:
     """OPTIMIZE confined to the partitions selected by
-    ``partition_filter`` (Delta's ``OPTIMIZE t WHERE part = v``): only
-    the selected partitions' files are read, compacted, and replaced;
-    every other file is carried by reference with its partition values
-    and stats untouched.  At 100 TB compaction always runs this way —
-    on the small-file tail of recently-ingested partitions, never the
-    table."""
-    _cm0 = read_manifest(root).get("colmap")
-    if _cm0 is not None:
-        partition_filter = _filter_to_physical(_cm0, partition_filter)
-    for _ in range(max_retries):
-        m = read_manifest(root)
-        pcols = m["partition_cols"]
-        descs = (
-            dict.get(m, "chunks") if isinstance(m, Manifest) else None
-        )
-        if descs is not None:
-            # chunk-granular selection (round 10): only chunks with
-            # RECORDED partition values that match compact — same
-            # rule as the v1 walk below (conservative on a missing
-            # filter column, flat-written files never selected)
-            norm = _norm_filter(partition_filter or {})
-            sel = []
-            for d in descs:
-                if not d.get("pvals"):
-                    continue  # only partitioned files
-                keep, _missing = _desc_pvals_keep(d["pvals"], norm)
-                if keep:
-                    sel.extend(m.load_chunk(d)["files"])
-        else:
-            pmap = m.get("partitions", {})
-            sel = [
-                f
-                for f in resolve_files(m, partition_filter)
-                if os.path.basename(f) in pmap
-            ]
-        if not sel:
-            return m["version"]  # nothing to compact: no-op
-        # compaction reads THROUGH the deletion-vector mask: the
-        # rewritten files carry no deleted row (their DV entries go
-        # inert with the old basenames); unselected files' entries
-        # carry forward and keep masking
-        snap = (
-            _scan(spark, m, sel, rewrite=True)
-            .drop(*_TOMB)
-            .coalesce(target_files)
-        )
-        tr = m.get("transforms")
-        new_files, new_parts = _write_files_partitioned(
-            snap,
-            root,
-            pcols,
-            exprs=_transform_exprs(tr) if tr else None,
-        )
-        # retire DV entries folded into the rewrite (round-9 fix):
-        # only tombstones masking files carried by reference stay
-        dv_files, dv_new = _live_dv(root, m, removed=set(sel))
-        try:
-            # delta commit: unselected partitions' chunks carry by
-            # descriptor with values/stats untouched
-            return commit_delta(
-                root,
-                m,
-                "optimize",
-                added=new_files,
-                removed=sel,
-                partitions=new_parts,
-                stats=commit_stats(root, new_files, []),
-                partition_cols=pcols,
-                dv_files=dv_files,
-            )
-        except CommitConflict:
-            for f in new_files + dv_new:
-                try:
-                    os.remove(f)
-                except OSError:
-                    pass
-    raise CommitConflict(f"optimize lost {max_retries} races in {root}")
+    ``partition_filter`` (Delta's ``OPTIMIZE t WHERE part = v``; ``{}``
+    selects every partition): only the selected partitions' files are
+    read, compacted, and replaced; every other file is carried by
+    reference with its partition values and stats untouched, and its
+    deletion-vector entries keep masking.  At 100 TB compaction always
+    runs this way — on the small-file tail of recently-ingested
+    partitions, never the table."""
+    return _rewrite(
+        spark,
+        root,
+        "optimize",
+        lambda snap, sm: snap.coalesce(target_files),
+        partition_filter,
+    )
 
 
 def _part_merge_source(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4373,7 +4353,7 @@ def q_table_dv_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     configure(spark)
     root = os.path.join(SCRATCH, f"acidtable-dvfold-{_tag(sf_dir)}")
     ready = os.path.join(root, "_READY_DVFOLD")
-    note = f"acid-dvfold-pos {_orders_fingerprint(sf_dir)}"
+    note = f"acid-dvfold-rw {_orders_fingerprint(sf_dir)}"
     try:
         ok = open(ready).read().strip() == note
     except OSError:
@@ -4424,73 +4404,61 @@ def _morton_key(x: Column, y: Column, bits: int = 16) -> Column:
     return z
 
 
+def _morton_cluster(df: DataFrame, cols: list[str], n: int) -> DataFrame:
+    """``df`` range-partitioned into ``n`` files and sorted on the
+    Morton interleave of ``cols[:2]``, each normalized to a 16-bit
+    rank over the frame's own [min, max] — one 1-row aggregate.  A
+    column with no bound (no rows, or every value NULL) has a zero
+    span: its rank is constant and the rows are written unchanged."""
+    c1, c2 = (F.col(c) for c in cols[:2])
+    lo1, hi1, lo2, hi2 = df.agg(
+        F.min(c1), F.max(c1), F.min(c2), F.max(c2)
+    ).collect()[0]
+
+    def rank(c: Column, lo, hi) -> Column:
+        if lo is None:
+            lo = hi = 0
+        span = max(hi - lo, 1)
+        return ((c - F.lit(lo)) * 65535 / F.lit(span)).cast("bigint")
+
+    return (
+        df.withColumn("_z", _morton_key(rank(c1, lo1, hi1), rank(c2, lo2, hi2)))
+        .repartitionByRange(n, "_z")
+        .sortWithinPartitions("_z")
+        .drop("_z")
+    )
+
+
 def optimize_table_zorder(
     spark: SparkSession,
     root: str,
     cols: list[str],
     target_files: int = 16,
-    max_retries: int = 3,
 ) -> int:
     """OPTIMIZE ... ZORDER BY (c1, c2) as a committed table op: read
-    the snapshot (through any deletion-vector mask), normalize the two
-    cluster columns to 16-bit ranks, range-partition + sort on the
-    Morton interleave, rewrite as ``target_files`` files, and commit
-    with per-file zone maps harvested for BOTH columns — after which
-    :func:`scan_table` / :func:`scan_table_multi` prune on either
-    column (linear clustering only ever serves its one sort column).
-    The normalization min/max is one tiny 4-value aggregate; the
-    rewrite is one distributed range-shuffle — the same cost shape as
-    a plain OPTIMIZE.  Concurrency: the usual optimistic replay."""
-    if read_manifest(root).get("partition_cols"):
+    the snapshot (through any deletion-vector mask), cluster it on the
+    Morton interleave of the two columns (:func:`_morton_cluster`),
+    rewrite as ``target_files`` files, and commit with per-file zone
+    maps harvested for BOTH columns — after which :func:`scan_table`
+    / :func:`scan_table_multi` prune on either column (linear
+    clustering only ever serves its one sort column).  The rewrite is
+    one distributed range-shuffle — the same cost shape as a plain
+    OPTIMIZE.  Concurrency: the usual optimistic replay."""
+    m = read_manifest(root)
+    if m.get("partition_cols"):
         raise ValueError(
             "table is partitioned — use optimize_table_zorder_"
             "partitioned (Z-order WITHIN selected partitions); a "
             "global Morton rewrite would destroy the partition layout"
         )
-    for _ in range(max_retries):
-        parent = latest_version(root)
-        snap = read_table(spark, root, version=parent)
-        c1, c2 = (F.col(c) for c in cols[:2])
-        lo1, hi1, lo2, hi2 = snap.agg(
-            F.min(c1), F.max(c1), F.min(c2), F.max(c2)
-        ).collect()[0]
-        span1 = max(hi1 - lo1, 1)
-        span2 = max(hi2 - lo2, 1)
-        nx = ((c1 - F.lit(lo1)) * 65535 / F.lit(span1)).cast("bigint")
-        ny = ((c2 - F.lit(lo2)) * 65535 / F.lit(span2)).cast("bigint")
-        clustered = (
-            snap.withColumn("_z", _morton_key(nx, ny))
-            .repartitionByRange(target_files, "_z")
-            .sortWithinPartitions("_z")
-            .drop("_z")
-        )
-        _pm = read_manifest(root, parent)
-        cm = _pm.get("colmap")
-        n_old = (
-            dict.get(_pm, "nfiles")
-            if dict.get(_pm, "nfiles") is not None
-            else len(_pm["files"])
-        )
-        files = _write_files(_select_physical(cm, clustered), root)
-        stat_cols = [
-            _colmap_lookup(cm, c) if cm else c for c in cols[:2]
-        ]
-        try:
-            return commit(
-                root,
-                files,
-                f"zorder:{','.join(stat_cols)}",
-                parent=parent,
-                stats=commit_stats(root, files, stat_cols),
-                metrics={"n_added": len(files), "n_removed": n_old},
-            )
-        except CommitConflict:
-            for f in files:
-                try:
-                    os.remove(f)
-                except OSError:
-                    pass
-    raise CommitConflict(f"zorder lost {max_retries} races in {root}")
+    phys = [_colmap_lookup(m.get("colmap"), c) for c in cols[:2]]
+    return _rewrite(
+        spark,
+        root,
+        f"zorder:{','.join(phys)}",
+        lambda snap, sm: _morton_cluster(snap, cols, target_files),
+        stat_cols=cols[:2],
+    )
 
 
 def scan_table_multi(
@@ -4539,7 +4507,7 @@ def ensure_zorder_exercise(spark: SparkSession, sf_dir: str) -> str:
     configure(spark)
     root = os.path.join(SCRATCH, f"acidtable-z-{_tag(sf_dir)}")
     ready = os.path.join(root, "_READY_Z")
-    note = f"acid-z {_orders_fingerprint(sf_dir)}"
+    note = f"acid-z-rw {_orders_fingerprint(sf_dir)}"
     try:
         if open(ready).read().strip() == note:
             return root
@@ -5247,7 +5215,6 @@ def overwrite_partition(
     root: str,
     df: DataFrame,
     partition_filter: dict,
-    max_retries: int = 3,
 ) -> int:
     """DYNAMIC PARTITION OVERWRITE (INSERT OVERWRITE ... PARTITION —
     the daily-restatement op: yesterday's partition recomputed and
@@ -5259,7 +5226,7 @@ def overwrite_partition(
     guard Spark's dynamic-overwrite mode leaves to runtime.
     Constraints are enforced like every other write; conflicts replay
     as usual."""
-    for _ in range(max_retries):
+    for _ in range(_RETRIES):
         m = read_manifest(root)
         pcols = m["partition_cols"]
         # plan-only guard: no stray row outside the target partitions
@@ -5309,16 +5276,10 @@ def overwrite_partition(
             out_df, _sm_new = _apply_write_meta(out_df, sm)
             if _sm_new != sm:
                 sm_commit = _sm_new
-        _tr = m.get("transforms")
-        new_files, new_parts = _write_files_partitioned(
-            _select_physical(cm, out_df),
-            root,
-            pcols,
-            exprs=_transform_exprs(_tr) if _tr else None,
+        new_files, new_parts = _write_layout(
+            _select_physical(cm, out_df), root, m
         )
-        dv_files, dv_new = _live_dv(
-            root, m, removed=replaced
-        )
+        dv_files, dv_new = _live_dv(root, m, removed=replaced)
         try:
             # delta commit (round 10): the restated partitions' old
             # chunks drop by descriptor, the new write appends fresh
@@ -5336,13 +5297,9 @@ def overwrite_partition(
                 schema_meta=sm_commit,
             )
         except CommitConflict:
-            for f in new_files + dv_new:
-                try:
-                    os.remove(f)
-                except OSError:
-                    pass
+            _reclaim(new_files + dv_new)
     raise CommitConflict(
-        f"overwrite lost {max_retries} races in {root}"
+        f"overwrite lost {_RETRIES} races in {root}"
     )
 
 
@@ -5412,7 +5369,6 @@ def optimize_table_zorder_partitioned(
     cols: list[str],
     partition_filter: dict,
     target_files: int = 8,
-    max_retries: int = 3,
 ) -> int:
     """OPTIMIZE ... ZORDER BY (c1, c2) WHERE <partition> — Z-ordering
     WITHIN selected partitions (the documented composition for tables
@@ -5421,83 +5377,18 @@ def optimize_table_zorder_partitioned(
     files are read (through any DV mask), rewritten on the interleave
     with fresh two-column zone maps, and swapped; every other file is
     carried by reference with metadata verbatim.  The normalization
-    min/max comes from the selected slice (one tiny aggregate), so
-    each partition's Morton grid is tight for ITS value range."""
-    _cm0 = read_manifest(root).get("colmap")
-    if _cm0 is not None:
-        # physical space end-to-end: raw file reads below see
-        # physical names, so translate the caller's logical cluster
-        # columns and partition filter once
-        cols = [_colmap_lookup(_cm0, c) for c in cols]
-        partition_filter = _filter_to_physical(_cm0, partition_filter)
-    for _ in range(max_retries):
-        m = read_manifest(root)
-        pcols = m["partition_cols"]
-        descs = (
-            dict.get(m, "chunks") if isinstance(m, Manifest) else None
-        )
-        if descs is not None:
-            # chunk-granular selection, same rule as the v1 walk
-            norm = _norm_filter(partition_filter or {})
-            sel = []
-            for d in descs:
-                if not d.get("pvals"):
-                    continue  # only partitioned files
-                keep, _missing = _desc_pvals_keep(d["pvals"], norm)
-                if keep:
-                    sel.extend(m.load_chunk(d)["files"])
-        else:
-            pmap = m.get("partitions", {})
-            sel = [
-                f
-                for f in resolve_files(m, partition_filter)
-                if os.path.basename(f) in pmap
-            ]
-        if not sel:
-            return m["version"]
-        snap = _scan(spark, m, sel, rewrite=True).drop(*_TOMB)
-        c1, c2 = (F.col(c) for c in cols[:2])
-        lo1, hi1, lo2, hi2 = snap.agg(
-            F.min(c1), F.max(c1), F.min(c2), F.max(c2)
-        ).collect()[0]
-        span1 = max(hi1 - lo1, 1)
-        span2 = max(hi2 - lo2, 1)
-        nx = ((c1 - F.lit(lo1)) * 65535 / F.lit(span1)).cast("bigint")
-        ny = ((c2 - F.lit(lo2)) * 65535 / F.lit(span2)).cast("bigint")
-        clustered = (
-            snap.withColumn("_z", _morton_key(nx, ny))
-            .repartitionByRange(target_files, "_z")
-            .sortWithinPartitions("_z")
-            .drop("_z")
-        )
-        _tr = m.get("transforms")
-        new_files, new_parts = _write_files_partitioned(
-            clustered,
-            root,
-            pcols,
-            exprs=_transform_exprs(_tr) if _tr else None,
-        )
-        dv_files, dv_new = _live_dv(root, m, removed=set(sel))
-        try:
-            # delta commit: unselected partitions carry by descriptor
-            return commit_delta(
-                root,
-                m,
-                f"zorder:{','.join(cols[:2])}:{partition_filter}",
-                added=new_files,
-                removed=sel,
-                partitions=new_parts,
-                stats=commit_stats(root, new_files, list(cols[:2])),
-                partition_cols=pcols,
-                dv_files=dv_files,
-            )
-        except CommitConflict:
-            for f in new_files + dv_new:
-                try:
-                    os.remove(f)
-                except OSError:
-                    pass
-    raise CommitConflict(f"zorder lost {max_retries} races in {root}")
+    min/max comes from the selected slice, so each partition's Morton
+    grid is tight for ITS value range."""
+    cm = read_manifest(root).get("colmap")
+    phys = [_colmap_lookup(cm, c) for c in cols[:2]]
+    return _rewrite(
+        spark,
+        root,
+        f"zorder:{','.join(phys)}:{_filter_to_physical(cm, partition_filter)}",
+        lambda snap, sm: _morton_cluster(snap, cols, target_files),
+        partition_filter,
+        stat_cols=cols[:2],
+    )
 
 
 @register(
@@ -5532,7 +5423,7 @@ def q_table_zorder_partitioned(
     configure(spark)
     root = os.path.join(SCRATCH, f"acidtable-zp-{_tag(sf_dir)}")
     ready = os.path.join(root, "_READY_ZP")
-    note = f"acid-zp {_orders_fingerprint(sf_dir)}"
+    note = f"acid-zp-rw {_orders_fingerprint(sf_dir)}"
     try:
         ok = open(ready).read().strip() == note
     except OSError:
@@ -5945,7 +5836,6 @@ def update_table(
     root: str,
     updates: DataFrame,
     on: str,
-    max_retries: int = 3,
     cdc: bool = False,
 ) -> int:
     """MERGE-ON-READ UPDATE via deletion vectors (round 9) — the
@@ -5979,7 +5869,7 @@ def update_table(
             f"update batch has duplicate key {dup[0][0]!r} — one "
             "post-image per key required"
         )
-    for _ in range(max_retries):
+    for _ in range(_RETRIES):
         m = read_manifest(root)
         cm = m.get("colmap")
         on_p = _colmap_lookup(cm, on) if cm is not None else on
@@ -6048,7 +5938,7 @@ def update_table(
             )
         except CommitConflict:
             pass  # lost the race: replay against the new snapshot
-    raise CommitConflict(f"update lost {max_retries} races in {root}")
+    raise CommitConflict(f"update lost {_RETRIES} races in {root}")
 
 
 def ensure_update_mor_exercise(
@@ -6992,7 +6882,6 @@ def add_generated_column(
     col: str,
     expr_sql: str,
     target_files: int = 4,
-    max_retries: int = 3,
 ) -> int:
     """ADD a GENERATED column to an EXISTING table: declare the
     expression in ``schema_meta`` and BACKFILL existing rows in the
@@ -7006,89 +6895,14 @@ def add_generated_column(
     expression, never a hint.  Like CHECK constraints, the expression
     binds by column name, so renaming a referenced column is refused
     by the same token guard."""
-    for _ in range(max_retries):
-        parent = latest_version(root)
-        m = read_manifest(root, parent)
-        snap = read_table(spark, root, version=parent,
-                          with_row_ids=True)
+
+    def shape(snap: DataFrame, sm: dict) -> DataFrame:
         if col in snap.columns:
             raise ValueError(f"column {col!r} already exists")
-        sm = json.loads(json.dumps(m.get("schema_meta") or {}))
         sm.setdefault("generated", {})[col] = expr_sql
-        out = snap.withColumn(col, F.expr(expr_sql))
-        cm_out: dict | None | object = _INHERIT
-        cm = m.get("colmap")
-        if cm is not None:
-            cm_out = _extend_colmap(cm, [col])
-            out = _select_physical(cm_out, out)
-        try:
-            return _backfill_commit(
-                spark, root, m, parent, out,
-                f"add-generated:{col}", cm_out, sm, target_files,
-            )
-        except CommitConflict:
-            continue  # files reclaimed by _backfill_commit
-    raise CommitConflict(
-        f"add_generated_column lost {max_retries} races in {root}"
-    )
+        return snap.withColumn(col, F.expr(expr_sql)).coalesce(target_files)
 
-
-def _backfill_commit(
-    spark: SparkSession,
-    root: str,
-    m: dict,
-    parent: int,
-    out: DataFrame,
-    op: str,
-    cm_out,
-    sm: dict,
-    target_files: int,
-) -> int:
-    """Commit ``out`` (physical frame) as the FULL post-state of a
-    backfill rewrite, preserving the table's layout: partitioned
-    tables rewrite hive-partitioned with partition values and stats
-    recorded (hidden transforms recomputed); flat tables coalesce to
-    ``target_files``.  Any deletion-vector backlog folds in (the
-    rewrite read through the mask, the commit carries no DV list).
-    On :class:`CommitConflict` the staged files are reclaimed and the
-    conflict re-raised for the caller's retry loop."""
-    pcols = m.get("partition_cols")
-    if pcols:
-        tr = m.get("transforms")
-        files, parts = _write_files_partitioned(
-            out, root, pcols,
-            exprs=_transform_exprs(tr) if tr else None,
-        )
-    else:
-        parts = None
-        files = _write_files(out.coalesce(target_files), root)
-    try:
-        return commit(
-            root,
-            files,
-            op,
-            parent=parent,
-            partition_cols=pcols,
-            partitions=parts,
-            stats=commit_stats(root, files, []) if pcols else None,
-            colmap=cm_out,
-            schema_meta=sm,
-            metrics={
-                "n_added": len(files),
-                "n_removed": (
-                    dict.get(m, "nfiles")
-                    if dict.get(m, "nfiles") is not None
-                    else len(m["files"])
-                ),
-            },
-        )
-    except CommitConflict:
-        for f in files:
-            try:
-                os.remove(f)
-            except OSError:
-                pass
-        raise
+    return _rewrite(spark, root, f"add-generated:{col}", shape)
 
 
 def enable_row_tracking(
@@ -7098,7 +6912,6 @@ def enable_row_tracking(
     col: str = "_row_id",
     buckets: int = 64,
     target_files: int = 4,
-    max_retries: int = 3,
 ) -> int:
     """Enable ROW TRACKING on an existing table (Delta's row
     tracking): one backfill rewrite assigns every current row a
@@ -7111,17 +6924,13 @@ def enable_row_tracking(
     rewrites, and normal reads hide the column
     (``read_table(..., with_row_ids=True)`` exposes it).  New tables
     enable it for free at :func:`create_table` via the same spec."""
-    for _ in range(max_retries):
-        parent = latest_version(root)
-        m = read_manifest(root, parent)
-        if (m.get("schema_meta") or {}).get("identity"):
+
+    def shape(snap: DataFrame, sm: dict) -> DataFrame:
+        if sm.get("identity"):
             raise ValueError(
-                f"table already has an identity/row-id column in "
-                f"{root}"
+                f"table already has an identity/row-id column in {root}"
             )
-        snap = read_table(spark, root, version=parent)
         out, n = _assign_identity(snap, col, 0, list(order), buckets)
-        sm = json.loads(json.dumps(m.get("schema_meta") or {}))
         sm["identity"] = {
             "col": col,
             "order": list(order),
@@ -7129,21 +6938,9 @@ def enable_row_tracking(
             "high": int(n),
             "hidden": True,
         }
-        cm_out: dict | None | object = _INHERIT
-        cm = m.get("colmap")
-        if cm is not None:
-            cm_out = _extend_colmap(cm, [col])
-            out = _select_physical(cm_out, out)
-        try:
-            return _backfill_commit(
-                spark, root, m, parent, out,
-                "enable-row-tracking", cm_out, sm, target_files,
-            )
-        except CommitConflict:
-            continue  # files reclaimed by _backfill_commit
-    raise CommitConflict(
-        f"enable_row_tracking lost {max_retries} races in {root}"
-    )
+        return out.coalesce(target_files)
+
+    return _rewrite(spark, root, "enable-row-tracking", shape)
 
 
 def ensure_default_exercise(spark: SparkSession, sf_dir: str) -> str:
@@ -7387,7 +7184,7 @@ def ensure_rowtrack_exercise(spark: SparkSession, sf_dir: str) -> str:
     configure(spark)
     root = os.path.join(SCRATCH, f"acidtable-rowtrk-{_tag(sf_dir)}")
     ready = os.path.join(root, "_READY_ROWTRK")
-    note = f"acid-rowtrk-pos {_orders_fingerprint(sf_dir)}"
+    note = f"acid-rowtrk-rw {_orders_fingerprint(sf_dir)}"
     try:
         if open(ready).read().strip() == note:
             return root
@@ -7645,11 +7442,7 @@ def build_bloom_index(
             )
         except CommitConflict:
             continue
-    for f in sidecars:
-        try:
-            os.remove(f)
-        except OSError:
-            pass
+    _reclaim(sidecars)
     raise CommitConflict(f"bloom build lost 5 races in {root}")
 
 

@@ -60,6 +60,16 @@ def jobs_during(spark, fn):
     return out, sc.statusTracker().getJobIdsForGroup(group)
 
 
+def dispatch_of(df, prefix):
+    """The plan a dispatching operator chose for ``df``: the suffix of
+    the outermost ``observe()`` metric named ``<prefix><plan>`` in its
+    logical plan."""
+    import re
+
+    plan = df._jdf.queryExecution().logical().toString()
+    return re.search(re.escape(prefix) + r"(\w+)", plan).group(1)
+
+
 def _norm(v):
     """Normalize a cell for cross-engine comparison (mirrors the type
     bridges the driver faces: Decimal↔float, µs timestamps, lists)."""

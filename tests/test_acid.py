@@ -1085,11 +1085,11 @@ def test_optimize_conflict_loser_reclaims_and_replays(spark, tmp_path):
         "price",
     ).limit(10)
 
-    real_commit = acid.commit
+    real_publish = acid._publish
     raced = {"done": False}
 
-    def racing_commit(root_, files, op, parent, **kw):
-        if op == "optimize" and not raced["done"]:
+    def racing_publish(root_, v, manifest):
+        if manifest["op"] == "optimize" and not raced["done"]:
             raced["done"] = True
             # interleave a real append BEFORE the optimize publishes
             from morphl_model_user_search_intent_spark.sources.acid import (
@@ -1097,15 +1097,15 @@ def test_optimize_conflict_loser_reclaims_and_replays(spark, tmp_path):
             )
 
             append_table(spark, root_, extra)
-        return real_commit(root_, files, op, parent, **kw)
+        return real_publish(root_, v, manifest)
 
     data_dir = os.path.join(root, "data")
     n_before = len(os.listdir(data_dir))
-    acid.commit = racing_commit
+    acid._publish = racing_publish
     try:
         v = acid.optimize_table(spark, root, target_files=2)
     finally:
-        acid.commit = real_commit
+        acid._publish = real_publish
     assert raced["done"]
     m = read_manifest(root, v)
     assert m["op"] == "optimize"

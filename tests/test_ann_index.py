@@ -22,7 +22,7 @@ import time
 
 from morphl_model_user_search_intent_spark import REGISTRY
 
-from conftest import SF_DIR
+from conftest import SF_DIR, dispatch_of
 
 
 def test_build_layout_and_idempotence(spark):
@@ -623,12 +623,14 @@ def test_filtered_serve_dispatch_at_planted_selectivities(spark):
     e = table(spark, SF_DIR, "embeddings").select("vec_id", "label")
 
     def run(keep, **kw):
-        return {
+        df = ix.serve_topk_filtered(
+            spark, path, keep, nprobe=16, top_k=5, **kw
+        )
+        got = {
             (r.qid, r.rank): (r.neighbor_id, r.cos_sim)
-            for r in ix.serve_topk_filtered(
-                spark, path, keep, nprobe=16, top_k=5, **kw
-            ).collect()
+            for r in df.collect()
         }
+        return got, dispatch_of(df, "filtered_serve_dispatch_")
 
     def ref(keep):
         return {
@@ -640,14 +642,14 @@ def test_filtered_serve_dispatch_at_planted_selectivities(spark):
 
     # ~10% selectivity → pre-filter arm
     low = e.filter(F.col("label") % 10 == 0).select("vec_id")
-    got = run(low)
-    assert ix.LAST_FILTER_PLAN == "pre"
+    got, arm = run(low)
+    assert arm == "pre"
     assert got == ref(low)
 
     # ~90% selectivity → post-filter arm, result identical to pre
     high = e.filter(F.col("label") % 10 != 0).select("vec_id")
-    got = run(high)
-    assert ix.LAST_FILTER_PLAN == "post"
+    got, arm = run(high)
+    assert arm == "post"
     assert got == ref(high)
 
     # deficiency: a 3-member match set cannot yield 5 results per
@@ -658,6 +660,6 @@ def test_filtered_serve_dispatch_at_planted_selectivities(spark):
         .limit(3)
         .select("vec_id")
     )
-    got = run(tiny, threshold=0.0)  # force the post arm
-    assert ix.LAST_FILTER_PLAN == "post_fallback_pre"
+    got, arm = run(tiny, threshold=0.0)  # force the post arm
+    assert arm == "post_fallback_pre"
     assert got == ref(tiny)

@@ -142,15 +142,14 @@ _COLLECT_WHITELIST: dict[str, set[str]] = {
     # the files):
     #   _source_partitions — the partitioned merge source's distinct
     #     partition tuples (≤ partition count);
-    #   optimize_table_zorder / q_table_zorder /
+    #   _morton_cluster / q_table_zorder /
     #   q_table_scan_composed — one 1-row min/max aggregate each
     #     (normalization spans and scale-relative box bounds).
     "sources/acid.py": {
         "_source_partitions",
-        "optimize_table_zorder",
+        "_morton_cluster",
         "q_table_zorder",
         "q_table_scan_composed",
-        "optimize_table_zorder_partitioned",
         "q_table_zorder_partitioned",
         # _validate_constraints: LIMIT-3 example rows for the
         # ConstraintViolation message — constant-bounded by the limit

@@ -9,6 +9,8 @@ import os
 
 from morphl_model_user_search_intent_spark import REGISTRY
 
+from conftest import dispatch_of
+
 
 def _planted_skew_dir(spark, tmp_path) -> str:
     """Synthetic events.parquet with one user holding ~30% of all
@@ -142,18 +144,16 @@ def test_auto_dispatch_picks_chunked_on_skew_and_matches_serial(
     chunked plan on the planted 30%-hot-user fixture, and (c) return
     serial-identical rows either way — the dispatch changes physics,
     never results."""
-    from morphl_model_user_search_intent_spark.operators import events
-
     # balanced fixture → monolithic (sf0.01: hottest user holds
     # ~0.9% of events; sf0.001 is NOT balanced — its hottest user
     # holds 8.8%, and the dispatcher correctly flips to chunked there)
-    REGISTRY["q_sessionize_auto"].fresh(
-        spark, "/root/testdata/sf0.01"
-    ).collect()
-    assert events.LAST_SESSIONIZE_PLAN == "monolithic"
+    bal = REGISTRY["q_sessionize_auto"].fresh(spark, "/root/testdata/sf0.01")
+    bal.collect()
+    assert dispatch_of(bal, "sessionize_dispatch_") == "monolithic"
 
     # planted hot key → chunked, rows identical to the serial form
     sf_dir = _planted_skew_dir(spark, tmp_path)
+    hot = REGISTRY["q_sessionize_auto"].fresh(spark, sf_dir)
     auto = {
         (r.user_id, r.session_id): (
             r.n_events,
@@ -161,11 +161,9 @@ def test_auto_dispatch_picks_chunked_on_skew_and_matches_serial(
             r.session_end,
             r.session_value,
         )
-        for r in REGISTRY["q_sessionize_auto"]
-        .fresh(spark, sf_dir)
-        .collect()
+        for r in hot.collect()
     }
-    assert events.LAST_SESSIONIZE_PLAN == "chunked"
+    assert dispatch_of(hot, "sessionize_dispatch_") == "chunked"
     serial = {
         (r.user_id, r.session_id): (
             r.n_events,

@@ -421,8 +421,8 @@ def main() -> int:
         # Engine-vs-oracle wall split (round-6 verdict item 2): the
         # sweep's per-row total conflates the engine under grade with
         # DuckDB recomputing the oracle; the split makes long-tail
-        # rows attributable.  Appended AFTER the status so
-        # merge_sweep's line regex still parses.
+        # rows attributable.  Appended AFTER the status so a
+        # line regex keyed on the status prefix still parses.
         split = ""
         if t_engine is not None:
             split = f"  [eng {t_engine:.2f}s"

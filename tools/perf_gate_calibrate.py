@@ -17,13 +17,11 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+import bench  # noqa: E402
 from morphl_model_user_search_intent_spark import REGISTRY, get_spark  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
-HEADLINE = [
-    "q_agg_hash", "q_join_unshipped", "q_join_multiway", "q_win_topk",
-    "q_agg_distinct", "q_sessionize", "q_stream_tumbling", "q_sim_knn",
-    "q_text_wordcount", "q_json_funcs",
+HEADLINE = bench.HEADLINE + [
     # round-5 driver-window additions guarded against plan regressions
     # (serve assumes a staged index — build cost excluded by marker)
     "q_sessionize_chunked", "q_sim_index_serve",

@@ -32,6 +32,7 @@ sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 
+import bench
 from morphl_model_user_search_intent_spark import REGISTRY, get_spark
 from morphl_model_user_search_intent_spark.io import table
 from morphl_model_user_search_intent_spark.sources.formats import SCRATCH
@@ -39,17 +40,7 @@ from morphl_model_user_search_intent_spark.sources.formats import SCRATCH
 NS = [int(a) for a in sys.argv[1:]] or [10, 100]
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-HEADLINE = [
-    "q_agg_hash",
-    "q_join_unshipped",
-    "q_join_multiway",
-    "q_win_topk",
-    "q_agg_distinct",
-    "q_sessionize",
-    "q_stream_tumbling",
-    "q_sim_knn",
-    "q_text_wordcount",
-    "q_json_funcs",
+HEADLINE = bench.HEADLINE + [
     # LLM-pipeline extension ops (not in bench.py's headline set, but
     # scale posture is graded the same): chunking and masking are
     # shuffle-free scan-side plans; nearest-centroid is one dim-agg

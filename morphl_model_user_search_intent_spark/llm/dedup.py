@@ -21,6 +21,8 @@ embedding-cosine near-dup is q_sim_threshold in llm/similarity.py.
 
 from __future__ import annotations
 
+import uuid
+
 import pyspark
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -75,32 +77,33 @@ def _shingle_rows(
 ) -> DataFrame:
     """(doc_id, shingle) rows of the ``documents`` table — see
     `shingle_rows_of`."""
-
-    # NOTE (round 10): deliberately NOT spread() here — measured A/B
-    # at sf0.01 and sf0.1, fanning the scan out before this kernel
-    # REGRESSES every _shingle_rows consumer (q_dedup_jaccard 2.8→3.4 s,
-    # q_dedup_clusters 1.7→2.5 s at sf0.01, minhash_portable 4.2→5.7 s):
-    # the exploded shingle rows are shuffled by the inverted-index
-    # self-join immediately after, so the extra exchange buys nothing
-    # the join's own exchange doesn't already provide.  q_dedup_minhash
-    # (whose per-doc arrays stay un-shuffled) keeps it.
     d = table(spark, sf_dir, "documents").select("doc_id", "text")
     return shingle_rows_of(d, n)
 
 
+def doc_shingles(d: DataFrame, n: int = 3) -> DataFrame:
+    """(doc_id, sh) of an arbitrary (doc_id, text) frame: ``sh`` the
+    array of distinct word n-grams of the document's `tokens()`, one
+    row per document.  Documents shorter than ``n`` tokens yield no
+    row, which is also what the DuckDB oracles' ``range(1, len-n+2)``
+    produces.  The batch and streaming MinHash paths sign these
+    arrays, so their signatures agree byte-for-byte."""
+    t = d.select("doc_id", tokens().alias("toks"))
+    return t.filter(F.size("toks") >= n).select(
+        "doc_id", F.array_distinct(ngrams(F.col("toks"), n)).alias("sh")
+    )
+
+
 def shingle_rows_of(d: DataFrame, n: int = 3) -> DataFrame:
     """(doc_id, shingle) rows of an arbitrary (doc_id, text) frame:
-    the distinct word n-grams of each document's `tokens()`, one row
-    each.  Docs shorter than ``n`` tokens yield no rows, which is also
-    what the DuckDB oracles' ``range(1, len-n+2)`` produces.  The
-    streaming dedup path shingles each micro-batch with this same
-    function, so stream and batch signatures agree byte-for-byte."""
-    t = d.select("doc_id", tokens().alias("toks"))
-    return t.select(
-        "doc_id",
-        F.explode(F.array_distinct(ngrams(F.col("toks"), n))).alias(
-            "shingle"
-        ),
+    `doc_shingles` exploded, one row per distinct n-gram.
+
+    ``sh`` is never empty, so ``explode_outer`` yields the rows
+    ``explode`` would; a plain ``explode`` of the column makes the
+    optimizer infer a ``size(sh) > 0`` filter and push it below the
+    projection, which re-tokenizes inside the n-gram lambda."""
+    return doc_shingles(d, n).select(
+        "doc_id", F.explode_outer("sh").alias("shingle")
     )
 
 
@@ -623,10 +626,8 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     only the acceptance predicate differs, so the two operators
     share their scale story — and their costs — exactly.
     """
-    # Round-10 (guide §2.4): the size aggregate is a broadcast subtree
-    # that re-ran the shingle scan and explode alongside the self-join
-    # sides — checkpoint the shingle frame once for all three
-    # consumers (same move as q_dedup_minhash_portable's sh/sig).
+    # The size aggregate and both self-join sides read the shingle
+    # frame: checkpoint it once for all three.
     sh = _shingle_rows(spark, sf_dir).localCheckpoint()
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
@@ -698,24 +699,35 @@ _SIG_ORACLE_CTES = f"""
     )"""
 
 
-def _portable_sig(sh: DataFrame) -> DataFrame:
-    """(doc_id, m0..m7) signature table from a (doc_id, shingle) frame:
-    one wide row per document, ``m{j}`` the minimum over its shingles
-    of ``mix(h32(shingle), j)`` — Spark twin of ``_SIG_ORACLE_CTES``,
-    whose long ``(doc_id, j, mh)`` rows are this row unpivoted.
+def _signed(sh: DataFrame) -> DataFrame:
+    """(doc_id, sh, m0..m7) from a `doc_shingles` frame: each
+    document's shingle array beside its 8 min-hashes, ``m{j}`` the
+    minimum over the array of ``mix(h32(shingle), j)`` — Spark twin of
+    ``_SIG_ORACLE_CTES``, whose long ``(doc_id, j, mh)`` rows are this
+    row unpivoted.
 
-    The 8 per-seed minima are independent aggregates of the same
-    shingle rows, so they run as 8 ``MIN`` columns in one pass (map-side
-    partial aggregation) and stay wide: every consumer (`bands_of`,
-    `agreement`) reads one row per document, so no plan shuffles or
-    joins one row per (doc, seed)."""
-    hashed = sh.select("doc_id", F.expr(h32("shingle")).alias("h32"))
-    return hashed.groupBy("doc_id").agg(
+    A narrow projection, one row per document: each shingle is hashed
+    once (``hs``; the md5 is too costly for the optimizer to inline
+    into the 8 readers) and the 8 minima are ``array_min`` over ``hs``,
+    so no plan explodes the shingles, regroups them or shuffles one
+    row per (doc, seed)."""
+    hs = sh.selectExpr("doc_id", "sh", f"transform(sh, s -> {h32('s')}) AS hs")
+    return hs.select(
+        "doc_id",
+        "sh",
         *[
-            F.expr(f"MIN({_MH_MIX.format(h='h32', j=j)})").alias(f"m{j}")
+            F.expr(
+                f"array_min(transform(hs, h -> {_MH_MIX.format(h='h', j=j)}))"
+            ).alias(f"m{j}")
             for j in range(_MINHASH_SEEDS)
-        ]
+        ],
     )
+
+
+def _portable_sig(sh: DataFrame) -> DataFrame:
+    """(doc_id, m0..m7): `_signed` without the shingle array, the row
+    that `bands_of` and `agreement` read."""
+    return _signed(sh).drop("sh")
 
 
 def bands_of(sig: DataFrame) -> DataFrame:
@@ -837,69 +849,29 @@ def q_dedup_minhash_portable(
     (matches/8 ≥ 0.5) reported NEXT TO the exact Jaccard so the
     sketch's estimation error is itself part of the checked output.
 
-    Scale shape is the real MinHash one: signatures are one row of 8
-    ints per doc (one shingle-explode + min-agg), banding is a narrow
-    projection, candidates come from joining band buckets — never all
-    pairs — and each candidate is verified against its two signature
-    rows.
+    Scale shape is the real MinHash one: one row per doc carries its
+    shingle array and 8 ints (a narrow projection, no explode), banding
+    is a narrow projection, candidates come from joining band buckets —
+    never all pairs — each candidate is verified against its two
+    signature rows, and each detected pair's exact Jaccard is the
+    intersection of its two shingle arrays.
     The band-key mix ((m₀·p) + m₁ mod P) is exact int64; collisions
     are deterministic and identical in both engines, which is all
     LSH needs (they only ever ADD candidates).
     """
-    # sh feeds the signature pass and, once the detected pairs are
-    # known, the size table and BOTH sides of the exact self-join.
-    # Its checkpoint costs one eager job per build, yet dropping it is
-    # slower: without it the exact side recomputes the scan and the
-    # n-gram explode (corpus_dedup seed 1, 3 alternating pairs on a
-    # 4-core host: ops_per_s median 1.13 with it, 0.87 without, losing
-    # 3/3, while exec.jobs fell 8 → 7.67 per op).  sig feeds bands +
-    # both agreement sides; checkpoint it once too.
-    sh = _shingle_rows(spark, sf_dir).localCheckpoint()
-    sig = _portable_sig(sh).localCheckpoint()
+    sig = _signed(doc_shingles(table(spark, sf_dir, "documents")))
+    sig = sig.localCheckpoint()
     bands = bands_of(sig)
-    agree = (
-        agreement(band_pairs(bands, bands), sig)
-        .filter(F.col("matches") >= 4)
-        # Round-11: materialize the (small) detected-pair set so the
-        # exact-verification side below can be pruned to it.
-        .localCheckpoint()
+    agree = agreement(band_pairs(bands, bands), sig).filter(
+        F.col("matches") >= 4
     )
-    # Round-11 optimization (guide §3.2 "reduce the big side before
-    # shuffling it"): the exact n_common/sizes relations are only ever
-    # LEFT-JOINED onto the detected pairs, so the corpus-wide shingle
-    # self-join computed exact Jaccard for thousands of pairs whose
-    # results were dropped.  Restrict the shingle frame to documents
-    # that appear in a detected pair first — identical n_common/n_sh
-    # for every surviving (doc_a, doc_b), and the exact side's cost
-    # now scales with detected pairs, not with the corpus.
-    docs_in = (
-        agree.select(F.col("doc_a").alias("doc_id"))
-        .union(agree.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    shv = sh.join(F.broadcast(docs_in), "doc_id", "leftsemi")
-    sizes = shv.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_sh")
-    )
-    shb = shv.select(F.col("doc_id").alias("doc_b"), "shingle")
-    common = (
-        shv.select(F.col("doc_id").alias("doc_a"), "shingle")
-        .join(shb, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_common"))
-    )
-    za = sizes.select(
-        F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na")
-    )
-    zb = sizes.select(
-        F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb")
-    )
-    ncc = F.coalesce(F.col("n_common"), F.lit(0))
+    # exact Jaccard of each detected pair from its two shingle arrays
+    sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sa"))
+    sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sb"))
+    nc = F.size(F.array_intersect("sa", "sb"))
     return (
-        agree.join(common, ["doc_a", "doc_b"], "left")
-        .join(F.broadcast(za), "doc_a")
-        .join(F.broadcast(zb), "doc_b")
+        agree.join(sa, "doc_a")
+        .join(sb, "doc_b")
         .select(
             "doc_a",
             "doc_b",
@@ -907,9 +879,7 @@ def q_dedup_minhash_portable(
                 "minhash_est"
             ),
             F.round(
-                ncc.cast("double")
-                / (F.col("na") + F.col("nb") - ncc),
-                6,
+                nc.cast("double") / (F.size("sa") + F.size("sb") - nc), 6
             ).alias("exact_jaccard"),
         )
     )
@@ -1209,22 +1179,18 @@ def q_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.md5(F.col("doc_id").cast("string")), 1, 1
             ).isin(*_EVAL_SAMPLE_HEX)
         )
-    # Round-10 (batch 5): checkpoint the SHARED upstream frames too —
-    # `sh` feeds both the detector and the exact-truth pipelines
-    # (separate actions → the shingle explode ran twice), and
-    # `sig` appears three times inside the detector plan (bands, sa,
-    # sb).  Measured at sf0.1: 7.6 → 5.3 s warm, identical metrics.
-    sh = shingle_rows_of(d).localCheckpoint()
-    # Round-11 (guide §2.6 "overlap independent jobs"): the exact-
-    # truth pipeline depends only on `sh`, while the detector chain
-    # (sig → bands → agreement) is a separate sequence of eager
-    # materializations — running truth's job concurrently back-fills
-    # the cores the detector's small stages leave idle.  Same plans,
-    # same checkpointed results, just concurrent scheduling.
+    # the detector and the exact-truth side read one checkpoint of the
+    # shingle arrays; truth runs on its own thread, so its jobs fill
+    # the cores the detector's small stages leave idle
+    sig = _signed(doc_shingles(d)).localCheckpoint()
+    sc = spark.sparkContext
+    tag = f"q_dedup_eval-truth-{uuid.uuid4().hex}"
     truth_box: list = []
 
     def _truth() -> None:
         try:
+            sc.addJobTag(tag)
+            sh = sig.select("doc_id", F.explode("sh").alias("shingle"))
             truth_box.append(
                 jaccard_pairs_of(sh)
                 .select("doc_a", "doc_b")
@@ -1233,30 +1199,32 @@ def q_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         except BaseException as exc:  # re-raised on the main thread
             truth_box.append(exc)
 
+    def _cancel_truth() -> None:
+        # a cancel that lands between two of truth's jobs misses the
+        # next one: repeat until the thread is gone
+        while truth_thread.is_alive():
+            sc.cancelJobsWithTag(tag)
+            truth_thread.join(1)
+
     truth_thread = pyspark.InheritableThread(
         target=_truth, session=spark
     )
     truth_thread.start()
     try:
-        sig = _portable_sig(sh).localCheckpoint()
         bands = bands_of(sig)
         detected = (
             agreement(band_pairs(bands, bands), sig)
             .filter(F.col("matches") >= 4)
             .select("doc_a", "doc_b")
-            # Round-10 optimization: materialize both pair frames once —
-            # n_detected/n_truth and the TP intersection are SEPARATE
-            # actions, so the whole LSH pipeline and the exact-Jaccard
-            # inverted-index join each executed twice.  The checkpointed
-            # frames are pairs only (KBs).  Measured at sf0.1: 13.4 s →
-            # ~7 s, identical metrics row.
+            # n_detected and the TP join are separate actions
             .localCheckpoint()
         )
-    finally:
-        # never leave the truth job running past this call, even when
-        # the detector chain raised
-        truth_thread.join(_EVAL_TRUTH_TIMEOUT_S)
-    if not truth_box:
+    except BaseException:
+        _cancel_truth()
+        raise
+    truth_thread.join(_EVAL_TRUTH_TIMEOUT_S)
+    if truth_thread.is_alive():
+        _cancel_truth()
         raise RuntimeError(
             "q_dedup_eval: the exact-truth job did not finish within "
             f"{_EVAL_TRUTH_TIMEOUT_S} s"

@@ -629,8 +629,9 @@ def tws_available() -> bool:
     under the RocksDB provider).  Environments with neither pip
     protobuf nor a bundled copy fall back to the semantically
     identical applyInPandasWithState graph.  The path actually taken
-    is recorded in :data:`LAST_STATEFUL_API` AFTER a successful drain
-    so tests assert the selection, not a prediction.
+    is named by an ``observe()`` metric on the drained result
+    (``stateful_api_<name>``), so tests assert the selection, not a
+    prediction.
     """
     from ..compat import protobuf_shim
 
@@ -643,11 +644,6 @@ def tws_available() -> bool:
     except Exception:
         return False
     return True
-
-
-#: API actually used by the last q_stream_stateful_tws run:
-#: "transformWithStateInPandas" or "applyInPandasWithState".
-LAST_STATEFUL_API: str | None = None
 
 
 def _make_tws_processor():
@@ -711,8 +707,9 @@ def q_stream_stateful_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     paths emit one row per (user, micro-batch) in update mode, and
     the batch twin asserts the final row per user equals the batch
     count — tests/test_streaming.py also asserts the path taken
-    matches :func:`tws_available`, and LAST_STATEFUL_API is only set
-    to the TWS value after a successful drain (a prediction is not a
+    matches :func:`tws_available`: the returned frame carries an
+    ``observe()`` metric ``stateful_api_<name>`` naming the API that
+    drained, set only after a successful drain (a prediction is not a
     proof).
 
     State is two longs per user — O(keys), the shape that scales.
@@ -720,7 +717,10 @@ def q_stream_stateful_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    global LAST_STATEFUL_API
+    def drained(api: str, res: DataFrame) -> DataFrame:
+        return res.observe(
+            f"stateful_api_{api}", F.count(F.lit(1)).alias("n_rows")
+        )
 
     configure(spark)
     path = _staged_time_buckets(spark, sf_dir)
@@ -760,18 +760,15 @@ def q_stream_stateful_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
                 adaptive=False,
             )
             # Only a DRAINED stream proves the TWS path ran; claiming
-            # it before the run (as rounds 4–5 did) mislabels the API
-            # when the worker runtime fails at initialization.
-            LAST_STATEFUL_API = "transformWithStateInPandas"
-            return res
+            # it before the run mislabels the API when the worker
+            # runtime fails at initialization.
+            return drained("transformWithStateInPandas", res)
         except Exception:
             # Runtime-only failure (e.g. worker protobuf init dies
             # even though the driver-side probe passed): fall through
             # to the output-identical applyInPandasWithState graph
             # instead of propagating a dead stream.
             pass
-
-    LAST_STATEFUL_API = "applyInPandasWithState"
 
     def running_count(key, pdfs, state: GroupState):
         n, b = state.get if state.exists else (0, 0)
@@ -794,8 +791,11 @@ def q_stream_stateful_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return _run_to_memory(
-        out, "stream_stateful_tws_sink", "update", sf_dir, adaptive=False
+    return drained(
+        "applyInPandasWithState",
+        _run_to_memory(
+            out, "stream_stateful_tws_sink", "update", sf_dir, adaptive=False
+        ),
     )
 
 
@@ -1594,7 +1594,7 @@ def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         agreement,
         band_pairs,
         bands_of,
-        shingle_rows_of,
+        doc_shingles,
     )
 
     configure(spark)
@@ -1619,7 +1619,7 @@ def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         _dp = spark.sparkContext.defaultParallelism
         if new_docs.rdd.getNumPartitions() * 2 <= _dp:
             new_docs = new_docs.repartition(max(4, _dp // 2))
-        sig = _portable_sig(shingle_rows_of(new_docs)).localCheckpoint()
+        sig = _portable_sig(doc_shingles(new_docs)).localCheckpoint()
         bands = bands_of(sig)
         if os.path.isdir(band_store):
             # index docs all precede this batch's ids (id-ordered
@@ -1629,20 +1629,18 @@ def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             all_sig = spark.read.parquet(sig_store).unionByName(sig)
         else:
             probe, all_sig = bands, sig
-        # Round-11 (guide §3.2, the q_dedup_minhash_portable move):
-        # the agreement join only needs signatures of docs that
-        # appear in a candidate pair, so restrict the sig relation to
-        # the (small) collision set first — verify cost becomes
-        # ∝ collisions instead of ∝ corpus-so-far, the shape the
-        # docstring promises ("the join touches the BATCH plus the
-        # collision set — never the corpus").
+        # verify only the signatures of docs in a candidate pair, so
+        # the agreement join touches the batch plus the collision set,
+        # never the corpus so far.  No broadcast hint: cdocs grows with
+        # the collision set, and cand is checkpointed, so AQE knows its
+        # size and broadcasts it only while it is small.
         cand = band_pairs(probe, bands).localCheckpoint()
         cdocs = (
             cand.select(F.col("doc_a").alias("doc_id"))
             .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
             .distinct()
         )
-        all_sig = all_sig.join(F.broadcast(cdocs), "doc_id", "leftsemi")
+        all_sig = all_sig.join(cdocs, "doc_id", "leftsemi")
         verified = (
             agreement(cand, all_sig)
             .filter(F.col("matches") >= 4)

@@ -3,14 +3,14 @@
 Each pins an internals change against an independent reference so a
 future refactor can't silently drift:
 
-- ``_portable_sig``'s wide 8-aggregate form (native conv hash) vs the
-  original seed-crossJoin formulation over the digit-decoded hash (the
-  spec the oracle CTEs replay), pivoted to the same wide shape.
+- ``_portable_sig``'s per-document array form (native conv hash) vs
+  the original seed-crossJoin formulation over the digit-decoded hash
+  (the spec the oracle CTEs replay), pivoted to the same wide shape.
 - ``q_agg_approx``'s pre-deduplicated exact count vs a direct
   ``countDistinct`` ground truth.
-- ``q_dedup_minhash_portable``'s collision-set pruning: every
+- ``q_dedup_minhash_portable``'s array-intersect verification: every
   reported pair's exact-Jaccard column must equal the value computed
-  from the UNPRUNED shingle frame.
+  by the inverted-index self-join over the whole shingle frame.
 """
 
 from __future__ import annotations
@@ -32,10 +32,11 @@ from conftest import SF_DIR
 
 
 def test_portable_sig_matches_seed_explode_reference(spark):
-    """The wide 8-MIN-aggregate form must be row-identical to the
-    original per-seed crossJoin formulation, pivoted to one row per
-    doc, on an arbitrary shingle frame (duplicate shingles across
-    docs, singleton docs, multi-doc collisions)."""
+    """The per-document array form must be row-identical to the
+    original per-seed crossJoin formulation over the shingle rows,
+    pivoted to one row per doc, on an arbitrary shingle frame
+    (duplicate shingles across docs, singleton docs, multi-doc
+    collisions)."""
     sh = spark.createDataFrame(
         [
             (1, "a b c"),
@@ -61,7 +62,9 @@ def test_portable_sig_matches_seed_explode_reference(spark):
         .pivot("j", list(range(_MINHASH_SEEDS)))
         .agg(F.min("h"))
     )
-    sig = _portable_sig(sh)
+    sig = _portable_sig(
+        sh.groupBy("doc_id").agg(F.collect_list("shingle").alias("sh"))
+    )
     assert sig.columns == ["doc_id"] + [
         f"m{j}" for j in range(_MINHASH_SEEDS)
     ]
@@ -92,9 +95,10 @@ def test_agg_approx_exact_parts_is_exact_distinct(spark):
 
 
 def test_minhash_portable_exact_jaccard_unaffected_by_pruning(spark):
-    """The collision-set semi-join prunes only rows whose results are
-    dropped: every reported pair's exact_jaccard must match the value
-    computed from the full (unpruned) shingle frame."""
+    """The exact Jaccard comes from intersecting each detected pair's
+    two shingle arrays: every reported pair's exact_jaccard must match
+    the value the inverted-index self-join computes from the full
+    shingle frame."""
     rows = (
         REGISTRY["q_dedup_minhash_portable"].fn(spark, SF_DIR).collect()
     )

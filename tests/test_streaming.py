@@ -8,7 +8,7 @@ from __future__ import annotations
 from morphl_model_user_search_intent_spark import REGISTRY
 from morphl_model_user_search_intent_spark.io import table
 
-from conftest import SF_DIR
+from conftest import SF_DIR, dispatch_of
 
 
 def test_watermark_tumbling_matches_batch_twin(spark):
@@ -120,7 +120,7 @@ def test_stateful_tws_twin_matches_batch_and_declares_api(spark):
         if ops.tws_available()
         else "applyInPandasWithState"
     )
-    assert ops.LAST_STATEFUL_API == expected_api
+    assert dispatch_of(out, "stateful_api_") == expected_api
     rows = out.collect()
     assert rows
     final = {}
@@ -690,8 +690,8 @@ def test_tws_runtime_failure_falls_back_and_stays_honest(
     """Round-5 advisory: if TWS fails AT RUNTIME despite the
     driver-side probe passing (e.g. the worker runtime dies at
     initialization), the query must fall back to the
-    applyInPandasWithState graph and LAST_STATEFUL_API must record
-    the path that actually drained — never the prediction."""
+    applyInPandasWithState graph and its ``stateful_api_`` metric must
+    name the path that actually drained — never the prediction."""
     import pyspark.sql.functions as F
 
     from morphl_model_user_search_intent_spark.streaming import ops
@@ -701,7 +701,7 @@ def test_tws_runtime_failure_falls_back_and_stays_honest(
 
     monkeypatch.setattr(ops, "_make_tws_processor", boom)
     out = REGISTRY["q_stream_stateful_tws"].fresh(spark, SF_DIR)
-    assert ops.LAST_STATEFUL_API == "applyInPandasWithState"
+    assert dispatch_of(out, "stateful_api_") == "applyInPandasWithState"
     final = {
         r.user_id: r.n
         for r in out.groupBy("user_id")

@@ -87,9 +87,16 @@ def doc_shingles(d: DataFrame, n: int = 3) -> DataFrame:
     row per document.  Documents shorter than ``n`` tokens yield no
     row, which is also what the DuckDB oracles' ``range(1, len-n+2)``
     produces.  The batch and streaming MinHash paths sign these
-    arrays, so their signatures agree byte-for-byte."""
-    t = d.select("doc_id", tokens().alias("toks"))
-    return t.filter(F.size("toks") >= n).select(
+    arrays, so their signatures agree byte-for-byte.
+
+    The short-document drop counts the separators of the trimmed text
+    (``size(tokens()) - 1``) instead of filtering on ``size(toks)``:
+    that ``Filter`` is pushed below the tokens projection, which then
+    splits every document twice."""
+    t = d.filter(
+        F.regexp_count(F.trim(F.col("text")), F.lit(" ")) >= n - 1
+    ).select("doc_id", tokens().alias("toks"))
+    return t.select(
         "doc_id", F.array_distinct(ngrams(F.col("toks"), n)).alias("sh")
     )
 

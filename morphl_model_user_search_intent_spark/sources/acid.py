@@ -37,8 +37,9 @@ carries every data file by reference, adds a ``dv/`` sidecar of
 (file basename, row index) tombstones masking the current rows the
 write retires, and appends the new rows (post-images and inserts) as new
 files — write cost O(batch) however many files the batch's keys
-touch.  Readers anti-join the tombstones; OPTIMIZE folds them into
-compacted files and clears the list.
+touch.  Readers anti-join the tombstones; OPTIMIZE folds those of the
+files it rewrites, and :func:`maybe_fold_dv` folds them all and clears
+the list.
 """
 
 from __future__ import annotations
@@ -237,9 +238,17 @@ class Manifest(dict):
         manifest this reads only the chunks containing them (all
         cached already when the caller just resolved the same files),
         never the full stats block."""
+        return self._per_file("stats", paths)
+
+    def partitions_for(self, paths: list[str]) -> dict:
+        """Recorded partition values for exactly ``paths``, read like
+        :meth:`stats_for`; a file recording none is absent."""
+        return self._per_file("partitions", paths)
+
+    def _per_file(self, key: str, paths: list[str]) -> dict:
         descs = dict.get(self, "chunks")
         if descs is None:
-            st = dict.get(self, "stats", {})
+            st = dict.get(self, key, {})
             return {
                 b: st[b]
                 for b in (os.path.basename(p) for p in paths)
@@ -259,7 +268,7 @@ class Manifest(dict):
             if cid is None:
                 unknown.add(b)
                 continue
-            s = self._chunk_cache[cid].get("stats", {}).get(b)
+            s = self._chunk_cache[cid].get(key, {}).get(b)
             if s is not None:
                 out[b] = s
         for d in descs:
@@ -268,7 +277,7 @@ class Manifest(dict):
             if all(b < d["lo"] or b > d["hi"] for b in unknown):
                 continue
             c = self.load_chunk(d)
-            st = c.get("stats", {})
+            st = c.get(key, {})
             hit = unknown.intersection(
                 os.path.basename(f) for f in c["files"]
             )
@@ -1627,16 +1636,18 @@ def _unmasked(t, f: str, dvf: list[str]):
     return t.filter(pa.array(keep))
 
 
-def _drop_empty(files: list[str]) -> list[str]:
-    """``files`` minus (and deleting) the 0-row ones: an empty frame
-    still writes one schema-only file, which would grow the file list
-    — or the DV list every read anti-joins — for nothing."""
+def _drop_empty(files: list[str]) -> dict[str, int]:
+    """The row count of each of ``files`` but the 0-row ones, which are
+    deleted: an empty frame still writes one schema-only file, which
+    would grow the file list — or the DV list every read anti-joins —
+    for nothing."""
     import pyarrow.parquet as pq
 
-    keep = []
+    keep = {}
     for f in files:
-        if pq.read_metadata(f).num_rows:
-            keep.append(f)
+        n = pq.read_metadata(f).num_rows
+        if n:
+            keep[f] = n
         else:
             os.remove(f)
     return keep
@@ -1667,7 +1678,7 @@ def _commit_mor(
     caller's replay loop."""
     new_dv = []
     if dv_rows is not None:
-        new_dv = _drop_empty(_write_files(dv_rows, root, subdir="dv"))
+        new_dv = list(_drop_empty(_write_files(dv_rows, root, subdir="dv")))
         if len(new_dv) > 1:
             # one sidecar per commit, not one per scan task (every
             # read scans each): tombstones are batch-sized, so the
@@ -1682,7 +1693,8 @@ def _commit_mor(
     new_files, parts = [], None
     if added is not None:
         new_files, parts = _write_layout(added, root, m)
-    new_files = _drop_empty(new_files)
+    rows = _drop_empty(new_files)
+    new_files = list(rows)
     change_files = (
         None if feed is None else _write_files(feed, root, subdir="change")
     )
@@ -1701,7 +1713,10 @@ def _commit_mor(
             op,
             added=new_files,
             partitions=parts,
-            stats=None if parts is None else commit_stats(root, new_files, []),
+            stats={
+                os.path.basename(f): {"rows": n, "cols": {}}
+                for f, n in rows.items()
+            },
             change_files=change_files,
             dv_files=dv_files or None,
             **commit_kw,
@@ -1754,18 +1769,84 @@ def _rewrite_set(m: dict, partition_filter: dict | None) -> list[str]:
     ]
 
 
+_DV_BOUND = 0.1  # tombstone share of a file's rows that OPTIMIZE folds
+
+
+def _file_rows(m: dict, files: list[str]) -> dict[str, int]:
+    """Physical row count per basename of ``files``: the manifest's
+    recorded stats, and the parquet footer only for a file without."""
+    import pyarrow.parquet as pq
+
+    st = m.stats_for(files)
+    out = {}
+    for f in files:
+        b = os.path.basename(f)
+        s = st.get(b, {})
+        out[b] = s["rows"] if "rows" in s else pq.read_metadata(f).num_rows
+    return out
+
+
+def _compaction_pick(
+    m: dict, sel: list[str], target_files: int
+) -> tuple[list[str], int]:
+    """OPTIMIZE's compaction rule over the files ``sel``: which of them
+    to rewrite, and into how many files.  With T the live rows of
+    ``sel`` over ``target_files``, a file is rewritten when it holds
+    fewer than T/2 rows (the small-file tail), when its tombstones
+    pass ``_DV_BOUND`` of its rows, or, on a partitioned table, when
+    it records no value for a column of the current spec.  Every file
+    is rewritten while the column map is mixed: only a full rewrite
+    clears the flag.  The chosen files' live rows are written as
+    ``round(rows / T)`` files, at least 1 and at most
+    ``target_files``.  No file chosen, or one clean right-layout file
+    alone, picks nothing (Delta's no-op OPTIMIZE); every other file
+    is carried by reference with its DV entries."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    cm = m.get("colmap")
+    if cm and cm.get("mixed", True):
+        return sel, target_files
+    rows = _file_rows(m, sel)
+    dead = dict.fromkeys(rows, 0)
+    for d in m.get("dv_files") or ():
+        vc = pc.value_counts(pq.read_table(d, columns=["_file"])["_file"])
+        for b, n in zip(
+            vc.field("values").to_pylist(), vc.field("counts").to_pylist()
+        ):
+            if b in dead:
+                dead[b] += n
+    t = (sum(rows.values()) - sum(dead.values())) / target_files
+    pcols = set(m.get("partition_cols") or ())
+    pvals = m.partitions_for(sel) if pcols else {}
+    pick, fresh = [], []
+    for f in sel:
+        b = os.path.basename(f)
+        stale = not pcols <= set(pvals.get(b, ()))
+        if rows[b] < t / 2 or dead[b] > _DV_BOUND * rows[b] or stale:
+            pick.append(f)
+            fresh.append(not dead[b] and not stale)
+    if fresh == [True]:
+        return [], 0
+    live = sum(rows[b] - dead[b] for b in map(os.path.basename, pick))
+    return pick, max(1, min(target_files, round(live / t))) if t else 1
+
+
 def _rewrite(
     spark: SparkSession,
     root: str,
     op: str,
-    shape,
+    shape=None,
     partition_filter: dict | None = None,
     stat_cols: tuple | list = (),
+    target_files: int | None = None,
 ) -> int:
     """THE full-file rewrite, shared by every compaction-shaped writer
     (OPTIMIZE, Z-order, and the generated-column and row-tracking
     backfills).  Pins the latest manifest, selects the files
-    (:func:`_rewrite_set` on the logical ``partition_filter``), reads
+    (:func:`_rewrite_set` on the logical ``partition_filter``; given
+    ``target_files``, only those :func:`_compaction_pick` chooses,
+    coalesced to the file count it derives), reads
     them as ``read_table(..., with_row_ids=True)`` does — through the
     deletion-vector mask, schema-merged on a mixed column map, in
     logical names, hidden row ids kept so compaction carries them —
@@ -1773,10 +1854,11 @@ def _rewrite(
     retires the DV entries of the replaced files and publishes one
     delta commit.  Nothing selected is a no-op.
 
-    ``shape(snap, sm)`` returns the frame to write; it may edit
-    ``sm``, a private copy of the table's schema_meta, and columns it
-    adds get column-map entries.  A rewrite of every file leaves each
-    file with every live column, so it clears ``colmap["mixed"]``.
+    ``shape(snap, sm)`` (default: ``snap`` as is) returns the frame to
+    write; it may edit ``sm``, a private copy of the table's
+    schema_meta, and columns it adds get column-map entries.  A
+    rewrite of every file leaves each file with every live column, so
+    it clears ``colmap["mixed"]``.
     ``stat_cols`` (logical names) get per-file zone maps.  A lost race
     reclaims the written files and replays against the new snapshot:
     the old rewrite would drop the interleaved commit's rows."""
@@ -1784,12 +1866,16 @@ def _rewrite(
         m = read_manifest(root)
         cm = m.get("colmap")
         sel = _rewrite_set(m, _filter_to_physical(cm, partition_filter))
+        if sel and target_files is not None:
+            sel, n_out = _compaction_pick(m, sel, target_files)
         if not sel:
             return m["version"]
         snap = _select_logical(cm, _scan(spark, m, sel))
         sm0 = m.get("schema_meta") or {}
         sm = json.loads(json.dumps(sm0))
-        out = shape(snap, sm)
+        out = snap if shape is None else shape(snap, sm)
+        if target_files is not None:
+            out = out.coalesce(n_out)
         cm_out = cm
         if cm:
             added = [c for c in out.columns if c not in snap.columns]
@@ -1860,7 +1946,8 @@ def delete_from_table(
     O(delete batch); NO data file is touched — at 100 TB the
     difference between a GDPR wipe that costs minutes and one that
     rewrites the table.  Readers anti-join the mask per file
-    (:func:`read_table`); OPTIMIZE folds it in and clears the list;
+    (:func:`read_table`); OPTIMIZE folds the heavily-deleted files'
+    share and :func:`maybe_fold_dv` all of it, clearing the list;
     vacuum protects retained versions' sidecars like data files.
 
     The tombstones name row positions (a semi join over the DV-masked
@@ -2988,22 +3075,25 @@ def optimize_table(
     root: str,
     target_files: int = 2,
 ) -> int:
-    """OPTIMIZE (bin-packing compaction) as a committed table op: read
-    the latest snapshot through its deletion-vector mask, rewrite
-    every file as ``target_files`` right-sized files (shuffle-free
-    coalesce — pure concatenation), hive-partitioned under the current
-    spec when the table is partitioned, and commit a version that
-    references ONLY the compacted files, with an empty DV list.  The
-    rewrite changes no row, so a concurrent reader pinned to the old
-    manifest and one on the new version see identical content; old
-    files stay until vacuum retires their versions.
+    """OPTIMIZE (bin-packing compaction) as a committed table op on a
+    table meant to hold ``target_files`` files.  With T = live rows /
+    ``target_files``, it rewrites the small-file tail (files under
+    T/2 rows), the files whose tombstones pass ``_DV_BOUND`` of their
+    rows and, on a partitioned table, the files that predate the
+    current spec — every file while the column map is mixed
+    (:func:`_compaction_pick`).  It reads them through the
+    deletion-vector mask, writes their rows as files of about T rows
+    (shuffle-free coalesce, hive-partitioned under the current spec
+    when the table is partitioned) and commits a version that carries
+    every other file by reference with its DV entries.  With nothing
+    to compact it commits nothing and returns the current version
+    (Delta's no-op OPTIMIZE).  :func:`maybe_fold_dv` is the full fold.
 
-    At 100 TB this runs per-partition on the small-file tail
-    (:func:`optimize_table_partitioned`), not on the whole table.
-    Races replay through :func:`_rewrite`."""
-    return _rewrite(
-        spark, root, "optimize", lambda snap, sm: snap.coalesce(target_files)
-    )
+    The rewrite changes no row, so a concurrent reader pinned to the
+    old manifest and one on the new version see identical content;
+    old files stay until vacuum retires their versions.  Races
+    replay through :func:`_rewrite`."""
+    return _rewrite(spark, root, "optimize", target_files=target_files)
 
 
 def ensure_optimize_exercise(spark: SparkSession, sf_dir: str) -> str:
@@ -3016,7 +3106,7 @@ def ensure_optimize_exercise(spark: SparkSession, sf_dir: str) -> str:
     configure(spark)
     root = os.path.join(SCRATCH, f"acidtable-opt-{_tag(sf_dir)}")
     ready = os.path.join(root, "_READY_OPT")
-    note = f"acid-opt-rw {_orders_fingerprint(sf_dir)}"
+    note = f"acid-opt-pick {_orders_fingerprint(sf_dir)}"
     try:
         if open(ready).read().strip() == note:
             return root
@@ -4045,18 +4135,21 @@ def optimize_table_partitioned(
 ) -> int:
     """OPTIMIZE confined to the partitions selected by
     ``partition_filter`` (Delta's ``OPTIMIZE t WHERE part = v``; ``{}``
-    selects every partition): only the selected partitions' files are
-    read, compacted, and replaced; every other file is carried by
-    reference with its partition values and stats untouched, and its
-    deletion-vector entries keep masking.  At 100 TB compaction always
-    runs this way — on the small-file tail of recently-ingested
-    partitions, never the table."""
+    selects every partition): within them it rewrites only what
+    :func:`optimize_table`'s rule chooses (the small-file tail and the
+    files past the tombstone bound, T = their live rows /
+    ``target_files``), and with nothing to compact it commits nothing.
+    Every other file is carried by reference with its partition
+    values and stats untouched, and its deletion-vector entries keep
+    masking.  At 100 TB compaction always runs this way — on the
+    small-file tail of recently-ingested partitions, never the
+    table."""
     return _rewrite(
         spark,
         root,
         "optimize",
-        lambda snap, sm: snap.coalesce(target_files),
-        partition_filter,
+        partition_filter=partition_filter,
+        target_files=target_files,
     )
 
 
@@ -4340,9 +4433,10 @@ def q_table_delete_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("q_table_dv_fold", oracle=_DV_ORACLE)
 def q_table_dv_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DELETION-VECTOR FOLD (round 8): OPTIMIZE over a DV-carrying
-    table reads through the mask and commits compacted files with the
-    DV list CLEARED — deleted rows leave the physical data, the
+    """DELETION-VECTOR FOLD (round 8): the full fold
+    (:func:`maybe_fold_dv` at threshold 0) over a DV-carrying table
+    reads through the mask and commits compacted files with the DV
+    list CLEARED — deleted rows leave the physical data, the
     read-side anti join disappears, and the retired sidecars await
     vacuum.  Same oracle as q_table_delete_dv: the fold must be
     exactly mask-preserving.  The pytest additionally pins the
@@ -4353,7 +4447,7 @@ def q_table_dv_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     configure(spark)
     root = os.path.join(SCRATCH, f"acidtable-dvfold-{_tag(sf_dir)}")
     ready = os.path.join(root, "_READY_DVFOLD")
-    note = f"acid-dvfold-rw {_orders_fingerprint(sf_dir)}"
+    note = f"acid-dvfold-full {_orders_fingerprint(sf_dir)}"
     try:
         ok = open(ready).read().strip() == note
     except OSError:
@@ -4374,7 +4468,7 @@ def q_table_dv_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             "o_orderkey",
         )
-        optimize_table(spark, root, target_files=2)
+        maybe_fold_dv(spark, root, threshold=0.0, target_files=2)
         with open(ready, "w") as fh:
             fh.write(note)
     return read_table(spark, root)
@@ -4922,8 +5016,10 @@ def q_table_partition_evolution(
 
 def dv_fraction(root: str) -> float:
     """Tombstone share of the table: DV rows / physical rows, from
-    parquet FOOTER metadata only (no Spark job) — the marginal cost
-    every masked read pays, and therefore the compaction trigger."""
+    sidecar footers and the manifest's recorded row counts (a data
+    file's footer only when it has none; no Spark job) — the marginal
+    cost every masked read pays, and therefore the compaction
+    trigger."""
     import pyarrow.parquet as pq
 
     m = read_manifest(root)
@@ -4931,27 +5027,31 @@ def dv_fraction(root: str) -> float:
     if not dvf:
         return 0.0
     n_dv = sum(pq.read_metadata(f).num_rows for f in dvf)
-    n_rows = sum(pq.read_metadata(f).num_rows for f in m["files"])
+    n_rows = sum(_file_rows(m, m["files"]).values())
     return (n_dv / n_rows) if n_rows else 0.0
 
 
 def maybe_fold_dv(
     spark: SparkSession,
     root: str,
-    threshold: float = 0.1,
+    threshold: float = _DV_BOUND,
     target_files: int = 8,
 ) -> int | None:
     """The DV compaction POLICY (twin of maybe_optimize and the ANN
     store's maybe_compact): fold the deletion-vector backlog into the
     data when tombstones exceed ``threshold`` of the table's physical
     rows — the mask's anti join costs every reader ∝ the backlog, so
-    its share is its marginal read cost.  Folding is a plain OPTIMIZE
-    (reads through the mask, clears the DV list).  Idempotent; an
-    erasure pipeline calls it after every batch.  Returns the new
-    version when a fold ran, None when within budget."""
+    its share is its marginal read cost.  The fold is a full rewrite
+    into ``target_files`` files that clears the DV list, not the
+    selective :func:`optimize_table`, which leaves files under the
+    tombstone bound masked.  Idempotent; an erasure pipeline calls it
+    after every batch.  Returns the new version when a fold ran, None
+    when within budget."""
     if dv_fraction(root) <= threshold:
         return None
-    return optimize_table(spark, root, target_files=target_files)
+    return _rewrite(
+        spark, root, "optimize", lambda snap, sm: snap.coalesce(target_files)
+    )
 
 
 # ---- CHECK constraints (round 8) -------------------------------------
@@ -7178,13 +7278,14 @@ def q_table_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ensure_rowtrack_exercise(spark: SparkSession, sf_dir: str) -> str:
     """Stage (idempotent): row-tracked create → three-arm MERGE
     (updates keep ids, deletes retire them, inserts draw fresh) →
-    OPTIMIZE (full rewrite; ids must survive the compaction)."""
+    OPTIMIZE (the merge tombstones over 10% of every base file, so
+    every file is rewritten; ids must survive the compaction)."""
     from .formats import SCRATCH, _tag
 
     configure(spark)
     root = os.path.join(SCRATCH, f"acidtable-rowtrk-{_tag(sf_dir)}")
     ready = os.path.join(root, "_READY_ROWTRK")
-    note = f"acid-rowtrk-rw {_orders_fingerprint(sf_dir)}"
+    note = f"acid-rowtrk-pick {_orders_fingerprint(sf_dir)}"
     try:
         if open(ready).read().strip() == note:
             return root

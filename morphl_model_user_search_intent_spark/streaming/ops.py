@@ -50,17 +50,23 @@ ROCKSDB_PROVIDER = (
 )
 
 
-def _pid_scratch(kind: str, sf_dir: str) -> str:
-    """``SCRATCH/<kind>-<sf tag>-<pid>``, emptied now and removed when
-    this process exits.  The pid keeps two engine processes (e.g. a
-    pytest run and a concurrent tools/driver_sim.py sweep) from
+def _scratch_root(kind: str, sf_dir: str) -> str:
+    """``SCRATCH/<kind>-<sf tag>-<pid>``: the directory a query of this
+    process stages ``kind`` under.  The pid keeps two engine processes
+    (e.g. a pytest run and a concurrent tools/driver_sim.py sweep) from
     overwriting each other's sink or table mid-read."""
     import os
 
     from ..sources.formats import SCRATCH
 
     tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    d = os.path.join(SCRATCH, f"{kind}-{tag}-{os.getpid()}")
+    return os.path.join(SCRATCH, f"{kind}-{tag}-{os.getpid()}")
+
+
+def _pid_scratch(kind: str, sf_dir: str) -> str:
+    """:func:`_scratch_root`, emptied now and removed when this process
+    exits."""
+    d = _scratch_root(kind, sf_dir)
     shutil.rmtree(d, ignore_errors=True)
     _rmtree_at_exit(d)
     return d
@@ -1694,12 +1700,6 @@ def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(base, ignore_errors=True)
 
 
-#: Table root used by the last q_stream_table_ingest run (test hook:
-#: the pytest asserts one committed version per micro-batch and
-#: snapshot-stable historical reads).
-LAST_INGEST_ROOT: str | None = None
-
-
 @register(
     "q_stream_table_ingest",
     oracle="""
@@ -1736,14 +1736,11 @@ def q_stream_table_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.acid import append_table, create_table, read_table
 
-    global LAST_INGEST_ROOT
-
     configure(spark)
     src = _staged_time_buckets(spark, sf_dir)
     schema = spark.read.parquet(src).schema
 
     root = _pid_scratch("stream-acid", sf_dir)
-    LAST_INGEST_ROOT = root
 
     cols = [
         F.col("event_id"),
@@ -1959,13 +1956,10 @@ def q_stream_table_ingest_partitioned(
         read_table,
     )
 
-    global LAST_INGEST_PART_ROOT
-
     configure(spark)
     src = _staged_time_buckets(spark, sf_dir)
 
     root = _pid_scratch("stream-acid-part", sf_dir)
-    LAST_INGEST_PART_ROOT = root
 
     cols = [
         F.col("event_id"),
@@ -2011,9 +2005,6 @@ def q_stream_table_ingest_partitioned(
     return read_table(spark, root)
 
 
-LAST_INGEST_PART_ROOT: str | None = None
-
-
 @register(
     "q_stream_table_ingest_hidden",
     oracle="""
@@ -2049,13 +2040,10 @@ def q_stream_table_ingest_hidden(
         read_table,
     )
 
-    global LAST_INGEST_HIDDEN_ROOT
-
     configure(spark)
     src = _staged_time_buckets(spark, sf_dir)
 
     root = _pid_scratch("stream-acid-hidden", sf_dir)
-    LAST_INGEST_HIDDEN_ROOT = root
 
     cols = [
         F.col("event_id"),
@@ -2108,12 +2096,6 @@ def q_stream_table_ingest_hidden(
     return read_table(spark, root)
 
 
-LAST_INGEST_HIDDEN_ROOT: str | None = None
-
-#: Table root used by the last q_stream_table_wap run (test hook).
-LAST_INGEST_WAP_ROOT: str | None = None
-
-
 @register(
     "q_stream_table_wap",
     oracle="""
@@ -2150,14 +2132,11 @@ def q_stream_table_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_table,
     )
 
-    global LAST_INGEST_WAP_ROOT
-
     configure(spark)
     src = _staged_time_buckets(spark, sf_dir)
     schema = spark.read.parquet(src).schema
 
     root = _pid_scratch("stream-wap", sf_dir)
-    LAST_INGEST_WAP_ROOT = root
 
     cols = [
         F.col("event_id"),
@@ -2344,8 +2323,6 @@ def q_stream_table_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_table,
     )
 
-    global LAST_ERASURE_ROOT
-
     configure(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
@@ -2356,7 +2333,6 @@ def q_stream_table_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("value_units"),
     )
     root = _pid_scratch("stream-erasure", sf_dir)
-    LAST_ERASURE_ROOT = root
     create_table(spark, root, ev.repartition(4))
 
     # the request queue: erased user ids staged as 4 id-ranged files
@@ -2396,5 +2372,3 @@ def q_stream_table_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
         _unload_state_stores(spark)
     return read_table(spark, root)
 
-
-LAST_ERASURE_ROOT: str | None = None

@@ -1103,7 +1103,8 @@ def test_optimize_conflict_loser_reclaims_and_replays(spark, tmp_path):
     n_before = len(os.listdir(data_dir))
     acid._publish = racing_publish
     try:
-        v = acid.optimize_table(spark, root, target_files=2)
+        # at one target file the four base files are the small-file tail
+        v = acid.optimize_table(spark, root, target_files=1)
     finally:
         acid._publish = real_publish
     assert raced["done"]
@@ -2514,7 +2515,6 @@ def test_rewrites_retire_inert_dv_entries(spark, tmp_path):
         delete_from_table,
         dv_fraction,
         maybe_fold_dv,
-        optimize_table,
         optimize_table_partitioned,
     )
 
@@ -2549,8 +2549,8 @@ def test_rewrites_retire_inert_dv_entries(spark, tmp_path):
     for d in m2["dv_files"]:
         masked = set(pq.read_table(d).column("_file").to_pylist())
         assert masked <= live_bases  # no inert entry carried
-    # full optimize: the whole backlog folds, list clears
-    optimize_table(spark, root)
+    # the full fold: the whole backlog folds, list clears
+    maybe_fold_dv(spark, root, threshold=0.0)
     m3 = read_manifest(root)
     assert not m3.get("dv_files")
     assert dv_fraction(root) == 0.0
@@ -4140,10 +4140,11 @@ def test_vacuum_protects_live_branch_references(spark, tmp_path):
 
     root = str(tmp_path / "t")
     base = _base(spark)
-    create_table(spark, root, base.repartition(2))
+    create_table(spark, root, base.repartition(4))
     broot = create_branch(root, "slow-audit")
     fork_files = set(read_manifest(broot, 1)["files"])
-    # main rewrites everything and vacuums the old version away
+    # main rewrites everything (four files under half the one-file
+    # target are the small-file tail) and vacuums the old version away
     optimize_table(spark, root, target_files=1)
     vacuum(root, keep_last=1)
     assert all(os.path.exists(f) for f in fork_files)
@@ -4968,6 +4969,11 @@ def test_execute_utility_statement_surface(spark, tmp_path):
     execute_utility(
         spark, root,
         "ALTER TABLE t ALTER COLUMN o_orderpriority DROP DEFAULT",
+    )
+    # a second small append: OPTIMIZE packs the small-file tail
+    append_table(
+        spark, root,
+        base.limit(2).withColumn("o_orderkey", F.col("o_orderkey") + 90000000),
     )
     v_opt = execute_utility(spark, root, "OPTIMIZE t")
     assert read_manifest(root, v_opt)["op"] == "optimize"

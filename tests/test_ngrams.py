@@ -231,3 +231,18 @@ def test_tokenizer_stays_out_of_ngram_lambdas(spark):
         bodies = list(_lambda_bodies(plan))
         assert bodies, f"{name}: no lambda in the optimized plan"
         assert not [b for b in bodies if "split(" in b], name
+
+
+def test_doc_shingles_tokenizes_once(spark):
+    """The short-document drop in ``doc_shingles`` must not put a
+    second tokenizer under the tokens projection: the signature plan
+    splits each document exactly once."""
+    from morphl_model_user_search_intent_spark.llm.dedup import (
+        _signed,
+        doc_shingles,
+    )
+
+    d = table(spark, SF_DIR, "documents").select("doc_id", "text")
+    for df in (_signed(doc_shingles(d, 3)), shingle_rows_of(d, 3)):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("split(") == 1, plan

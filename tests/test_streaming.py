@@ -733,7 +733,7 @@ def test_table_ingest_commits_one_version_per_batch(spark):
     from morphl_model_user_search_intent_spark.streaming import ops
 
     out = REGISTRY["q_stream_table_ingest"].fn(spark, SF_DIR)
-    root = ops.LAST_INGEST_ROOT
+    root = ops._scratch_root("stream-acid", SF_DIR)
     versions = list_versions(root)
     assert versions[0] == 1 and len(versions) >= 5  # create + ≥4 batches
     assert read_manifest(root, 1)["op"] == "create"
@@ -832,7 +832,7 @@ def test_partitioned_ingest_prunes_and_is_idempotent(spark):
         spark, SF_DIR
     )
     n_full = full.count()
-    root = ops.LAST_INGEST_PART_ROOT
+    root = ops._scratch_root("stream-acid-part", SF_DIR)
     m = read_manifest(root)
     assert m["partition_cols"] == ["event_type"]
     # ≥1 create + ≥2 micro-batch appends
@@ -886,7 +886,7 @@ def test_erasure_stream_physics_and_replay_noop(spark):
 
     final = REGISTRY["q_stream_table_erasure"].fn(spark, SF_DIR)
     n_final = final.count()
-    root = ops.LAST_ERASURE_ROOT
+    root = ops._scratch_root("stream-erasure", SF_DIR)
     versions = list_versions(root)
     ops_log = [read_manifest(root, v)["op"] for v in versions]
     assert ops_log[0] == "create"
@@ -949,7 +949,7 @@ def test_stream_ingest_hidden_prunes_and_is_idempotent(spark):
     from morphl_model_user_search_intent_spark.streaming import ops
 
     df = REGISTRY["q_stream_table_ingest_hidden"].fn(spark, SF_DIR)
-    root = ops.LAST_INGEST_HIDDEN_ROOT
+    root = ops._scratch_root("stream-acid-hidden", SF_DIR)
     m = read_manifest(root)
     assert m.get("transforms") and m["partition_cols"] == ["u_bucket"]
     keys = [8, 16, 24]  # all bucket 0
@@ -992,7 +992,7 @@ def test_stream_wap_stages_on_branch_until_publish(spark):
     from morphl_model_user_search_intent_spark.streaming import ops
 
     out = REGISTRY["q_stream_table_wap"].fn(spark, SF_DIR)
-    root = ops.LAST_INGEST_WAP_ROOT
+    root = ops._scratch_root("stream-wap", SF_DIR)
     broot = branch_root(root, "ingest")
     # main: exactly create + publish — no per-batch versions leaked
     assert [read_manifest(root, v)["op"][:7] for v in

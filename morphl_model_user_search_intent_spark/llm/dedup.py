@@ -29,7 +29,14 @@ from pyspark.sql import functions as F
 
 from ..io import spread, table
 from ..registry import register
-from ..text.analysis import _H32_DG, h32, h32_of_digest, ngrams, tokens
+from ..text.analysis import (
+    _H32_DG,
+    h32,
+    h32_of_digest,
+    n_tokens,
+    ngrams,
+    tokens,
+)
 
 _JACCARD_TAU = 0.5
 
@@ -89,13 +96,10 @@ def doc_shingles(d: DataFrame, n: int = 3) -> DataFrame:
     produces.  The batch and streaming MinHash paths sign these
     arrays, so their signatures agree byte-for-byte.
 
-    The short-document drop counts the separators of the trimmed text
-    (``size(tokens()) - 1``) instead of filtering on ``size(toks)``:
-    that ``Filter`` is pushed below the tokens projection, which then
-    splits every document twice."""
-    t = d.filter(
-        F.regexp_count(F.trim(F.col("text")), F.lit(" ")) >= n - 1
-    ).select("doc_id", tokens().alias("toks"))
+    The short-document drop filters the raw text on `n_tokens()`, not
+    on ``size(toks)``: that ``Filter`` is pushed below the tokens
+    projection, which then splits every document twice."""
+    t = d.filter(n_tokens() >= n).select("doc_id", tokens().alias("toks"))
     return t.select(
         "doc_id", F.array_distinct(ngrams(F.col("toks"), n)).alias("sh")
     )

@@ -1786,50 +1786,75 @@ def _file_rows(m: dict, files: list[str]) -> dict[str, int]:
     return out
 
 
-def _compaction_pick(
-    m: dict, sel: list[str], target_files: int
-) -> tuple[list[str], int]:
-    """OPTIMIZE's compaction rule over the files ``sel``: which of them
-    to rewrite, and into how many files.  With T the live rows of
-    ``sel`` over ``target_files``, a file is rewritten when it holds
-    fewer than T/2 rows (the small-file tail), when its tombstones
-    pass ``_DV_BOUND`` of its rows, or, on a partitioned table, when
-    it records no value for a column of the current spec.  Every file
-    is rewritten while the column map is mixed: only a full rewrite
-    clears the flag.  The chosen files' live rows are written as
-    ``round(rows / T)`` files, at least 1 and at most
-    ``target_files``.  No file chosen, or one clean right-layout file
-    alone, picks nothing (Delta's no-op OPTIMIZE); every other file
-    is carried by reference with its DV entries."""
+def _tombstones_per_file(m: dict) -> dict[str, int]:
+    """Tombstone count per data-file basename, from the ``_file``
+    column of every deletion-vector sidecar (no data file opened)."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    cm = m.get("colmap")
-    if cm and cm.get("mixed", True):
-        return sel, target_files
-    rows = _file_rows(m, sel)
-    dead = dict.fromkeys(rows, 0)
+    out: dict[str, int] = {}
     for d in m.get("dv_files") or ():
         vc = pc.value_counts(pq.read_table(d, columns=["_file"])["_file"])
         for b, n in zip(
             vc.field("values").to_pylist(), vc.field("counts").to_pylist()
         ):
-            if b in dead:
-                dead[b] += n
-    t = (sum(rows.values()) - sum(dead.values())) / target_files
-    pcols = set(m.get("partition_cols") or ())
+            out[b] = out.get(b, 0) + n
+    return out
+
+
+def _compaction_pick(
+    m: dict, sel: list[str], target_files: int
+) -> tuple[list[str], int]:
+    """OPTIMIZE's compaction rule over the files ``sel``: which of them
+    to rewrite, and into how many files.  The rule runs per partition
+    (the whole of ``sel`` on an unpartitioned table): with T the
+    partition's live rows over ``target_files``, a file is rewritten
+    when it holds fewer than T/2 rows (the small-file tail), when its
+    tombstones pass ``_DV_BOUND`` of its rows, or, on a partitioned
+    table, when it records no value for a column of the current spec.
+    A partition whose only such file is one clean small file keeps
+    it: rewriting it alone would write the same file again.  Every
+    file is rewritten while the column map is mixed: only a full
+    rewrite clears the flag.  The chosen files are written as the
+    most any partition needs, ``round(rows / T)`` files, at least 1
+    and at most ``target_files``.  Nothing chosen is Delta's no-op
+    OPTIMIZE; every other file is carried by reference with its DV
+    entries."""
+    cm = m.get("colmap")
+    if cm and cm.get("mixed", True):
+        return sel, target_files
+    rows = _file_rows(m, sel)
+    dead = _tombstones_per_file(m)
+    pcols = m.get("partition_cols") or ()
     pvals = m.partitions_for(sel) if pcols else {}
-    pick, fresh = [], []
+    groups: dict[tuple | None, list[str]] = {}
     for f in sel:
-        b = os.path.basename(f)
-        stale = not pcols <= set(pvals.get(b, ()))
-        if rows[b] < t / 2 or dead[b] > _DV_BOUND * rows[b] or stale:
-            pick.append(f)
-            fresh.append(not dead[b] and not stale)
-    if fresh == [True]:
-        return [], 0
-    live = sum(rows[b] - dead[b] for b in map(os.path.basename, pick))
-    return pick, max(1, min(target_files, round(live / t))) if t else 1
+        v = pvals.get(os.path.basename(f), {})
+        key = tuple(v[c] for c in pcols) if set(pcols) <= set(v) else None
+        groups.setdefault(key, []).append(f)
+
+    def live(fs):
+        return sum(rows[b] - dead.get(b, 0) for b in map(os.path.basename, fs))
+
+    pick, n_out = [], 1
+    for key, files in groups.items():
+        t = live(files) / target_files
+        got = [
+            f
+            for f, b in ((f, os.path.basename(f)) for f in files)
+            if key is None
+            or rows[b] < t / 2
+            or dead.get(b, 0) > _DV_BOUND * rows[b]
+        ]
+        # one clean small file alone would be written again as it is
+        if len(got) == 1 and key is not None:
+            if not dead.get(os.path.basename(got[0])):
+                continue
+        if got:
+            pick += got
+            n = round(live(got) / t) if t else 1
+            n_out = max(n_out, min(target_files, n))
+    return pick, n_out
 
 
 def _rewrite(
@@ -4358,10 +4383,7 @@ def q_table_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = ensure_partitioned_exercise(spark, sf_dir)
     m = read_manifest(root)
     stats = m.get("stats", {})
-    masked: dict[str, int] = {}
-    for d in m.get("dv_files", []):
-        for f in pq.read_table(d, columns=["_file"]).column("_file"):
-            masked[f.as_py()] = masked.get(f.as_py(), 0) + 1
+    masked = _tombstones_per_file(m)
     agg: dict[tuple, int] = {}
     for base, vals in m.get("partitions", {}).items():
         key = tuple(vals[c] for c in m["partition_cols"])

@@ -33,6 +33,14 @@ def tokens(col: F.Column = None) -> F.Column:
     return F.split(F.trim(c), " ")
 
 
+def n_tokens(col: F.Column = None) -> F.Column:
+    """``size(tokens(col))`` without the split: the separator count of
+    the trimmed text plus one.  Filter short documents on this, before
+    ``tokens()`` is projected."""
+    c = F.col("text") if col is None else col
+    return F.regexp_count(F.trim(c), F.lit(" ")) + 1
+
+
 def ngrams(toks: F.Column, n: int) -> F.Column:
     """Positional word n-grams of a token array, joined by single
     spaces: ``k - n + 1`` of them for ``k`` tokens, none below ``n``
@@ -42,9 +50,10 @@ def ngrams(toks: F.Column, n: int) -> F.Column:
 
     ``toks`` must be a column reference to a projected ``tokens()``:
     a ``tokens()`` expression placed inside the lambda is re-evaluated
-    per element, O(k²) per document.  A filter on a column built from
-    the result is pushed below that projection with the same effect;
-    filter on ``size(toks)`` instead."""
+    per element, O(k²) per document.  A filter on ``size(toks)`` or on
+    a column built from the result is pushed below that projection and
+    splits each document again; drop short documents with
+    :func:`n_tokens` on the raw text instead."""
     return F.when(
         F.size(toks) >= n,
         F.transform(

@@ -115,3 +115,45 @@ def test_dv_fraction_reads_row_counts_from_the_manifest(
     monkeypatch.setattr(pq, "read_metadata", spy)
     assert acid.dv_fraction(root) == n_dv / n_rows
     assert opened and not set(opened) & with_stats
+
+
+def test_partitioned_optimize_sizes_files_per_partition(spark, tmp_path):
+    """T is per partition: a compacted multi-partition table is a
+    no-op for both entry points, and an append's small files are
+    the only ones rewritten in their partition."""
+    root = str(tmp_path / "t")
+
+    def part(df):
+        return df.withColumn("p", F.col("k") % 4)
+
+    acid.create_table_partitioned(
+        spark, root, part(_keys(spark, 0, 1000, parts=4)), ["p"]
+    )
+    assert len(acid.read_manifest(root)["files"]) == 16
+    v = acid.optimize_table_partitioned(spark, root, {}, target_files=1)
+    assert len(acid.read_manifest(root)["files"]) == 4
+    assert acid.optimize_table_partitioned(spark, root, {}) == v
+    assert acid.optimize_table(spark, root) == v
+    assert acid.latest_version(root) == v
+
+    # two 20-row appends, both in partition p = 1
+    for lo in (5001, 6001):
+        rows = spark.range(lo, lo + 80, 4, numPartitions=1).select(
+            F.col("id").alias("k"), (F.col("id") * 3).alias("v")
+        )
+        acid.append_table_partitioned(spark, root, part(rows))
+    m1 = acid.read_manifest(root)
+    appended = set(m1["files"]) - set(acid.read_manifest(root, v)["files"])
+    assert len(appended) == 2
+    v2 = acid.optimize_table_partitioned(spark, root, {}, target_files=1)
+    m2 = acid.read_manifest(root)
+    assert v2 == m1["version"] + 1
+    assert set(m1["files"]) - set(m2["files"]) == appended
+    assert len(m2["files"]) == 5
+    model = {
+        (k, 3 * k, k % 4)
+        for k in [*range(1000), *range(5001, 5081, 4), *range(6001, 6081, 4)]
+    }
+    got = {(r.k, r.v, r.p) for r in acid.read_table(spark, root).collect()}
+    assert got == model
+    assert acid.optimize_table_partitioned(spark, root, {}) == v2

@@ -3101,7 +3101,8 @@ def optimize_table(
     target_files: int = 2,
 ) -> int:
     """OPTIMIZE (bin-packing compaction) as a committed table op on a
-    table meant to hold ``target_files`` files.  With T = live rows /
+    table meant to hold ``target_files`` files (per partition when
+    it is partitioned).  With T = the partition's live rows /
     ``target_files``, it rewrites the small-file tail (files under
     T/2 rows), the files whose tombstones pass ``_DV_BOUND`` of their
     rows and, on a partitioned table, the files that predate the
@@ -4162,7 +4163,7 @@ def optimize_table_partitioned(
     ``partition_filter`` (Delta's ``OPTIMIZE t WHERE part = v``; ``{}``
     selects every partition): within them it rewrites only what
     :func:`optimize_table`'s rule chooses (the small-file tail and the
-    files past the tombstone bound, T = their live rows /
+    files past the tombstone bound, T = each partition's live rows /
     ``target_files``), and with nothing to compact it commits nothing.
     Every other file is carried by reference with its partition
     values and stats untouched, and its deletion-vector entries keep

@@ -3681,9 +3681,10 @@ def test_chunk_sharing_and_vacuum_reclaims_chunks(spark, tmp_path):
         for d in dict.get(m1, "chunks")
     }
     # append touching ONLY partition g=0: g=1's chunk must carry by
-    # reference (identical id); g=0's tail coalesces into a new chunk
+    # reference (identical id); g=0's tail coalesces into a new chunk.
+    # Two 5-row files, so OPTIMIZE below has a small-file tail to pack
     append_table_partitioned(
-        spark, root, basep.filter("g = 0").limit(5)
+        spark, root, basep.filter("g = 0").limit(10).repartition(2)
     )
     m2 = read_manifest(root, 2)
     by_pv2 = {
@@ -3693,7 +3694,7 @@ def test_chunk_sharing_and_vacuum_reclaims_chunks(spark, tmp_path):
     assert by_pv2['{"g": 1}'] == by_pv1['{"g": 1}']
     assert by_pv2['{"g": 0}'] != by_pv1['{"g": 0}']
     ids1 = set(by_pv1.values())
-    # optimize rewrites the layout: fresh chunks
+    # optimize packs g=0's tail: g=0 gets a fresh chunk
     optimize_table(spark, root, target_files=1)
     m3 = read_manifest(root, 3)
     ids3 = {d["id"] for d in dict.get(m3, "chunks")}
